@@ -1,8 +1,7 @@
 """Distributed sketch lifecycle: build → tree-merge → probe → checkpoint.
 
-The Spark-first re-expression of the reference's single-thread lifecycle
-(/root/reference/prototype/ipfilter.py:124-143 build,
-:265-276 lookup, /root/reference/setup.py:63-84 pipeline):
+The Spark-first re-expression of the reference prototype's single-thread
+lifecycle (``ipfilter.py`` build and lookup, ``setup.py`` pipeline):
 
     build:  scan → [salted repartition] → mapInPandas(build partials)
             → sketch-row DataFrame (one row per sketch per partition)
@@ -11,6 +10,24 @@ The Spark-first re-expression of the reference's single-thread lifecycle
             ever shipping row data to the driver
     probe:  broadcast merged blob → mapInPandas vectorized probe
     ckpt:   sketch-row DataFrame ↔ parquet (BinaryType payload + lineage)
+
+One sketch-row contract, one implementation of each step. Every module
+that makes sketch rows (this one, the LPM filter build, the Misra–Gries
+and Frequent Directions partials, the streaming store) goes through:
+
+- ``_emit_partials`` — the only partial emitter: each task runs a build
+  function over its Arrow batches and the emitter stamps the sketches
+  with the task's partition id, rows seen and build wall.
+  ``_sketch_rows`` is the only constructor of ``SKETCH_ROW_SCHEMA``
+  frames, shared by the emitter and the merge;
+- ``_fold_blobs`` — the only blob fold (``from_bytes`` → ``merge``),
+  behind every executor-side merge and every driver-side collect;
+- ``_probe`` — the one probe body behind ``probe_membership`` and
+  ``probe_counts``;
+- ``_keyed_base`` — the finest level shared by ``build_keyed_sketches``
+  and ``rollup_keyed_sketches``;
+- ``SketchSpec.key()`` — the only name of a spec in build, resume and
+  collect; two specs with one key are rejected, never cross-merged.
 
 Scale notes (100 TB / 1000 executors design point):
 - partials are KB–MB regardless of input size; the merge tree moves
@@ -26,7 +43,7 @@ from __future__ import annotations
 
 import hashlib
 import time
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any, Callable
 
 import numpy as np
@@ -148,36 +165,96 @@ def salted_repartition(
     return df.repartition(num_partitions, *key_cols, salt.alias("__salt"))
 
 
+# ------------------------------------------------------------ sketch rows
+def _sketch_rows(
+    sketches: list[Sketch],
+    params_hashes: list[str],
+    partition_id: int,
+    rows_seen: int,
+    wall_ms: float,
+    params: list[str] | None = None,
+) -> pd.DataFrame:
+    """The only constructor of ``SKETCH_ROW_SCHEMA`` frames: one row per
+    sketch, all sharing one lineage. ``params`` overrides the sketches'
+    own ``params_json()`` (a merge keeps its inputs' params column)."""
+    n = len(sketches)
+    return pd.DataFrame(
+        {
+            "name": [s.NAME for s in sketches],
+            "params": params if params is not None else [s.params_json() for s in sketches],
+            "payload": [s.to_bytes() for s in sketches],
+            "n_items": [int(s.n_items) for s in sketches],
+            "partition_id": [int(partition_id)] * n,
+            "rows_seen": [int(rows_seen)] * n,
+            "wall_ms": [float(wall_ms)] * n,
+            "params_hash": list(params_hashes),
+        }
+    )
+
+
+def _emit_partials(
+    src: DataFrame,
+    build: Callable[[Iterator[pd.DataFrame]], tuple[list[Sketch], int]],
+    params_hashes: list[str],
+) -> DataFrame:
+    """The only partial emitter: ``mapInPandas`` over ``src`` where each
+    task runs ``build(batches) -> (sketches, rows_seen)`` and yields one
+    sketch row per sketch (``params_hashes`` in the same order), stamped
+    with the task's partition id and the wall of ``build``."""
+
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        t0 = time.monotonic()
+        sketches, rows_seen = build(batches)
+        wall_ms = (time.monotonic() - t0) * 1000.0
+        yield _sketch_rows(sketches, params_hashes, TaskContext.get().partitionId(), rows_seen, wall_ms)
+
+    return src.mapInPandas(emit, schema=SKETCH_ROW_SCHEMA)
+
+
+def _fold_blobs(blobs: Iterable) -> Sketch:
+    """The only blob fold: deserialize every blob and merge left to right."""
+    it = iter(blobs)
+    first = next(it, None)
+    if first is None:
+        raise ValueError("no sketch blobs to merge")
+    sk = from_bytes(bytes(first))
+    for blob in it:
+        sk = sk.merge(from_bytes(bytes(blob)))
+    return sk
+
+
 def build_partials(
     df: DataFrame,
     specs: list[SketchSpec],
     key: "F.Column | str" = None,
     value: "F.Column | str" = None,
     num_partitions: int | None = None,
-    key_is_digest: bool = False,
     skip_partitions: set[int] | None = None,
 ) -> DataFrame:
     """Per-partition sketch build.
 
-    key: column/expr whose sha256 digest feeds hash sketches (by default
-         the digest is computed JVM-side via sha2). If ``key_is_digest``,
-         the column already holds fixed-width key digests.
+    key: column/expr whose sha256 digest (computed JVM-side via sha2)
+         feeds hash sketches.
     value: numeric column feeding quantile sketches (KLL / t-digest).
 
     Returns the sketch-row DataFrame (one row per spec per partition).
+    Specs must have distinct ``key()``s: two specs that share one would
+    merge into a single wrong sketch.
     """
+    keys = [s.key() for s in specs]
+    dups = sorted({k for k in keys if keys.count(k) > 1})
+    if dups:
+        raise ValueError(
+            f"SketchSpecs share key(s) {dups}: their partials would merge into one sketch; "
+            "give each such spec a distinct tag="
+        )
     pre, post = [], []
-    needs_hash = any(s.on == "hash" for s in specs)
-    needs_value = any(s.on == "value" for s in specs)
-    if needs_hash:
-        kc = F.col(key) if isinstance(key, str) else key
-        if key_is_digest:
-            pre.append(kc.alias(DIGEST_COL))
-            post.append(F.col(DIGEST_COL))
-        else:
-            pre.append(_hashable(df, kc).alias("__rawkey"))
-            post.append(sha256_digest(F.col("__rawkey")).alias(DIGEST_COL))
-    if needs_value:
+    if any(s.on == "hash" for s in specs):
+        pre.append(_hashable(df, key).alias("__rawkey"))
+        post.append(sha256_digest(F.col("__rawkey")).alias(DIGEST_COL))
+    if any(s.on == "value" for s in specs):
         vc = F.col(value) if isinstance(value, str) else value
         pre.append(vc.cast("double").alias(VALUE_COL))
         post.append(F.col(VALUE_COL))
@@ -221,13 +298,10 @@ def build_partials(
         # digest + exchange are recomputed (they define the partition ids)
         proj = proj.where(~F.spark_partition_id().isin([int(p) for p in skip_partitions]))
 
-    spec_list = [(s.sketch, s.params, s.on, _mask_names[i], s._ph()) for i, s in enumerate(specs)]
+    spec_list = [(s.sketch, s.params, s.on, _mask_names[i]) for i, s in enumerate(specs)]
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        t0 = time.monotonic()
-        sketches = [make_sketch(name, **params) for name, params, _, _, _ in spec_list]
+    def build(batches: Iterator[pd.DataFrame]) -> tuple[list[Sketch], int]:
+        sketches = [make_sketch(name, **params) for name, params, _, _ in spec_list]
         rows_seen = 0
         for batch in batches:
             rows_seen += len(batch)
@@ -235,7 +309,7 @@ def build_partials(
             if DIGEST_COL in batch.columns and len(batch):
                 h64 = fnv1a64(digests_to_matrix(batch[DIGEST_COL]))
             vals = batch[VALUE_COL].to_numpy() if VALUE_COL in batch.columns else None
-            for sk, (_, _, on, mcol, _) in zip(sketches, spec_list):
+            for sk, (_, _, on, mcol) in zip(sketches, spec_list):
                 m = None
                 if mcol is not None and len(batch):
                     m = batch[mcol].to_numpy().astype(bool)
@@ -243,41 +317,20 @@ def build_partials(
                     sk.update_hashes(h64 if m is None else h64[m])
                 elif on == "value" and vals is not None:
                     sk.update_values(vals if m is None else vals[m])
-        pid = TaskContext.get().partitionId()
-        wall = (time.monotonic() - t0) * 1000.0
-        out = pd.DataFrame(
-            {
-                "name": [s.NAME for s in sketches],
-                "params": [s.params_json() for s in sketches],
-                "payload": [s.to_bytes() for s in sketches],
-                "n_items": [s.n_items for s in sketches],
-                "partition_id": [pid] * len(sketches),
-                "rows_seen": [rows_seen] * len(sketches),
-                "wall_ms": [wall] * len(sketches),
-                "params_hash": [ph for _, _, _, _, ph in spec_list],
-            }
-        )
-        yield out
+        return sketches, rows_seen
 
-    return proj.mapInPandas(build, schema=SKETCH_ROW_SCHEMA)
+    return _emit_partials(proj, build, [s._ph() for s in specs])
 
 
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    sk = from_bytes(pdf.payload.iloc[0])
-    for blob in pdf.payload.iloc[1:]:
-        sk = sk.merge(from_bytes(blob))
     first = pdf.iloc[0]
-    return pd.DataFrame(
-        {
-            "name": [first["name"]],
-            "params": [first["params"]],
-            "payload": [sk.to_bytes()],
-            "n_items": [int(sk.n_items)],
-            "partition_id": [int(pdf.partition_id.min())],
-            "rows_seen": [int(pdf.rows_seen.sum())],
-            "wall_ms": [float(pdf.wall_ms.sum())],
-            "params_hash": [first["params_hash"]],
-        }
+    return _sketch_rows(
+        [_fold_blobs(pdf.payload)],
+        [first["params_hash"]],
+        pdf.partition_id.min(),
+        pdf.rows_seen.sum(),
+        pdf.wall_ms.sum(),
+        params=[first["params"]],
     )
 
 
@@ -317,13 +370,12 @@ def tree_merge(
 
 
 def collect_sketches(merged: DataFrame) -> dict[str, Sketch]:
-    """Driver-side: {name:params_hash → Sketch} from a merged sketch DF."""
-    out: dict[str, Sketch] = {}
+    """Driver-side: {name:params_hash → Sketch} from a merged sketch DF.
+    The keys are ``SketchSpec.key()``s."""
+    blobs: dict[str, list] = {}
     for row in merged.collect():
-        sk = from_bytes(bytes(row.payload))
-        key = f"{row.name}:{row.params_hash}"
-        out[key] = sk.merge(out[key]) if key in out else sk
-    return out
+        blobs.setdefault(f"{row.name}:{row.params_hash}", []).append(row.payload)
+    return {k: _fold_blobs(v) for k, v in blobs.items()}
 
 
 def build_and_merge(
@@ -332,7 +384,6 @@ def build_and_merge(
     key=None,
     value=None,
     num_partitions: int | None = None,
-    key_is_digest: bool = False,
     num_partials: int | None = None,
 ) -> dict[str, Sketch]:
     """``num_partials`` sizes the merge tree when the build rides the
@@ -348,12 +399,62 @@ def build_and_merge(
             num_partials = len(df.inputFiles()) or None
         except Exception:
             num_partials = None
-    partials = build_partials(df, specs, key=key, value=value, num_partitions=num_partitions, key_is_digest=key_is_digest)
-    merged = tree_merge(partials, num_partials=num_partials or num_partitions)
-    sketches = collect_sketches(merged)
-    # map back to spec order (spec.key() == "name:params_hash[:tag]",
-    # exactly the collect_sketches key)
+    partials = build_partials(df, specs, key=key, value=value, num_partitions=num_partitions)
+    sketches = collect_sketches(tree_merge(partials, num_partials=num_partials or num_partitions))
     return {spec.key(): sketches[spec.key()] for spec in specs}
+
+
+# ------------------------------------------------------------------ keyed
+def _keyed_schema(group_cols: list[str]) -> StructType:
+    return StructType(
+        [StructField(c, StringType(), True) for c in group_cols]
+        + [StructField("payload", BinaryType(), False), StructField("n_items", LongType(), False)]
+    )
+
+
+def _keyed_row(pdf: pd.DataFrame, group_cols: list[str], sk: Sketch) -> pd.DataFrame:
+    out = {c: [pdf[c].iloc[0]] for c in group_cols}
+    out["payload"] = [sk.to_bytes()]
+    out["n_items"] = [int(sk.n_items)]
+    return pd.DataFrame(out)
+
+
+def _keyed_merge(group_cols: list[str]) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    return lambda pdf: _keyed_row(pdf, group_cols, _fold_blobs(pdf.payload))
+
+
+def _keyed_base(
+    df: DataFrame, spec: SketchSpec, groups: dict[str, str], key, value, salt_buckets: int
+) -> DataFrame:
+    """The finest keyed level, shared by ``build_keyed_sketches`` and
+    ``rollup_keyed_sketches``: project the group columns (output name →
+    source column, cast to string), the key digest or the value, and a
+    salt hashed from every input column; build one sketch per (group,
+    salt), then merge per group. Returns (<groups>, payload, n_items),
+    not persisted."""
+    names = list(groups)
+    cols = [F.col(src).cast("string").alias(n) for n, src in groups.items()]
+    if spec.on == "hash":
+        cols.append(sha256_digest(_hashable(df, key)).alias(DIGEST_COL))
+    else:
+        vc = F.col(value) if isinstance(value, str) else value
+        cols.append(vc.cast("double").alias(VALUE_COL))
+    salt = (F.xxhash64(*[F.col(c) for c in df.columns]) % salt_buckets + salt_buckets) % salt_buckets
+    proj = df.select(*cols, salt.alias("__salt"))
+    name, params, on = spec.sketch, spec.params, spec.on
+
+    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        sk = make_sketch(name, **params)
+        if on == "hash":
+            if len(pdf):
+                sk.update_hashes(fnv1a64(digests_to_matrix(pdf[DIGEST_COL])))
+        else:
+            sk.update_values(pdf[VALUE_COL].to_numpy())
+        return _keyed_row(pdf, names, sk)
+
+    schema = _keyed_schema(names)
+    partials = proj.groupBy(*names, "__salt").applyInPandas(build_group, schema=schema)
+    return partials.groupBy(*names).applyInPandas(_keyed_merge(names), schema=schema)
 
 
 def build_keyed_sketches(
@@ -376,48 +477,7 @@ def build_keyed_sketches(
     Returns (group string, payload binary, n_items long); decode with
     ``sketches.from_bytes(payload)``.
     """
-    cols = [F.col(group_col).cast("string").alias("__grp")]
-    if spec.on == "hash":
-        kc = F.col(key) if isinstance(key, str) else key
-        cols.append(sha256_digest(_hashable(df, kc)).alias(DIGEST_COL))
-    else:
-        vc = F.col(value) if isinstance(value, str) else value
-        cols.append(vc.cast("double").alias(VALUE_COL))
-    salt = (F.xxhash64(*[F.col(c) for c in df.columns]) % salt_buckets + salt_buckets) % salt_buckets
-    proj = df.select(*cols, salt.alias("__salt"))
-    name, params, on = spec.sketch, spec.params, spec.on
-
-    part_schema = StructType(
-        [
-            StructField("__grp", StringType(), False),
-            StructField("payload", BinaryType(), False),
-            StructField("n_items", LongType(), False),
-        ]
-    )
-
-    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = make_sketch(name, **params)
-        if on == "hash":
-            if len(pdf):
-                sk.update_hashes(fnv1a64(digests_to_matrix(pdf[DIGEST_COL])))
-        else:
-            sk.update_values(pdf[VALUE_COL].to_numpy())
-        return pd.DataFrame({"__grp": [pdf["__grp"].iloc[0]], "payload": [sk.to_bytes()], "n_items": [int(sk.n_items)]})
-
-    partials = proj.groupBy("__grp", "__salt").applyInPandas(
-        lambda pdf: build_group(pdf.drop(columns="__salt")), schema=part_schema
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = from_bytes(pdf.payload.iloc[0])
-        for blob in pdf.payload.iloc[1:]:
-            sk = sk.merge(from_bytes(blob))
-        return pd.DataFrame({"__grp": [pdf["__grp"].iloc[0]], "payload": [sk.to_bytes()], "n_items": [int(sk.n_items)]})
-
-    return (
-        partials.groupBy("__grp").applyInPandas(merge_group, schema=part_schema)
-        .withColumnRenamed("__grp", "group")
-    )
+    return _keyed_base(df, spec, {"group": group_col}, key, value, salt_buckets)
 
 
 def build_with_deletions(
@@ -443,11 +503,10 @@ def build_with_deletions(
 
     Deletions must be keys actually inserted (standard cuckoo/CBF
     contract); a never-inserted delete raises inside its shard task."""
-    kc = F.col(key) if isinstance(key, str) else key
-    proj_i = inserts.select(sha256_digest(_hashable(inserts, kc)).alias(DIGEST_COL)).withColumn(
+    proj_i = inserts.select(sha256_digest(_hashable(inserts, key)).alias(DIGEST_COL)).withColumn(
         "__op", F.lit(1)
     )
-    proj_d = deletes.select(sha256_digest(_hashable(deletes, kc)).alias(DIGEST_COL)).withColumn(
+    proj_d = deletes.select(sha256_digest(_hashable(deletes, key)).alias(DIGEST_COL)).withColumn(
         "__op", F.lit(-1)
     )
     u = proj_i.unionByName(proj_d).withColumn(
@@ -470,11 +529,7 @@ def build_with_deletions(
         return pd.DataFrame({"shard": [int(pdf["__shard"].iloc[0])], "payload": [sk.to_bytes()]})
 
     rows = u.groupBy("__shard").applyInPandas(build_shard, schema=schema).collect()
-    rows.sort(key=lambda r: r.shard)
-    merged = from_bytes(rows[0].payload)
-    for r in rows[1:]:
-        merged = merged.merge(from_bytes(r.payload))
-    return merged
+    return _fold_blobs(r.payload for r in sorted(rows, key=lambda r: r.shard))
 
 
 def rollup_keyed_sketches(
@@ -506,60 +561,11 @@ def rollup_keyed_sketches(
     """
     if not hierarchy:
         raise ValueError("hierarchy must name at least one grouping column")
-    cols = [F.col(c).cast("string").alias(c) for c in hierarchy]
-    if spec.on == "hash":
-        kc = F.col(key) if isinstance(key, str) else key
-        cols.append(sha256_digest(_hashable(df, kc)).alias(DIGEST_COL))
-    else:
-        vc = F.col(value) if isinstance(value, str) else value
-        cols.append(vc.cast("double").alias(VALUE_COL))
-    salt = (F.xxhash64(*[F.col(c) for c in df.columns]) % salt_buckets + salt_buckets) % salt_buckets
-    proj = df.select(*cols, salt.alias("__salt"))
-    name, params, on = spec.sketch, spec.params, spec.on
-
-    def _schema(group_cols: list[str]) -> StructType:
-        return StructType(
-            [StructField(c, StringType(), True) for c in group_cols]
-            + [
-                StructField("payload", BinaryType(), False),
-                StructField("n_items", LongType(), False),
-            ]
-        )
-
-    def _build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = make_sketch(name, **params)
-        if on == "hash":
-            if len(pdf):
-                sk.update_hashes(fnv1a64(digests_to_matrix(pdf[DIGEST_COL])))
-        else:
-            sk.update_values(pdf[VALUE_COL].to_numpy())
-        out = {c: [pdf[c].iloc[0]] for c in hierarchy}
-        out["payload"] = [sk.to_bytes()]
-        out["n_items"] = [int(sk.n_items)]
-        return pd.DataFrame(out)
-
-    def _merge_fn(group_cols: list[str]):
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            sk = from_bytes(pdf.payload.iloc[0])
-            for blob in pdf.payload.iloc[1:]:
-                sk = sk.merge(from_bytes(blob))
-            out = {c: [pdf[c].iloc[0]] for c in group_cols}
-            out["payload"] = [sk.to_bytes()]
-            out["n_items"] = [int(sk.n_items)]
-            return pd.DataFrame(out)
-
-        return merge_group
-
-    partials = proj.groupBy(*hierarchy, "__salt").applyInPandas(
-        lambda pdf: _build_group(pdf), schema=_schema(hierarchy)
-    )
     # The levels form a pyramid sharing one base subtree; each level is
     # persisted and forced so the input is scanned exactly once and every
     # coarser level reads the KB-scale in-memory blobs of the level below
     # (a lazy union would re-execute the base scan per branch).
-    level = partials.groupBy(*hierarchy).applyInPandas(
-        _merge_fn(hierarchy), schema=_schema(hierarchy)
-    )
+    level = _keyed_base(df, spec, {c: c for c in hierarchy}, key, value, salt_buckets)
     level.persist().count()
     persisted = [level]
 
@@ -573,14 +579,12 @@ def rollup_keyed_sketches(
     for i in range(len(hierarchy) - 1, -1, -1):
         keep = hierarchy[:i]
         if keep:
-            level = level.groupBy(*keep).applyInPandas(_merge_fn(keep), schema=_schema(keep))
+            level = level.groupBy(*keep).applyInPandas(_keyed_merge(keep), schema=_keyed_schema(keep))
         else:
             level = (
                 level.withColumn("__one", F.lit(1))
                 .groupBy("__one")
-                .applyInPandas(
-                    lambda pdf: _merge_fn([])(pdf.drop(columns="__one")), schema=_schema([])
-                )
+                .applyInPandas(_keyed_merge([]), schema=_keyed_schema([]))
             )
         level.persist().count()
         persisted.append(level)
@@ -596,74 +600,47 @@ def rollup_keyed_sketches(
 
 
 # --------------------------------------------------------------------- probe
-def probe_membership(
-    df: DataFrame,
-    key,
-    sketch: Sketch,
-    out_col: str = "bloom_hit",
-    key_is_digest: bool = False,
-    extra_cols: list[str] | None = None,
-) -> DataFrame:
-    """Vectorized membership probe: broadcast the merged blob, probe each
-    Arrow batch with one gather. Keeps all original columns."""
-    spark = df.sparkSession
-    blob_bc = spark.sparkContext.broadcast(sketch.to_bytes())
-    kc = F.col(key) if isinstance(key, str) else key
-    dcol = (kc if key_is_digest else sha256_digest(_hashable(df, kc))).alias(DIGEST_COL)
-    src = df.withColumn(DIGEST_COL, dcol)
+def _probe(df: DataFrame, key, sketch: Sketch, out_col: str, dtype, query: Callable) -> DataFrame:
+    """The one probe body: broadcast the merged blob, digest the key
+    JVM-side, and add ``out_col`` = ``query(sketch)(h64)`` as ``dtype``
+    (bool or int64) with one gather per Arrow batch. Keeps all original
+    columns; no keys reach the driver."""
+    blob_bc = df.sparkSession.sparkContext.broadcast(sketch.to_bytes())
+    src = df.withColumn(DIGEST_COL, sha256_digest(_hashable(df, key)).alias(DIGEST_COL))
     keep_fields = [f for f in src.schema.fields if f.name != DIGEST_COL]
-    out_schema = StructType(keep_fields + [StructField(out_col, BooleanType(), True)])
+    out_type = BooleanType() if dtype is bool else LongType()
+    out_schema = StructType(keep_fields + [StructField(out_col, out_type, True)])
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = from_bytes(blob_bc.value)
+        answer = query(from_bytes(blob_bc.value))
         for batch in batches:
             if len(batch):
-                h64 = fnv1a64(digests_to_matrix(batch[DIGEST_COL]))
-                hit = sk.contains_hashes(h64)
+                got = np.asarray(answer(fnv1a64(digests_to_matrix(batch[DIGEST_COL]))), dtype=dtype)
             else:
-                hit = np.zeros(0, dtype=bool)
+                got = np.zeros(0, dtype=dtype)
             res = batch.drop(columns=[DIGEST_COL])
-            res[out_col] = hit
+            res[out_col] = got
             yield res
 
     return src.mapInPandas(probe, schema=out_schema)
 
 
-def probe_counts(
-    df: DataFrame,
-    key,
-    sketch: Sketch,
-    out_col: str = "est_count",
-    key_is_digest: bool = False,
-) -> DataFrame:
+def probe_membership(df: DataFrame, key, sketch: Sketch, out_col: str = "bloom_hit") -> DataFrame:
+    """Vectorized membership probe: broadcast the merged blob, probe each
+    Arrow batch with one gather. Keeps all original columns."""
+    return _probe(df, key, sketch, out_col, bool, lambda sk: sk.contains_hashes)
+
+
+def probe_counts(df: DataFrame, key, sketch: Sketch, out_col: str = "est_count") -> DataFrame:
     """Vectorized count probe: like ``probe_membership`` but emits the
     sketch's per-key count estimate (CBF ``min_count`` / CMS
     ``query_hashes``) — one broadcast blob, one gather per Arrow batch,
     no keys to the driver."""
     if not (hasattr(sketch, "min_count") or hasattr(sketch, "query_hashes")):
         raise TypeError(f"{type(sketch).__name__} has no count query (min_count/query_hashes)")
-    spark = df.sparkSession
-    blob_bc = spark.sparkContext.broadcast(sketch.to_bytes())
-    kc = F.col(key) if isinstance(key, str) else key
-    dcol = (kc if key_is_digest else sha256_digest(_hashable(df, kc))).alias(DIGEST_COL)
-    src = df.withColumn(DIGEST_COL, dcol)
-    keep_fields = [f for f in src.schema.fields if f.name != DIGEST_COL]
-    out_schema = StructType(keep_fields + [StructField(out_col, LongType(), True)])
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = from_bytes(blob_bc.value)
-        counter = getattr(sk, "min_count", None) or getattr(sk, "query_hashes")
-        for batch in batches:
-            if len(batch):
-                h64 = fnv1a64(digests_to_matrix(batch[DIGEST_COL]))
-                est = np.asarray(counter(h64), dtype=np.int64)
-            else:
-                est = np.zeros(0, dtype=np.int64)
-            res = batch.drop(columns=[DIGEST_COL])
-            res[out_col] = est
-            yield res
-
-    return src.mapInPandas(probe, schema=out_schema)
+    return _probe(
+        df, key, sketch, out_col, np.int64, lambda sk: getattr(sk, "min_count", None) or sk.query_hashes
+    )
 
 
 # ---------------------------------------------------------------- checkpoint
@@ -687,11 +664,11 @@ def resume_or_build(
     files, same num_partitions, same engine version — the exchange that
     defines row→partition placement is part of the contract, so don't
     resume a checkpoint across engine upgrades). A partition counts as
-    DONE only if the
-    checkpoint holds a partial for EVERY requested (sketch, params_hash)
-    — resuming with a changed/extended spec set rebuilds every partition
-    that is missing any of the new specs (round-1 collapsed the done-set
-    to partition ids alone, so a new spec silently never built — ADVICE).
+    DONE only if the checkpoint holds a partial for EVERY requested
+    ``SketchSpec.key()`` — resuming with a changed/extended spec set
+    rebuilds every partition that is missing any of the new specs
+    (round-1 collapsed the done-set to partition ids alone, so a new spec
+    silently never built — ADVICE).
 
     What resume skips: the python-side kernel work and the checkpoint
     write for done partitions. The scan + digest + exchange re-run (they
@@ -700,12 +677,12 @@ def resume_or_build(
     The merge reads only checkpoint rows matching the requested specs, so
     stale rows from other spec sets in the same path are ignored.
     """
-    spec_keys = {(s.sketch, _params_hash(s.params)) for s in specs}
+    spec_keys = {s.key() for s in specs}
     try:
         existing = spark.read.parquet(ckpt_path)
         seen: dict[int, set] = {}
         for r in existing.select("name", "params_hash", "partition_id").distinct().collect():
-            seen.setdefault(int(r.partition_id), set()).add((r.name, r.params_hash))
+            seen.setdefault(int(r.partition_id), set()).add(f"{r.name}:{r.params_hash}")
         done_pids = {pid for pid, have in seen.items() if spec_keys <= have}
     except Exception:
         existing, done_pids = None, set()
@@ -721,7 +698,6 @@ def resume_or_build(
             build_partials(df, specs, key=key, value=value, num_partitions=num_partitions), ckpt_path
         )
     partials = spark.read.parquet(ckpt_path)
-    want = F.concat_ws(":", "name", "params_hash").isin([f"{n}:{h}" for n, h in sorted(spec_keys)])
-    merged = tree_merge(partials.where(want))
-    sketches = collect_sketches(merged)
-    return {spec.key(): sketches[f"{spec.sketch}:{_params_hash(spec.params)}"] for spec in specs}
+    want = F.concat_ws(":", "name", "params_hash").isin(sorted(spec_keys))
+    sketches = collect_sketches(tree_merge(partials.where(want)))
+    return {spec.key(): sketches[spec.key()] for spec in specs}

@@ -4,10 +4,14 @@ Two surfaces expose the same mergeable kernels
 (``/root/reference/prototype/bloomfilter.py`` etc., re-expressed in
 ``ip_filter_spark.sketches``):
 
-- the ENGINE path (``engine.build_partials`` → ``tree_merge``):
-  mapInPandas partials + applyInPandas hierarchical merge. This is the
-  scale path — partials are combined BEFORE any shuffle, so merge
-  traffic is O(partitions · blob) no matter how many rows.
+- the ENGINE path (``engine.build_partials`` → ``tree_merge``): one
+  mapInPandas partial per partition, emitted by the engine's single
+  partial emitter (``engine._emit_partials``), then an applyInPandas
+  hierarchical merge. This is the scale path — rows fold into one
+  partial per partition before the merge shuffle, so merge traffic is
+  O(partitions · blob) no matter how many rows. Every blob merge there
+  and in ``sketch_merge_agg`` below is the engine's one fold
+  (``engine._fold_blobs``), so both surfaces merge identically.
 - THIS module: ``pandas_udf`` GROUPED_AGG functions registerable for
   SQL — ``SELECT lang, hll_estimate(hll_agg(digest)) FROM t GROUP BY
   lang``. Spark feeds each group's column to the UDF as Arrow batches
@@ -19,10 +23,10 @@ Two surfaces expose the same mergeable kernels
   first, then merge blobs per key — the skew-safe two-level shape as
   two GROUP BYs (see ``queries.sql_udaf_users_by_type``).
 
-All UDFs take the DIGEST_W-byte truncated sha256 digest column (``sha256_digest(col)`` /
-256))`` — the per-row invariant), not raw values, so the hash pipeline
-is identical to the engine path and blobs from either surface merge
-interchangeably.
+All UDFs take the DIGEST_W-byte truncated sha256 digest column
+(``engine.sha256_digest(col)`` — the per-row invariant), not raw
+values, so the hash pipeline is identical to the engine path and blobs
+from either surface merge interchangeably.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from ip_filter_spark.engine import _fold_blobs
 from ip_filter_spark.sketches import from_bytes, make_sketch
 from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64
 
@@ -81,10 +86,7 @@ def sketch_merge_agg():
         blobs = blobs.dropna()
         if not len(blobs):
             return None
-        sk = from_bytes(bytes(blobs.iloc[0]))
-        for b in blobs.iloc[1:]:
-            sk = sk.merge(from_bytes(bytes(b)))
-        return sk.to_bytes()
+        return _fold_blobs(blobs).to_bytes()
 
     return merge
 

@@ -426,35 +426,14 @@ class PathLPM:
             # cluster, nothing byte-merged serially on the driver
             # (round-1 collected every blob and looped; fine at 539k
             # routes, a driver wall at 100x that — VERDICT #4)
-            from ip_filter_spark.engine import SKETCH_ROW_SCHEMA, tree_merge
-            from ip_filter_spark.sketches import from_bytes
+            from ip_filter_spark.engine import _emit_partials, _fold_blobs, tree_merge
 
-            inserts = inserts_plan.repartition(num_partitions)
-
-            def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                from pyspark import TaskContext
-
+            def build_filter(batches: Iterator[pd.DataFrame]) -> tuple[list[BloomFilter], int]:
                 bf = BloomFilter(**bf_params)
-                rows_seen = 0
-                for b in batches:
-                    rows_seen += _apply_insert_rows(bf, b)
-                yield pd.DataFrame(
-                    {
-                        "name": [bf.NAME],
-                        "params": [bf.params_json()],
-                        "payload": [bf.to_bytes()],
-                        "n_items": [int(bf.n_items)],
-                        "partition_id": [TaskContext.get().partitionId()],
-                        "rows_seen": [rows_seen],
-                        "wall_ms": [0.0],
-                        "params_hash": ["lpm_filter"],
-                    }
-                )
+                return [bf], sum(_apply_insert_rows(bf, b) for b in batches)
 
-            partials = inserts.mapInPandas(build_partials, schema=SKETCH_ROW_SCHEMA)
-            merged = tree_merge(partials, num_partials=num_partitions).collect()
-            assert len(merged) == 1
-            bf = from_bytes(bytes(merged[0].payload))
+            partials = _emit_partials(inserts_plan.repartition(num_partitions), build_filter, ["lpm_filter"])
+            bf = _fold_blobs(r.payload for r in tree_merge(partials, num_partials=num_partitions).collect())
 
         # FIB key hashes do come to the driver: 8 B/route — 6 MB at 750k
         # routes, ~400 MB at the 50M-route design bound; the confirm set must live

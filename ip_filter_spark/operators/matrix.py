@@ -9,10 +9,10 @@ ell=16, dim=64), exactly like the scalar sketches."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ip_filter_spark.engine import _emit_partials, _fold_blobs, _params_hash, tree_merge
 from ip_filter_spark.sketches.frequent_directions import FrequentDirections
 
 
@@ -25,46 +25,24 @@ def fd_partials(
 ) -> DataFrame:
     """Per-partition Frequent Directions summaries of an array<float>
     column as standard sketch rows (mergeable with engine.tree_merge)."""
-    from ip_filter_spark.engine import SKETCH_ROW_SCHEMA
-
     src = df.select(F.col(vec_col).cast("array<double>").alias("v"))
     if num_partitions:
         src = src.repartition(num_partitions)
     ell_i, dim_i = int(ell), int(dim)
 
-    def partials(batches):
-        from pyspark import TaskContext
-
+    def build(batches):
         sk = FrequentDirections(ell=ell_i, dim=dim_i)
         rows = 0
         for b in batches:
             rows += len(b)
             if len(b):
                 sk.update_vectors(np.array(b["v"].tolist(), dtype=np.float64))
-        from ip_filter_spark.engine import _params_hash
+        return [sk], rows
 
-        yield pd.DataFrame(
-            {
-                "name": [sk.NAME],
-                "params": [sk.params_json()],
-                "payload": [sk.to_bytes()],
-                "n_items": [int(sk.n_items)],
-                "partition_id": [TaskContext.get().partitionId()],
-                "rows_seen": [rows],
-                "wall_ms": [0.0],
-                "params_hash": [_params_hash(sk._params())],
-            }
-        )
-
-    return src.mapInPandas(partials, schema=SKETCH_ROW_SCHEMA)
+    return _emit_partials(src, build, [_params_hash(FrequentDirections(ell=ell_i, dim=dim_i)._params())])
 
 
 def fd_sketch(df: DataFrame, vec_col: str, ell: int = 16, dim: int = 64) -> FrequentDirections:
     """Distributed FD build: partials per partition, associative
     tree-merge, one ~16 KB blob to the driver."""
-    from ip_filter_spark.engine import tree_merge
-    from ip_filter_spark.sketches import from_bytes
-
-    merged = tree_merge(fd_partials(df, vec_col, ell=ell, dim=dim))
-    row = merged.collect()[0]
-    return from_bytes(bytes(row.payload))
+    return _fold_blobs(r.payload for r in tree_merge(fd_partials(df, vec_col, ell=ell, dim=dim)).collect())

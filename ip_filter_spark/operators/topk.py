@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ip_filter_spark.engine import SketchSpec, build_and_merge
+from ip_filter_spark.engine import SketchSpec, _emit_partials, _fold_blobs, _params_hash, build_and_merge, tree_merge
 from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64
 
 
@@ -106,9 +106,6 @@ def mg_partials(df: DataFrame, key_col: str, capacity: int = 64, num_partitions:
     (mapInPandas, numpy counter math) as standard sketch rows — the
     building block for both batch (`mg_heavy_hitters`) and streaming
     (`streaming.sketch_stream.stream_heavy_hitters`) heavy hitters."""
-    import pandas as pd
-
-    from ip_filter_spark.engine import SKETCH_ROW_SCHEMA, _params_hash
     from ip_filter_spark.sketches.misra_gries import MisraGries
 
     src = df.select(F.col(key_col).cast("string").alias("k"))
@@ -121,29 +118,16 @@ def mg_partials(df: DataFrame, key_col: str, capacity: int = 64, num_partitions:
     # executor's MisraGries.merge assert (ADVICE r2)
     params_hash = _params_hash(MisraGries(cap)._params())
 
-    def partials(batches):
-        from pyspark import TaskContext
-
+    def build(batches):
         sk = MisraGries(cap)
         rows = 0
         for b in batches:
             rows += len(b)
             if len(b):
                 sk.update_keys(b["k"].to_numpy())
-        yield pd.DataFrame(
-            {
-                "name": [sk.NAME],
-                "params": [sk.params_json()],
-                "payload": [sk.to_bytes()],
-                "n_items": [int(sk.n_items)],
-                "partition_id": [TaskContext.get().partitionId()],
-                "rows_seen": [rows],
-                "wall_ms": [0.0],
-                "params_hash": [params_hash],
-            }
-        )
+        return [sk], rows
 
-    return src.mapInPandas(partials, schema=SKETCH_ROW_SCHEMA)
+    return _emit_partials(src, build, [params_hash])
 
 
 def mg_bounds_verdict(df: DataFrame, key_col: str, sk, n_total: int) -> DataFrame:
@@ -191,11 +175,5 @@ def mg_heavy_hitters(df: DataFrame, key_col: str, capacity: int = 64, num_partit
 
     Returns the merged ``MisraGries`` sketch (``.items()`` / ``.topk()``).
     """
-    from ip_filter_spark.engine import tree_merge
-    from ip_filter_spark.sketches import from_bytes
-
     merged = tree_merge(mg_partials(df, key_col, capacity, num_partitions), num_partials=num_partitions).collect()
-    out = from_bytes(bytes(merged[0].payload))
-    for row in merged[1:]:
-        out = out.merge(from_bytes(bytes(row.payload)))
-    return out
+    return _fold_blobs(r.payload for r in merged)

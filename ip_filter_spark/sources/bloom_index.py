@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ip_filter_spark.engine import _fold_blobs
 from ip_filter_spark.sketches import BloomFilter, from_bytes
 from ip_filter_spark.sketches.hashing import DIGEST_W, digests_to_matrix, fnv1a64
 
@@ -153,8 +154,4 @@ def merge_index_blobs(blobs: list[bytes]) -> bytes:
     its inputs' blobs (Bloom union is exact for membership), no data
     rescan. All blobs written by one ``write_bloom_index`` share (m, k),
     which is what makes this legal; geometry mismatch raises."""
-    assert blobs, "nothing to merge"
-    out = from_bytes(bytes(blobs[0]))
-    for b in blobs[1:]:
-        out.merge(from_bytes(bytes(b)))
-    return out.to_bytes()
+    return _fold_blobs(blobs).to_bytes()

@@ -54,7 +54,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ip_filter_spark.engine import SketchSpec, build_partials, collect_sketches, tree_merge
+from ip_filter_spark.engine import SketchSpec, _fold_blobs, build_partials, collect_sketches, tree_merge
 from ip_filter_spark.sketches.base import Sketch
 
 _COVERS = "_covers.json"
@@ -142,9 +142,7 @@ def merged_sketches_from_store(spark: SparkSession, store_dir: str, specs: list[
     partials = _read_store(spark, store_dir).drop("batch_id", "stream")
     merged = tree_merge(partials)
     got = collect_sketches(merged)
-    from ip_filter_spark.engine import _params_hash
-
-    return {s.key(): got[f"{s.sketch}:{_params_hash(s.params)}"] for s in specs}
+    return {s.key(): got[s.key()] for s in specs}
 
 
 def windowed_event_counts(
@@ -211,13 +209,8 @@ def stream_heavy_hitters(
 def merged_heavy_hitters(spark: SparkSession, store_dir: str):
     """Current global Misra–Gries summary = merge over all live
     partials (associative, so read order is irrelevant to the bound)."""
-    from ip_filter_spark.sketches import from_bytes
-
     merged = tree_merge(_read_store(spark, store_dir).drop("batch_id", "stream")).collect()
-    out = from_bytes(bytes(merged[0].payload))
-    for row in merged[1:]:
-        out = out.merge(from_bytes(bytes(row.payload)))
-    return out
+    return _fold_blobs(r.payload for r in merged)
 
 
 def compact_store(spark: SparkSession, store_dir: str) -> int:

@@ -12,6 +12,7 @@ from ip_filter_spark.engine import (
     build_and_merge,
     build_partials,
     checkpoint_partials,
+    probe_counts,
     probe_membership,
     resume_or_build,
     salted_repartition,
@@ -78,6 +79,16 @@ def test_probe_membership(spark, corpus):
     absent = spark.range(2000).select(F.concat(F.lit("absent-"), F.col("id").cast("string")).alias("content"))
     fp = probe_membership(absent, "content", bf).filter(F.col("bloom_hit")).count()
     assert fp <= 5
+    # the count probe shares the probe body: a CMS never undercounts a
+    # present key, and over absent keys its mean estimate stays within eps*N
+    cms_spec = SketchSpec("cms", {"eps": 1e-3, "delta": 1e-3})
+    cms = build_and_merge(corpus, [cms_spec], key="content")[cms_spec.key()]
+    exact = corpus.groupBy("content").agg(F.count("*").alias("n"))
+    counted = probe_counts(exact, "content", cms)
+    assert counted.count() == exact.count()
+    assert counted.filter(F.col("est_count") < F.col("n")).count() == 0
+    mean_absent = probe_counts(absent, "content", cms).agg(F.mean("est_count")).first()[0]
+    assert mean_absent <= cms.error_bound()
 
 
 def test_tree_merge_multilevel(spark, corpus):
@@ -113,12 +124,29 @@ def test_resume_with_new_spec_builds_it(spark, corpus, tmp_path):
     ckpt = str(tmp_path / "ckpt2")
     specs_a = [SketchSpec("hll", {"p": 12})]
     resume_or_build(spark, corpus, specs_a, ckpt, key="content")
-    specs_b = [SketchSpec("hll", {"p": 12}), SketchSpec("bloom", {"fpp": 1e-3, "n": 10_000})]
+    specs_b = [
+        SketchSpec("hll", {"p": 12}),
+        SketchSpec("bloom", {"fpp": 1e-3, "n": 10_000}),
+        SketchSpec("hll", {"p": 12}, tag="t"),
+    ]
     out = resume_or_build(spark, corpus, specs_b, ckpt, key="content")
     bf = out[specs_b[1].key()]
     assert bf.n_items == 5000  # the new spec actually saw every row
+    # a tagged spec is named by its key() in resume as in build
+    assert out[specs_b[2].key()].n_items == 5000
     # and the original spec still resolves
     assert out[specs_b[0].key()].estimate() > 0
+
+
+def test_duplicate_spec_keys_rejected(spark):
+    """Two specs with one key() would merge their partials into one
+    wrong sketch; the build refuses them and a tag= separates them."""
+    df = spark.range(1000)
+    with pytest.raises(ValueError, match="tag="):
+        build_partials(df, [SketchSpec("hll", {"p": 12}, where="id % 2 = 0"), SketchSpec("hll", {"p": 12})], key="id")
+    specs = [SketchSpec("hll", {"p": 12}, where="id % 2 = 0", tag="even"), SketchSpec("hll", {"p": 12})]
+    got = build_and_merge(df, specs, key="id")
+    assert [got[s.key()].n_items for s in specs] == [500, 1000]
 
 
 def test_salted_repartition_balances_skew(spark, corpus):
