@@ -189,3 +189,90 @@ def test_exact_repair_fixes_forced_fib_collision(spark):
         .first()
     )
     assert repaired_g.lpm_depth == 1 and repaired_g.lpm_prefix == "a"
+
+
+def _persisted_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_failed_build_releases_route_cache(spark):
+    """An empty route table raises ValueError, and the route table the
+    build cached is released on that exit too."""
+    before = _persisted_ids(spark)
+    empty = spark.createDataFrame([], "prefix string, depth int")
+    with pytest.raises(ValueError, match="empty"):
+        PathLPM.build(empty, num_partitions=2)
+    assert _persisted_ids(spark) <= before
+
+
+def test_fib_bound_is_a_value_error(spark, monkeypatch):
+    """The FIB design bound is a ValueError (not an ``assert``, which
+    ``python -O`` strips), raised before the insert pass and leaving
+    nothing persisted."""
+    from ip_filter_spark.operators import lpm
+
+    monkeypatch.setattr(lpm, "MAX_FIB_ROUTES", 2)
+    before = _persisted_ids(spark)
+    routes = spark.createDataFrame([("a", 1), ("a/b", 2), ("x", 1)], "prefix string, depth int")
+    with pytest.raises(ValueError, match="shard the route table per depth-1 prefix"):
+        PathLPM.build(routes, num_partitions=2)
+    assert _persisted_ids(spark) <= before
+
+
+# nested IPv4 table: BMPs at /8, /12, /16, /24 and /25, and routes with none
+NESTED_CIDRS = [
+    "10.0.0.0/8", "10.1.0.0/16", "10.1.2.0/24", "10.1.2.128/25", "10.1.2.129/32",
+    "10.2.0.0/16", "10.1.3.0/24", "172.16.0.0/12", "172.16.5.0/24", "172.31.255.0/28",
+    "192.168.0.0/16", "192.168.1.0/24", "192.168.1.64/26", "8.8.8.0/24", "1.0.0.0/22", "203.0.113.0/24",
+]
+# sha256(to_bytes()) of the engines built from NESTED_CIDRS and
+# FIXTURE_ROUTES, pinned when the BMP came from a self-join of the route
+# table: the FIB-read BMP must plant exactly the same bits
+GOLDEN_V4_SHA = "c3a53403dd4804fcf9c0fab4ea2a4be121275f429c5a2652780b5d5fa96d2fa0"
+GOLDEN_PATH_SHA = "e11fa98f454838a83eea612d79efdccf291db3749be1baa3bc27aa74f48b088b"
+
+
+@pytest.mark.parametrize("branch", ["local", "distributed", "routes_fit"])
+def test_build_golden_bytes(spark, branch):
+    """Both build branches reproduce the pinned bytes. ``routes_fit``
+    sets the insert threshold to the route count: the routes fit under
+    it but their inserts (markers, pointers) do not, so the distributed
+    branch runs."""
+    import hashlib
+
+    from ip_filter_spark.operators.cidr import build_ip4_lpm
+
+    def threshold(n_routes):
+        return {"local": 1_000_000, "distributed": 0, "routes_fit": n_routes}[branch]
+
+    cidrs = spark.createDataFrame([(c,) for c in NESTED_CIDRS], "cidr string")
+    v4 = build_ip4_lpm(cidrs, num_partitions=3, local_build_max_inserts=threshold(len(NESTED_CIDRS)))
+    assert hashlib.sha256(v4.to_bytes()).hexdigest() == GOLDEN_V4_SHA
+    paths = spark.createDataFrame(FIXTURE_ROUTES, "prefix string, depth int")
+    path = PathLPM.build(paths, num_partitions=3, local_build_max_inserts=threshold(len(FIXTURE_ROUTES)))
+    assert hashlib.sha256(path.to_bytes()).hexdigest() == GOLDEN_PATH_SHA
+
+
+def test_nested_v4_triple_agreement(spark):
+    """guided ≡ linear ≡ exact_lpm on the nested golden table, over
+    addresses inside every route (its first, last and middle addresses)
+    plus uniform ones."""
+    from ip_filter_spark.operators.cidr import build_ip4_lpm, cidr4_route_table, ip4_trunc, lookup_ip4
+
+    ips = set(np.random.default_rng(5).integers(0, 2**32, 200).tolist())
+    for c in NESTED_CIDRS:
+        addr, plen = c.split("/")
+        base = int.from_bytes(bytes(int(x) for x in addr.split(".")), "big")
+        span = 1 << (32 - int(plen))
+        ips |= {base, base + span // 2, base + span - 1, base + span}
+    cidrs = spark.createDataFrame([(c,) for c in NESTED_CIDRS], "cidr string")
+    traffic = spark.createDataFrame([(ip,) for ip in sorted(ips)], "ip long")
+    eng = build_ip4_lpm(cidrs, num_partitions=2)
+    exact = {
+        r.ip: r.lpm_depth
+        for r in exact_lpm(traffic, cidr4_route_table(cidrs), path_col="ip", trunc=ip4_trunc).collect()
+    }
+    assert len(set(exact.values())) >= 8  # answers at many depths, misses included
+    for mode in ("guided", "linear"):
+        got = {r.ip: r.lpm_depth for r in lookup_ip4(eng, traffic, mode=mode).collect()}
+        assert got == exact, mode
