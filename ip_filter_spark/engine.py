@@ -61,6 +61,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ip_filter_spark.lifetime import cut, pinned
 from ip_filter_spark.sketches import from_bytes, make_sketch
 from ip_filter_spark.sketches.base import Sketch
 from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64
@@ -562,12 +563,9 @@ def rollup_keyed_sketches(
     if not hierarchy:
         raise ValueError("hierarchy must name at least one grouping column")
     # The levels form a pyramid sharing one base subtree; each level is
-    # persisted and forced so the input is scanned exactly once and every
+    # pinned and forced so the input is scanned exactly once and every
     # coarser level reads the KB-scale in-memory blobs of the level below
     # (a lazy union would re-execute the base scan per branch).
-    level = _keyed_base(df, spec, {c: c for c in hierarchy}, key, value, salt_buckets)
-    level.persist().count()
-    persisted = [level]
 
     def _widen(lvl: DataFrame, group_cols: list[str]) -> DataFrame:
         sel = [F.lit(len(group_cols)).alias("level")]
@@ -575,28 +573,23 @@ def rollup_keyed_sketches(
             sel.append(F.col(c) if c in group_cols else F.lit(None).cast("string").alias(c))
         return lvl.select(*sel, "payload", "n_items")
 
-    out = _widen(level, hierarchy)
-    for i in range(len(hierarchy) - 1, -1, -1):
-        keep = hierarchy[:i]
-        if keep:
-            level = level.groupBy(*keep).applyInPandas(_keyed_merge(keep), schema=_keyed_schema(keep))
-        else:
-            level = (
-                level.withColumn("__one", F.lit(1))
-                .groupBy("__one")
-                .applyInPandas(_keyed_merge([]), schema=_keyed_schema([]))
-            )
-        level.persist().count()
-        persisted.append(level)
-        out = out.unionByName(_widen(level, keep))
-    # materialize the widened pyramid once, then release every cached
-    # level — repeated rollup calls in a long-lived session must not
-    # accumulate executor-memory cache (the persisted levels exist only
-    # to keep the pyramid single-scan while it is being built)
-    out = out.localCheckpoint()
-    for lvl in persisted:
-        lvl.unpersist()
-    return out
+    with pinned() as pin:
+        level = pin(_keyed_base(df, spec, {c: c for c in hierarchy}, key, value, salt_buckets))
+        level.count()
+        out = _widen(level, hierarchy)
+        for i in range(len(hierarchy) - 1, -1, -1):
+            keep = hierarchy[:i]
+            if keep:
+                level = level.groupBy(*keep).applyInPandas(_keyed_merge(keep), schema=_keyed_schema(keep))
+            else:
+                level = (
+                    level.withColumn("__one", F.lit(1))
+                    .groupBy("__one")
+                    .applyInPandas(_keyed_merge([]), schema=_keyed_schema([]))
+                )
+            pin(level).count()
+            out = out.unionByName(_widen(level, keep))
+        return cut(out)
 
 
 # --------------------------------------------------------------------- probe

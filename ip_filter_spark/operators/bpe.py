@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ip_filter_spark.lifetime import cut
+
 
 def merge_pairs_flat(flat: np.ndarray, bounds: np.ndarray, a: int, b: int, new_id: int):
     """Apply ONE merge (a, b) → new_id over a flat int32 symbol buffer.
@@ -128,15 +130,13 @@ def bpe_train_batched(
     the word table (O(distinct words), map-side combined), a ≤max(4B,64)
     row head collect, and one mapInPandas pass applying the whole batch
     with the numpy kernel. The word table stays partitioned in place;
-    each round ends in an eager localCheckpoint, so the plan depth stays
+    each round ends in an eager lineage cut, so the plan depth stays
     O(1) no matter how large ``k`` grows."""
     head_limit = max(4 * batch, 64)
     # regexp_extract_all, not split('(?!^)'): Spark split keeps the
     # trailing empty match, which would mint phantom ('x', '') pairs
     chars = F.expr(f"regexp_extract_all({word_col}, '(.)', 1)")
-    tbl = words.select(F.col(count_col).alias("wc"), chars.alias("syms")).localCheckpoint(
-        eager=True
-    )
+    tbl = cut(words.select(F.col(count_col).alias("wc"), chars.alias("syms")))
     merges: list[tuple[int, str, str, str, int]] = []
     while len(merges) < k:
         pairs = tbl.where(F.size("syms") >= 2).select(
@@ -175,9 +175,7 @@ def bpe_train_batched(
                 out_syms = apply_rules_flat(list(pdf["syms"]), rules)
                 yield pd.DataFrame({"wc": pdf["wc"].to_numpy(), "syms": out_syms})
 
-        tbl = tbl.mapInPandas(apply_batch, schema="wc bigint, syms array<string>").localCheckpoint(
-            eager=True
-        )
+        tbl = cut(tbl.mapInPandas(apply_batch, schema="wc bigint, syms array<string>"))
     return merges
 
 

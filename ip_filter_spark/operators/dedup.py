@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
 from ip_filter_spark.functions.text import tokens_expr
+from ip_filter_spark.lifetime import cut, pinned
 from ip_filter_spark.operators.joins import broadcast_pair_join
 
 
@@ -285,8 +286,9 @@ def minhash_lsh_pairs(
     agreement fraction) is replicated verbatim by the DuckDB oracle
     (queries.minhash_lsh_sql)."""
     assert num_perm % bands == 0
-    sig = minhash_signatures(df, id_col, text_col, num_perm, shingle_n, hash_fn, seed).cache()
-    return _banded_pairs(sig, num_perm, bands, threshold, max_bucket)
+    with pinned() as pin:
+        sig = pin(minhash_signatures(df, id_col, text_col, num_perm, shingle_n, hash_fn, seed))
+        return _banded_pairs(sig, num_perm, bands, threshold, max_bucket)
 
 
 def _banded_pairs(
@@ -471,10 +473,11 @@ def _banded_pairs(
     # pair with an id in ANY over-cap bucket bypasses the count filter
     # (>= 1 surviving collision suffices, exactly the old semantics) —
     # every pair the old path verified >= threshold is still verified.
-    # The slack term covers float error plus the ROUND(·, 6) window on
-    # est_jaccard. Declared gates (threshold 0.5) have min_bands <= 0 and
-    # keep the original distinct path byte-for-byte.
-    min_bands = bands - int(np.floor(n_components * (1.0 - threshold) + 1e-4))
+    # The slack covers float error plus the ROUND(·, 6) window: a pair
+    # with agree/n >= t - 5e-7 verifies, i.e. n·5e-7 more mismatches.
+    # Declared gates (threshold 0.5) have min_bands <= 0 and keep the
+    # original distinct path byte-for-byte.
+    min_bands = bands - int(np.floor(n_components * (1.0 - threshold) + 1e-4 + n_components * 5e-7))
     if min_bands <= 1:
         pairs = (
             banded.repartition("bk")
@@ -482,36 +485,36 @@ def _banded_pairs(
             .distinct()
         )
         return _verify_pairs(pairs, sig, n_components, threshold)
-    g = (
-        banded.repartition("bk")
-        .mapInArrow(pair_count_kern, schema="id_a long, id_b long, nb int")
-        .groupBy("id_a", "id_b")
-        .agg(F.sum("nb").alias("__nb"))
-        .persist()
-    )
-    capped_ids = g.where(F.col("id_b").isNull()).select("id_a").distinct()
-    cnt = g.where(F.col("id_b").isNotNull())
-    n_capped = capped_ids.count()
-    if n_capped == 0:
-        pairs = cnt.where(F.col("__nb") >= min_bands).select("id_a", "id_b")
-    elif n_capped > 4_000_000:
-        # pathological corpus: the capped-id set itself is too big to
-        # broadcast — disable the prefilter (old semantics, zero risk)
-        pairs = cnt.select("id_a", "id_b")
-    else:
-        ca = capped_ids.select(F.col("id_a").alias("id_a"), F.lit(True).alias("__ca"))
-        cb = capped_ids.select(F.col("id_a").alias("id_b"), F.lit(True).alias("__cb"))
-        pairs = (
-            cnt.join(F.broadcast(ca), "id_a", "left")
-            .join(F.broadcast(cb), "id_b", "left")
-            .where(
-                (F.col("__nb") >= min_bands)
-                | F.col("__ca").isNotNull()
-                | F.col("__cb").isNotNull()
-            )
-            .select("id_a", "id_b")
+    with pinned() as pin:
+        g = pin(
+            banded.repartition("bk")
+            .mapInArrow(pair_count_kern, schema="id_a long, id_b long, nb int")
+            .groupBy("id_a", "id_b")
+            .agg(F.sum("nb").alias("__nb"))
         )
-    return _verify_pairs(pairs, sig, n_components, threshold)
+        capped_ids = g.where(F.col("id_b").isNull()).select("id_a").distinct()
+        cnt = g.where(F.col("id_b").isNotNull())
+        n_capped = capped_ids.count()
+        if n_capped == 0:
+            pairs = cnt.where(F.col("__nb") >= min_bands).select("id_a", "id_b")
+        elif n_capped > 4_000_000:
+            # pathological corpus: the capped-id set itself is too big to
+            # broadcast — disable the prefilter (old semantics, zero risk)
+            pairs = cnt.select("id_a", "id_b")
+        else:
+            ca = capped_ids.select(F.col("id_a").alias("id_a"), F.lit(True).alias("__ca"))
+            cb = capped_ids.select(F.col("id_a").alias("id_b"), F.lit(True).alias("__cb"))
+            pairs = (
+                cnt.join(F.broadcast(ca), "id_a", "left")
+                .join(F.broadcast(cb), "id_b", "left")
+                .where(
+                    (F.col("__nb") >= min_bands)
+                    | F.col("__ca").isNotNull()
+                    | F.col("__cb").isNotNull()
+                )
+                .select("id_a", "id_b")
+            )
+        return _verify_pairs(pairs, sig, n_components, threshold)
 
 
 def _verify_pairs(
@@ -527,21 +530,10 @@ def _verify_pairs(
     two shuffled-hash joins with the PAIR side as build (KBs per task —
     the sort-merge fallback sorted candidate × signature rows twice) and
     count agreements in a numpy kernel. est_jaccard is always the JVM
-    ``ROUND(agree / n, 6)`` so both paths emit bit-identical doubles."""
+    ``ROUND(agree / n, 6)`` so both paths emit bit-identical doubles.
+    The output is cut: every banded-LSH operator ends here, so what its
+    callers pinned (signatures, bucket counts) is released at return."""
     import pyarrow as pa
-
-    pairs = pairs.cache()
-    if pairs.count() <= max_broadcast_pairs:
-        joined = broadcast_pair_join(pairs, sig, "sig", "sig_a", "sig_b")
-    else:
-        a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        b = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        # first join: shuffled-hash with the PAIR side as build (16 B/row
-        # — KB-scale hash tables per task; SMJ would sort the signature
-        # rows). second join: left to the planner — its left input
-        # already carries sig_a, so neither side is a safe in-memory
-        # build at scale.
-        joined = pairs.hint("shuffle_hash").join(a, "id_a").join(b, "id_b")
 
     # agreement counting always runs in the numpy kernel: the former
     # broadcast-path JVM ``aggregate(zip_with(...))`` is an INTERPRETED
@@ -564,12 +556,25 @@ def _verify_pairs(
             agree = (SA == SB).sum(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays([ia, ib, pa.array(agree)], names=["id_a", "id_b", "agree"])
 
-    counted = joined.mapInArrow(agree_kern, schema="id_a long, id_b long, agree int")
-    return (
-        counted.withColumn("est_jaccard", F.round(F.col("agree") / F.lit(n_components), 6))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    with pinned() as pin:
+        pairs = pin(pairs)
+        if pairs.count() <= max_broadcast_pairs:
+            joined = broadcast_pair_join(pairs, sig, "sig", "sig_a", "sig_b")
+        else:
+            a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+            b = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+            # first join: shuffled-hash with the PAIR side as build (16 B/row
+            # — KB-scale hash tables per task; SMJ would sort the signature
+            # rows). second join: left to the planner — its left input
+            # already carries sig_a, so neither side is a safe in-memory
+            # build at scale.
+            joined = pairs.hint("shuffle_hash").join(a, "id_a").join(b, "id_b")
+        counted = joined.mapInArrow(agree_kern, schema="id_a long, id_b long, agree int")
+        return cut(
+            counted.withColumn("est_jaccard", F.round(F.col("agree") / F.lit(n_components), 6))
+            .where(F.col("est_jaccard") >= threshold)
+            .select("id_a", "id_b", "est_jaccard")
+        )
 
 
 def _banded_pairs_jvm(
@@ -734,8 +739,9 @@ def oph_minhash_pairs(
     fraction; with k a power of two the fraction is exact in binary, so
     the cross-engine ROUND(…, 6) comparison is exact."""
     assert k % bands == 0
-    sig = oph_signatures(df, id_col, text_col, k, shingle_n, hash_fn).select("id", "sig").cache()
-    return _banded_pairs(sig, k, bands, threshold, max_bucket, stride=bands)
+    with pinned() as pin:
+        sig = pin(oph_signatures(df, id_col, text_col, k, shingle_n, hash_fn).select("id", "sig"))
+        return _banded_pairs(sig, k, bands, threshold, max_bucket, stride=bands)
 
 
 def _bit_mask(j: int):
@@ -818,30 +824,30 @@ def simhash_pairs(
     assert max_hamming <= 3, "4-chunk blocking guarantees recall only for hamming <= 3"
     nbits = SIMHASH_BITS[hash_fn]
     chunk_w = nbits // 4
-    sig = simhash_signatures(df, id_col, text_col, seed, hash_fn).cache()
-    chunks = F.array(
-        *[
-            F.shiftright("simhash", chunk_w * c).bitwiseAND(F.lit((1 << chunk_w) - 1).cast("long"))
-            for c in range(4)
-        ]
-    )
-    blocked = sig.select("id", "simhash", F.posexplode(chunks).alias("chunk_ix", "chunk"))
-    pairs = (
-        blocked.alias("a")
-        .join(blocked.alias("b"), on=["chunk_ix", "chunk"], how="inner")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
+    with pinned() as pin:
+        sig = pin(simhash_signatures(df, id_col, text_col, seed, hash_fn))
+        chunks = F.array(
+            *[
+                F.shiftright("simhash", chunk_w * c).bitwiseAND(F.lit((1 << chunk_w) - 1).cast("long"))
+                for c in range(4)
+            ]
         )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    return pairs
+        blocked = sig.select("id", "simhash", F.posexplode(chunks).alias("chunk_ix", "chunk"))
+        return cut(
+            blocked.alias("a")
+            .join(blocked.alias("b"), on=["chunk_ix", "chunk"], how="inner")
+            .where(F.col("a.id") < F.col("b.id"))
+            .select(
+                F.col("a.id").alias("id_a"),
+                F.col("b.id").alias("id_b"),
+                F.col("a.simhash").alias("sim_a"),
+                F.col("b.simhash").alias("sim_b"),
+            )
+            .distinct()
+            .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
+            .where(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+        )
 
 
 def ngram_jaccard_pairs(
@@ -1004,12 +1010,10 @@ def connected_components(
     the confirm round, dominates. The convergence metric rides the SAME job as the
     checkpoint materialization via ``observe`` (no separate count scan).
 
-    Fault tolerance: by default iteration state is ``localCheckpoint``ed
-    (executor-local blocks — fine single-job, lost on executor death);
-    pass ``checkpoint_dir`` to use reliable ``checkpoint`` into that
-    directory instead, which an hour-long 100-TB CC job needs to survive
-    executor loss. Returns (node, component) for every node that appears
-    in an edge; component = min node id reachable.
+    Fault tolerance: iteration state is cut (``lifetime.cut``); an
+    hour-long 100-TB CC job passes ``checkpoint_dir`` for the reliable
+    form. Returns (node, component) for every node that appears in an
+    edge; component = min node id reachable.
 
     Size-adaptive dispatch (same policy as the LPM build's local/
     distributed switch): when the symmetrized edge list has at most
@@ -1028,18 +1032,12 @@ def connected_components(
 
     assert hops_per_job >= 1
     spark = edges.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def cut_lineage(df):
-        return df.checkpoint() if checkpoint_dir else df.localCheckpoint()
-
     # r6: cut the lineage BEFORE the symmetrizing union — the union's two
     # branches referenced the un-materialized edge plan, so the whole
     # upstream pair pipeline (simhash/minhash + verify) executed twice in
     # the materializing job (guide §1.2 'don't compute things twice');
     # union over the checkpointed half reads blocks.
-    half = cut_lineage(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    half = cut(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), checkpoint_dir)
     sym = half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # right-size the iteration's parallelism to the GRAPH, not the
     # session default: near-dup edge sets are usually orders smaller
@@ -1058,7 +1056,7 @@ def connected_components(
         return spark.createDataFrame(_union_find(sym.collect()), schema)
     parts = max(1, min(sym.rdd.getNumPartitions(), n_sym // 500_000 + 1))
     if parts < sym.rdd.getNumPartitions():
-        sym = cut_lineage(sym.repartition(parts))
+        sym = cut(sym.repartition(parts), checkpoint_dir)
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
 
     def hop(lbl, carry):
@@ -1081,8 +1079,9 @@ def connected_components(
         # observe node on the way (a LAZY cut + count() would lose the
         # metric — the count action runs over the checkpointed RDD, not
         # through the observed SQL plan)
-        new_labels = cut_lineage(
-            stepped.observe(obs, F.sum((F.col("label") != F.col("old")).cast("long")).alias("changed"))
+        new_labels = cut(
+            stepped.observe(obs, F.sum((F.col("label") != F.col("old")).cast("long")).alias("changed")),
+            checkpoint_dir,
         )
         labels = new_labels.drop("old")
         changed = obs.get["changed"]
@@ -1242,7 +1241,6 @@ def query_lsh_index(
     max_bucket: int = 200,
     hash_fn: str = "sha",
     seed: int = 11,
-    cache: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (new_id, old_id, est_jaccard) between a NEW batch
     and a persisted ``build_lsh_index`` corpus — the incremental twin of
@@ -1262,50 +1260,47 @@ def query_lsh_index(
     signature width at verify time by the zip_with arity)."""
     assert num_perm % bands == 0
     r = num_perm // bands
-    new_sig = minhash_signatures(new_df, id_col, text_col, num_perm, shingle_n, hash_fn, seed)
-    if cache:
-        # two downstream uses (band keys + verify join); callers invoking
-        # this repeatedly (per micro-batch) pass cache=False — cached
-        # blocks are never auto-unpersisted and would accumulate
-        new_sig = new_sig.cache()
-    band_keys = F.array(*[band_key_expr(F.col("sig"), b, r) for b in range(bands)])
-    new_banded = new_sig.select(
-        F.col("id").alias("new_id"), F.posexplode(band_keys).alias("band", "key")
-    )
-    postings = spark.read.parquet(f"{path}/postings").where(
-        F.col("n_in_bucket") <= max_bucket
-    )
-    cands = (
-        postings.join(F.broadcast(new_banded), ["band", "key"])
-        .where(F.col("id") != F.col("new_id"))
-        .select("new_id", F.col("id").alias("old_id"))
-        .distinct()
-    )
-    old_ids = cands.select(F.col("old_id").alias("id")).distinct()
-    old_sig = spark.read.parquet(f"{path}/signatures").join(F.broadcast(old_ids), "id", "leftsemi")
-    joined = (
-        cands.join(old_sig.select(F.col("id").alias("old_id"), F.col("sig").alias("sig_old")), "old_id")
-        .join(
-            F.broadcast(new_sig.select(F.col("id").alias("new_id"), F.col("sig").alias("sig_new"))),
-            "new_id",
+    with pinned() as pin:
+        # two downstream uses: band keys + verify join
+        new_sig = pin(minhash_signatures(new_df, id_col, text_col, num_perm, shingle_n, hash_fn, seed))
+        band_keys = F.array(*[band_key_expr(F.col("sig"), b, r) for b in range(bands)])
+        new_banded = new_sig.select(
+            F.col("id").alias("new_id"), F.posexplode(band_keys).alias("band", "key")
         )
-    )
-    return (
-        joined.withColumn(
-            "est_jaccard",
-            F.round(
-                F.aggregate(
-                    F.zip_with("sig_new", "sig_old", lambda x, y: (x == y).cast("int")),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                )
-                / F.lit(num_perm),
-                6,
-            ),
+        postings = spark.read.parquet(f"{path}/postings").where(
+            F.col("n_in_bucket") <= max_bucket
         )
-        .where(F.col("est_jaccard") >= threshold)
-        .select("new_id", "old_id", "est_jaccard")
-    )
+        cands = (
+            postings.join(F.broadcast(new_banded), ["band", "key"])
+            .where(F.col("id") != F.col("new_id"))
+            .select("new_id", F.col("id").alias("old_id"))
+            .distinct()
+        )
+        old_ids = cands.select(F.col("old_id").alias("id")).distinct()
+        old_sig = spark.read.parquet(f"{path}/signatures").join(F.broadcast(old_ids), "id", "leftsemi")
+        joined = (
+            cands.join(old_sig.select(F.col("id").alias("old_id"), F.col("sig").alias("sig_old")), "old_id")
+            .join(
+                F.broadcast(new_sig.select(F.col("id").alias("new_id"), F.col("sig").alias("sig_new"))),
+                "new_id",
+            )
+        )
+        return cut(
+            joined.withColumn(
+                "est_jaccard",
+                F.round(
+                    F.aggregate(
+                        F.zip_with("sig_new", "sig_old", lambda x, y: (x == y).cast("int")),
+                        F.lit(0),
+                        lambda acc, x: acc + x,
+                    )
+                    / F.lit(num_perm),
+                    6,
+                ),
+            )
+            .where(F.col("est_jaccard") >= threshold)
+            .select("new_id", "old_id", "est_jaccard")
+        )
 
 
 def blocked_record_linkage(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ip_filter_spark.lifetime import cut, pinned
+
 MICRO = 1_000_000
 
 
@@ -58,39 +60,22 @@ def pagerank_integer(
 
     Returns DataFrame[node, rank] with rank in micro-units (BIGINT).
 
-    Execution shape: the loop-invariant DataFrames (edges, nodes,
-    out-degrees) are persisted once; each iteration's rank state is
-    EAGERLY materialized (``localCheckpoint``, or a reliable
-    ``checkpoint`` when ``checkpoint_dir`` is given — executor loss
-    mid-job replays a localCheckpoint'd lineage from nothing, so long
-    runs on real clusters want the reliable path, same trade documented
-    on ``dedup.connected_components``). Without the per-iteration cut,
-    iteration k's plan re-derives the edge list k times over and the
-    plan grows exponentially — the classic iterative-algorithm failure
-    on Catalyst. The invariants are unpersisted before returning; the
-    returned ranks are materialized and lineage-free.
+    Execution shape: the loop invariants (edges, nodes, out-degrees) are
+    pinned for the call; each iteration's rank state is cut
+    (``lifetime.cut``). Without the per-iteration cut, iteration k's
+    plan re-derives the edge list k times over and the plan grows
+    exponentially — the classic iterative-algorithm failure on Catalyst.
     """
     assert iterations >= 1 and 0 < damping_num < damping_den
     base = unit - (damping_num * unit) // damping_den
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg")).persist()
-    if checkpoint_dir is not None:
-        e.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir else df.localCheckpoint(
-            eager=True
+    with pinned() as pin:
+        e = pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+        nodes = pin(
+            e.select(F.col("src").alias("node")).union(e.select(F.col("dst").alias("node"))).distinct()
         )
-
-    ranks = nodes.select("node", F.lit(int(unit)).cast("long").alias("rank"))
-    try:
+        deg = pin(e.groupBy("src").agg(F.count("*").alias("out_deg")))
+        ranks = nodes.select("node", F.lit(int(unit)).cast("long").alias("rank"))
         for _ in range(iterations):
             shares = (
                 ranks.join(deg, ranks["node"] == deg["src"], "inner")
@@ -101,7 +86,7 @@ def pagerank_integer(
                 .groupBy("dst")
                 .agg(F.sum("share").alias("s"))
             )
-            ranks = _cut(
+            ranks = cut(
                 nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
                 .select(
                     "node",
@@ -111,12 +96,9 @@ def pagerank_integer(
                             f"({int(damping_num)} * coalesce(s, 0L)) div {int(damping_den)}"
                         )
                     ).cast("long").alias("rank"),
-                )
+                ),
+                checkpoint_dir,
             )
-    finally:
-        # ranks is materialized, so the invariants carry no live lineage
-        for df in (e, nodes, deg):
-            df.unpersist()
     return ranks
 
 
@@ -145,24 +127,16 @@ def resolve_hierarchy(
     round — no extra scan of anything edge-sized. Same eager-cut /
     reliable-checkpoint discipline as ``pagerank_integer``.
     """
-    spark = h.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir else df.localCheckpoint(
-            eager=True
-        )
-
     base = h.select(F.col(node).alias("node"), F.col(parent).alias("parent"))
-    state = _cut(
+    state = cut(
         base.select(
             "node",
             F.coalesce(F.col("parent"), F.col("node")).alias("anc"),
             F.when(F.col("parent").isNull(), F.lit(0)).otherwise(F.lit(1))
             .cast("long")
             .alias("depth"),
-        )
+        ),
+        checkpoint_dir,
     )
     roots = base.where(F.col("parent").isNull()).select(F.col("node").alias("anc"))
 
@@ -178,12 +152,13 @@ def resolve_hierarchy(
         # LEFT join: an anc with no state row (parent pointing at a node
         # the input never lists) must stay unresolved and hit the
         # RuntimeError below — an inner join would silently drop the row
-        state = _cut(
+        state = cut(
             state.join(s2, state["anc"] == s2["j_node"], "left").select(
                 "node",
                 F.coalesce("j_anc", "anc").alias("anc"),
                 (F.col("depth") + F.coalesce("j_depth", F.lit(0).cast("long"))).alias("depth"),
-            )
+            ),
+            checkpoint_dir,
         )
     else:
         raise RuntimeError(

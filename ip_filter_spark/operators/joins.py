@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ip_filter_spark.engine import SketchSpec, build_and_merge, probe_membership
+from ip_filter_spark.lifetime import cut
 
 
 def bloom_semi_join(
@@ -49,12 +50,11 @@ def bloom_semi_join(
     """
     build_key = build_key or probe_key
     # r6: the distinct-keys subplan feeds THREE consumers (the sizing
-    # count, the filter build, the exact confirm join) — persist it so
-    # the build-side scan + distinct shuffle run once instead of three
-    # times (guide §5 'caching is worth it when reused'). The persisted
-    # set is the build side's distinct keys — broadcast-side scale by
-    # the operator's own contract.
-    keys = build.select(F.col(build_key).alias("__k")).distinct().persist()
+    # count, the filter build, the exact confirm join) — cut it so the
+    # build-side scan + distinct shuffle run once (guide §5). A cut, not
+    # a pin: the returned join reads it. The set is the build side's
+    # distinct keys — broadcast-side scale by the operator's contract.
+    keys = cut(build.select(F.col(build_key).alias("__k")).distinct())
     n = expected_n if expected_n is not None else keys.count()
     spec = SketchSpec("bloom", {"fpp": fpp, "n": max(int(n), 1)})
     bf = build_and_merge(keys, [spec], key="__k")[spec.key()]
@@ -89,9 +89,8 @@ def bloom_anti_join(
     lost; the confirm removes every false positive).
     """
     build_key = build_key or probe_key
-    # persist: three consumers of the distinct-keys subplan, same as
-    # bloom_semi_join (r6)
-    keys = build.select(F.col(build_key).alias("__k")).distinct().persist()
+    # cut: three consumers, one the returned join (as bloom_semi_join)
+    keys = cut(build.select(F.col(build_key).alias("__k")).distinct())
     n = expected_n if expected_n is not None else keys.count()
     spec = SketchSpec("bloom", {"fpp": fpp, "n": max(int(n), 1)})
     bf = build_and_merge(keys, [spec], key="__k")[spec.key()]
@@ -274,13 +273,13 @@ def broadcast_pair_join(
     Guarded: an adversarial corpus can make the candidate list itself too
     big to broadcast, so count it (it is the small output of the bucket
     stage) and fall back to the shuffle form past ``max_broadcast_pairs``.
-    Cached first: the guard count would otherwise run the whole candidate
-    stage once for itself and again for the verify.
+    Cut first: the guard count would otherwise run the whole candidate
+    stage once for itself and again for the returned join.
 
     ``pairs`` must have columns (id_a, id_b); returns
     (id_a, id_b, a_alias, b_alias).
     """
-    pairs = pairs.cache()
+    pairs = cut(pairs)
     if pairs.count() <= max_broadcast_pairs:
         a_side = table.join(F.broadcast(pairs), table[id_col] == pairs["id_a"]).select(
             "id_a", "id_b", F.col(value_col).alias(a_alias)

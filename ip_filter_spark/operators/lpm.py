@@ -81,6 +81,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ip_filter_spark.lifetime import cut, pinned
 from ip_filter_spark.plans.obst import GuideTree
 from ip_filter_spark.sketches.bloom import BloomFilter
 SEP = "/"
@@ -218,10 +219,9 @@ def exact_lpm(
     depths = [r.depth for r in prefix_df.select("depth").distinct().collect()]
     # __qid feeds two join branches; monotonically_increasing_id is
     # nondeterministic under recomputation (task retry / AQE replan), so
-    # pin the ids with an eager localCheckpoint — recomputation then reads
-    # the materialized blocks instead of re-assigning ids (ADVICE r1)
-    qid = F.monotonically_increasing_id()
-    q = queries.withColumn("__qid", qid).localCheckpoint(eager=True)
+    # fix the ids with an eager cut — recomputation then reads the
+    # materialized blocks instead of re-assigning ids (ADVICE r1)
+    q = cut(queries.withColumn("__qid", F.monotonically_increasing_id()))
     cand = q.select(
         "__qid",
         F.col(path_col),
@@ -343,90 +343,90 @@ class PathLPM:
         sc = prefix_df.sparkSession.sparkContext
         # the route table is read by two actions below (the FIB collect
         # and the insert pass; by_share adds a third); its lineage
-        # typically contains a distinct() over the full corpus — cache it
+        # typically contains a distinct() over the full corpus — pin it
         # or each action re-scans the corpus (measured 7x build-time
         # difference). Released on every exit, a failed build included.
-        prefix_df = prefix_df.cache()
         fib_bc = None
-        try:
-            own_h64 = _h64_expr(F.col("prefix"), F.col("depth")).alias("h64")
-            depth = F.col("depth").cast("int").alias("depth")
-            keys = prefix_df.select(own_h64, depth).toPandas()
-            n_routes = len(keys)
-            if not n_routes:
-                raise ValueError("prefix_df is empty: cannot build an LPM filter from an empty route table")
-            if n_routes > MAX_FIB_ROUTES:
-                raise ValueError(
-                    f"FIB of {n_routes} routes exceeds the broadcastable design bound of {MAX_FIB_ROUTES}; "
-                    "shard the route table per depth-1 prefix and build one engine per shard"
-                )
-            fib = np.sort(keys["h64"].to_numpy().astype(np.int64, copy=False).view(np.uint64))
-            depths, counts = (a.tolist() for a in np.unique(keys["depth"].to_numpy(), return_counts=True))
-            cols = [own_h64, depth, *_depth_hashes(F.col("prefix"), depths, trunc)]
-            if weighting == "by_share":
-                fib_bc = sc.broadcast(fib)
-
-                def route_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                    ix2len = np.array([0] + depths)
-                    for b in batches:
-                        bmp_ix = _route_bmp(fib_bc.value, depths, b)[2]
-                        yield pd.DataFrame({"depth": b["depth"], "bmp_depth": ix2len[bmp_ix]})
-
-                bmps = prefix_df.select(*cols).mapInPandas(route_bmp, "depth int, bmp_depth int")
-                weights = cls._share_weights(bmps, depths, share_base)
-            elif weighting == "by_count":
-                weights = counts
-            else:
-                weights = [1.0] * len(depths)
-            tree = GuideTree.from_weights(depths, weights)
-            k_auto, enc_bits = cls.required_k(len(depths), tree.height())
-            k = k or k_auto
-            if num_bits is None and bits_per_route:
-                num_bits = max(1024, bits_per_route * n_routes)
-            bf_params = dict(fpp=fpp, n=n_routes, k=k, num_bits=num_bits)
-
-            # per route depth, the depth columns of its walk's right
-            # turns: where a route plants its markers and pointer bits
-            walks = [[depths.index(v) for v, turn in tree.walk(d) if turn == "R"] for d in depths]
-            walk_cols = np.full((len(depths), max(map(len, walks))), -1, dtype=np.int64)
-            for i, w in enumerate(walks):
-                walk_cols[i, : len(w)] = w
-
-            # adaptive build strategy (same idea as Spark choosing a
-            # broadcast join for a small side): the insert count is known
-            # exactly from the per-depth counts + walks (patterns <=
-            # markers), so a driver-sized build skips the distributed
-            # partials job — one toPandas + one numpy pass instead of
-            # shuffle + python stage + merge stage (measured ~4.5 s of
-            # fixed job cost at 1k routes).
-            n_inserts_max = n_routes + 2 * sum(c * len(w) for c, w in zip(counts, walks))
-            if n_inserts_max <= local_build_max_inserts:
-                bf = BloomFilter(**bf_params)
-                _insert_routes(bf, fib, depths, walk_cols, prefix_df.select(*cols).toPandas())
-            else:
-                # OR-merge the partial filters through the engine's
-                # hierarchical tree_merge — O(P * blob) bytes over the
-                # cluster, nothing byte-merged serially on the driver
-                # (VERDICT #4)
-                from ip_filter_spark.engine import _emit_partials, _fold_blobs, tree_merge
-
-                if fib_bc is None:
+        with pinned() as pin:
+            try:
+                prefix_df = pin(prefix_df)
+                own_h64 = _h64_expr(F.col("prefix"), F.col("depth")).alias("h64")
+                depth = F.col("depth").cast("int").alias("depth")
+                keys = prefix_df.select(own_h64, depth).toPandas()
+                n_routes = len(keys)
+                if not n_routes:
+                    raise ValueError("prefix_df is empty: cannot build an LPM filter from an empty route table")
+                if n_routes > MAX_FIB_ROUTES:
+                    raise ValueError(
+                        f"FIB of {n_routes} routes exceeds the broadcastable design bound of {MAX_FIB_ROUTES}; "
+                        "shard the route table per depth-1 prefix and build one engine per shard"
+                    )
+                fib = np.sort(keys["h64"].to_numpy().astype(np.int64, copy=False).view(np.uint64))
+                depths, counts = (a.tolist() for a in np.unique(keys["depth"].to_numpy(), return_counts=True))
+                cols = [own_h64, depth, *_depth_hashes(F.col("prefix"), depths, trunc)]
+                if weighting == "by_share":
                     fib_bc = sc.broadcast(fib)
 
-                def build_filter(batches: Iterator[pd.DataFrame]) -> tuple[list[BloomFilter], int]:
-                    bf = BloomFilter(**bf_params)
-                    return [bf], sum(_insert_routes(bf, fib_bc.value, depths, walk_cols, b) for b in batches)
+                    def route_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                        ix2len = np.array([0] + depths)
+                        for b in batches:
+                            bmp_ix = _route_bmp(fib_bc.value, depths, b)[2]
+                            yield pd.DataFrame({"depth": b["depth"], "bmp_depth": ix2len[bmp_ix]})
 
-                # repartition the narrow route rows, then hash: the
-                # shuffle moves (prefix, depth), not D + 1 hash columns
-                src = prefix_df.repartition(num_partitions).select(*cols)
-                partials = _emit_partials(src, build_filter, ["lpm_filter"])
-                bf = _fold_blobs(r.payload for r in tree_merge(partials, num_partials=num_partitions).collect())
-            return cls(bf, tree, depths, fib, enc_bits)
-        finally:
-            if fib_bc is not None:
-                fib_bc.destroy()
-            prefix_df.unpersist()
+                    bmps = prefix_df.select(*cols).mapInPandas(route_bmp, "depth int, bmp_depth int")
+                    weights = cls._share_weights(bmps, depths, share_base)
+                elif weighting == "by_count":
+                    weights = counts
+                else:
+                    weights = [1.0] * len(depths)
+                tree = GuideTree.from_weights(depths, weights)
+                k_auto, enc_bits = cls.required_k(len(depths), tree.height())
+                k = k or k_auto
+                if num_bits is None and bits_per_route:
+                    num_bits = max(1024, bits_per_route * n_routes)
+                bf_params = dict(fpp=fpp, n=n_routes, k=k, num_bits=num_bits)
+
+                # per route depth, the depth columns of its walk's right
+                # turns: where a route plants its markers and pointer bits
+                walks = [[depths.index(v) for v, turn in tree.walk(d) if turn == "R"] for d in depths]
+                walk_cols = np.full((len(depths), max(map(len, walks))), -1, dtype=np.int64)
+                for i, w in enumerate(walks):
+                    walk_cols[i, : len(w)] = w
+
+                # adaptive build strategy (same idea as Spark choosing a
+                # broadcast join for a small side): the insert count is known
+                # exactly from the per-depth counts + walks (patterns <=
+                # markers), so a driver-sized build skips the distributed
+                # partials job — one toPandas + one numpy pass instead of
+                # shuffle + python stage + merge stage (measured ~4.5 s of
+                # fixed job cost at 1k routes).
+                n_inserts_max = n_routes + 2 * sum(c * len(w) for c, w in zip(counts, walks))
+                if n_inserts_max <= local_build_max_inserts:
+                    bf = BloomFilter(**bf_params)
+                    _insert_routes(bf, fib, depths, walk_cols, prefix_df.select(*cols).toPandas())
+                else:
+                    # OR-merge the partial filters through the engine's
+                    # hierarchical tree_merge — O(P * blob) bytes over the
+                    # cluster, nothing byte-merged serially on the driver
+                    # (VERDICT #4)
+                    from ip_filter_spark.engine import _emit_partials, _fold_blobs, tree_merge
+
+                    if fib_bc is None:
+                        fib_bc = sc.broadcast(fib)
+
+                    def build_filter(batches: Iterator[pd.DataFrame]) -> tuple[list[BloomFilter], int]:
+                        bf = BloomFilter(**bf_params)
+                        return [bf], sum(_insert_routes(bf, fib_bc.value, depths, walk_cols, b) for b in batches)
+
+                    # repartition the narrow route rows, then hash: the
+                    # shuffle moves (prefix, depth), not D + 1 hash columns
+                    src = prefix_df.repartition(num_partitions).select(*cols)
+                    partials = _emit_partials(src, build_filter, ["lpm_filter"])
+                    bf = _fold_blobs(r.payload for r in tree_merge(partials, num_partials=num_partitions).collect())
+                return cls(bf, tree, depths, fib, enc_bits)
+            finally:
+                if fib_bc is not None:
+                    fib_bc.destroy()
 
     # --------------------------------------------------------------- helpers
     def _probe_slots(self, h64: np.ndarray, slots: np.ndarray) -> np.ndarray:
@@ -544,8 +544,8 @@ class PathLPM:
         # materialize the probe output ONCE: the three-way split below
         # references it three times (depth==0 branch, semi 'ok', anti
         # 'bad'), which re-ran the whole mapInArrow probe stage ~3x
-        # (ADVICE r5); the eager localCheckpoint pins one computation
-        out = out.localCheckpoint(eager=True)
+        # (ADVICE r5); the eager cut keeps one computation
+        out = cut(out)
         rt = F.broadcast(
             routes.select(F.col("prefix").alias("__rp"), F.col("depth").cast("int").alias("__rd"))
         )
@@ -562,7 +562,7 @@ class PathLPM:
         )
         # collision mismatches are expected EMPTY (~5 wrong rows per
         # trillion probes); skip the exact re-resolve entirely then —
-        # exact_lpm otherwise runs an unconditional localCheckpoint +
+        # exact_lpm otherwise runs an unconditional cut +
         # depth collect + join chain per call (ADVICE r5)
         if bad.isEmpty():
             return out.where(F.col("lpm_depth") == 0).unionByName(ok)

@@ -29,9 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ip_filter_spark.engine import SketchSpec, build_and_merge
+from ip_filter_spark.lifetime import pinned
 
 
 _HIST_NB = 8192  # histogram buckets per refinement level
@@ -69,6 +69,13 @@ def exact_quantiles(df: DataFrame, value_col: str, qs: list[float], num_partitio
     MEMORY_AND_DISK persist of the projected column disappears.
     Distributed selection — no single-partition sort anywhere in the
     plan (pinned by tests/test_plans.py).
+
+    Precondition: ``df``'s plan must be deterministic. The refinement
+    scans the unpinned input three or more times (stats, histogram,
+    target-bucket collect); if the row set can differ between scans
+    (``rand()``, a non-deterministic sample, a table written to
+    meanwhile) the scans can disagree and the answer is silently wrong.
+    Persist such an input before the call.
     """
     spark = df.sparkSession
     vals = df.select(F.col(value_col).cast("double").alias("value")).where(F.col("value").isNotNull())
@@ -180,8 +187,8 @@ def _exact_quantiles_ranged(
     sc = spark.sparkContext
     P = num_partitions or sc.defaultParallelism
     vals = df.select(F.col(value_col).cast("double").alias("value")).where(F.col("value").isNotNull())
-    ranged = vals.repartitionByRange(P, "value").persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned() as pin:
+        ranged = pin(vals.repartitionByRange(P, "value"))
         counts = {
             int(r.pid): int(r.cnt)
             for r in ranged.groupBy(F.spark_partition_id().alias("pid")).agg(F.count("*").alias("cnt")).collect()
@@ -231,8 +238,6 @@ def _exact_quantiles_ranged(
         pruned = ranged.where(F.spark_partition_id().isin(target_pids))
         out = pruned.mapInPandas(select, schema="q double, value double")
         rows = out.collect()
-    finally:
-        ranged.unpersist()
     return spark.createDataFrame(sorted((r.q, r.value) for r in rows), "q double, value double")
 
 
@@ -278,16 +283,15 @@ def equi_depth_histogram(
     spark = df.sparkSession
     # pid is materialized as a COLUMN before any window shuffle (it is
     # non-deterministic, which also pins it against optimizer movement),
-    # and the range layout is persisted so the offset pass and the bucket
+    # and the range layout is pinned so the offset pass and the bucket
     # pass see the same (sampled) range boundaries.
-    ranged = (
-        df.select(*order_cols)
-        .repartitionByRange(*order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
+    with pinned() as pin:
+        ranged = pin(
+            df.select(*order_cols)
+            .repartitionByRange(*order_cols)
+            .sortWithinPartitions(*order_cols)
+            .withColumn("pid", F.spark_partition_id())
+        )
         part_counts = ranged.groupBy("pid").agg(F.count("*").alias("c")).collect()
         counts = {int(r.pid): int(r.c) for r in part_counts}
         n = sum(counts.values())
@@ -318,8 +322,6 @@ def equi_depth_histogram(
             )
             .collect()
         )
-    finally:
-        ranged.unpersist()
     return spark.createDataFrame(
         sorted((int(r.bucket), int(r.cnt), r.lo, r.hi) for r in rows),
         f"bucket int, cnt bigint, lo {df.schema[value_col].dataType.simpleString()}, "

@@ -6,22 +6,10 @@ the assembled QUERIES/ORACLES registry (order preserved exactly).
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ip_filter_spark.functions.text import (
-    LANG_MARKERS,
-    MOD,
-    fingerprint_expr,
-    lang_id_expr,
-    ngrams_expr,
-    token_count_expr,
-    tokens_expr,
-)
-
+from ip_filter_spark.lifetime import pinned
 from ip_filter_spark.queries._shared import (
     _t,
 )
@@ -191,26 +179,25 @@ def bfs_hops_suppliers(spark, sf_dir):
         .select(F.col("a.l_suppkey").alias("s"), F.col("b.l_suppkey").alias("t"))
         .distinct()
     )
-    edges = edges.persist()
-    src = edges.agg(F.min("s")).first()[0]
-    dist = spark.createDataFrame([(int(src), 0)], "node long, hops int").persist()
-    frontier = dist
-    for h in (1, 2, 3):
-        nbrs = (
-            frontier.join(edges, frontier.node == edges.s)
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).cast("int").alias("hops"))
-        )
-        nbrs = nbrs.persist()
-        if nbrs.rdd.isEmpty():
-            break
-        dist = dist.union(nbrs).persist()
-        frontier = nbrs
-    out = dist.select("node", F.col("hops").cast("long").alias("hops"))
-    rows = out.collect()
-    edges.unpersist()
+    with pinned() as pin:
+        edges = pin(edges)
+        src = edges.agg(F.min("s")).first()[0]
+        dist = pin(spark.createDataFrame([(int(src), 0)], "node long, hops int"))
+        frontier = dist
+        for h in (1, 2, 3):
+            nbrs = pin(
+                frontier.join(edges, frontier.node == edges.s)
+                .select(F.col("t").alias("node"))
+                .distinct()
+                .join(dist.select("node"), "node", "left_anti")
+                .select("node", F.lit(h).cast("int").alias("hops"))
+            )
+            if nbrs.rdd.isEmpty():
+                break
+            dist = pin(dist.union(nbrs))
+            frontier = nbrs
+        out = dist.select("node", F.col("hops").cast("long").alias("hops"))
+        rows = out.collect()
     return spark.createDataFrame(rows, out.schema)
 
 

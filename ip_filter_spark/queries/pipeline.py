@@ -8,20 +8,11 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ip_filter_spark.functions.text import (
-    LANG_MARKERS,
-    MOD,
-    fingerprint_expr,
-    lang_id_expr,
-    ngrams_expr,
-    token_count_expr,
-    tokens_expr,
-)
-
+from ip_filter_spark.functions.text import ngrams_expr, token_count_expr, tokens_expr
+from ip_filter_spark.lifetime import pinned
 from ip_filter_spark.queries._shared import (
     _t,
     _dec_sum,
@@ -394,22 +385,20 @@ def reservoir_sample_events(spark, sf_dir):
 
     k, seed = 500, 42
     ev = _t(spark, sf_dir, "events")
-    w = F.abs(F.col("value")) + F.lit(1.0)
-    sample = weighted_reservoir_sample(
-        ev.withColumn("__w", w), "__w", k=k, seed=seed, id_cols=["event_id"]
-    ).select("event_id", F.col("__w").alias("w")).cache()
-    n_ret = sample.count()
-    n_events = ev.count()
-    distinct_ok = sample.select("event_id").distinct().count() == n_ret
-    from_domain = sample.join(ev, "event_id", "left_anti").count() == 0
-    # recompute the A-Res key independently and take the k-th smallest
-    u = (F.abs(F.xxhash64(F.col("event_id"), F.lit(seed))) + 1).cast("double") / F.lit(float(1 << 63))
-    keyed = ev.select((-F.log(u) / (F.abs(F.col("value")) + F.lit(1.0))).alias("key"))
-    kth = keyed.orderBy("key").limit(k).agg(F.max("key").alias("m")).first().m
-    u_s = (F.abs(F.xxhash64(F.col("event_id"), F.lit(seed))) + 1).cast("double") / F.lit(float(1 << 63))
-    max_sample_key = sample.select((-F.log(u_s) / F.col("w")).alias("key")).agg(F.max("key")).first()[0]
-    weights_pos = sample.where(F.col("w") <= 0).count() == 0
-    sample.unpersist()
+    weighted = ev.withColumn("__w", F.abs(F.col("value")) + F.lit(1.0))
+    with pinned() as pin:
+        sample = weighted_reservoir_sample(weighted, "__w", k=k, seed=seed, id_cols=["event_id"])
+        sample = pin(sample.select("event_id", F.col("__w").alias("w")))
+        n_ret = sample.count()
+        n_events = ev.count()
+        distinct_ok = sample.select("event_id").distinct().count() == n_ret
+        from_domain = sample.join(ev, "event_id", "left_anti").count() == 0
+        # recompute the A-Res key independently and take the k-th smallest
+        u = (F.abs(F.xxhash64(F.col("event_id"), F.lit(seed))) + 1).cast("double") / F.lit(float(1 << 63))
+        keyed = ev.select((-F.log(u) / (F.abs(F.col("value")) + F.lit(1.0))).alias("key"))
+        kth = keyed.orderBy("key").limit(k).agg(F.max("key").alias("m")).first().m
+        max_sample_key = sample.select((-F.log(u) / F.col("w")).alias("key")).agg(F.max("key")).first()[0]
+        weights_pos = sample.where(F.col("w") <= 0).count() == 0
     return spark.createDataFrame(
         [
             (

@@ -798,7 +798,7 @@ def stream_incremental_near_dup(spark, sf_dir):
         def handle(batch_df, batch_id):
             pairs = query_lsh_index(
                 spark, idx, batch_df, "doc_id", "text",
-                num_perm=64, bands=16, threshold=0.5, cache=False,
+                num_perm=64, bands=16, threshold=0.5,
             )
             pairs.write.mode("overwrite").parquet(f"{work}/store/batch={batch_id}")
 

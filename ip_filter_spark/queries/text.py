@@ -6,10 +6,9 @@ the assembled QUERIES/ORACLES registry (order preserved exactly).
 
 from __future__ import annotations
 
-import os
+from contextlib import ExitStack
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ip_filter_spark.functions.text import (
@@ -21,7 +20,7 @@ from ip_filter_spark.functions.text import (
     token_count_expr,
     tokens_expr,
 )
-
+from ip_filter_spark.lifetime import pinned
 from ip_filter_spark.queries._shared import (
     _t,
     _SQL_TOKENS,
@@ -445,40 +444,39 @@ def _bpe_learn(spark, sf_dir, k=None):
     test pins batched ≡ sequential) and as the oracle-replicable gate."""
     k = k if k is not None else _BPE_K
     words = _bpe_words(spark, sf_dir)
-    tbl = words.select("wc", F.regexp_replace("w", "(.)", "<$1>").alias("seq")).persist()
     merges = []
-    retired = []  # parent kept cached until the CHILD has materialized off it
-    for it in range(1, k + 1):
-        syms = tbl.select("wc", F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)").alias("syms"))
-        pairs = syms.where(F.expr("size(syms) >= 2")).select(
-            "wc",
-            F.explode(
-                F.expr("transform(sequence(0, size(syms) - 2), i -> concat(syms[i], ' ', syms[i + 1]))")
-            ).alias("pair"),
+    # at most two pinned tables live: tbl, and its parent until the first
+    # action on tbl has materialized it off the parent
+    with ExitStack() as parent, ExitStack() as live:
+        tbl = live.enter_context(pinned())(
+            words.select("wc", F.regexp_replace("w", "(.)", "<$1>").alias("seq"))
         )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("wc").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("pair"))
-            .first()
-        )
-        # the action above materialized tbl's cache — its parent can go now
-        for h in retired:
-            h.unpersist()
-        retired = [tbl]
-        if top is None:
-            raise ValueError(
-                f"corpus too small for {k} BPE merges: no word has "
-                f">= 2 symbols left at iteration {it}"
+        for it in range(1, k + 1):
+            syms = tbl.select("wc", F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)").alias("syms"))
+            pairs = syms.where(F.expr("size(syms) >= 2")).select(
+                "wc",
+                F.explode(
+                    F.expr("transform(sequence(0, size(syms) - 2), i -> concat(syms[i], ' ', syms[i + 1]))")
+                ).alias("pair"),
             )
-        a, b = top.pair.split(" ")
-        merges.append((it, a, b, a + b, int(top.cnt)))
-        tbl = tbl.select(
-            "wc", F.replace(F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>")).alias("seq")
-        ).persist()
-    tbl.unpersist()
-    for h in retired:
-        h.unpersist()
+            top = (
+                pairs.groupBy("pair")
+                .agg(F.sum("wc").alias("cnt"))
+                .orderBy(F.desc("cnt"), F.asc("pair"))
+                .first()
+            )
+            parent.close()  # the action above materialized tbl's cache
+            if top is None:
+                raise ValueError(
+                    f"corpus too small for {k} BPE merges: no word has "
+                    f">= 2 symbols left at iteration {it}"
+                )
+            a, b = top.pair.split(" ")
+            merges.append((it, a, b, a + b, int(top.cnt)))
+            parent.push(live.pop_all())
+            tbl = live.enter_context(pinned())(
+                tbl.select("wc", F.replace(F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>")).alias("seq"))
+            )
     return merges
 
 

@@ -205,6 +205,17 @@ def test_failed_build_releases_route_cache(spark):
     assert _persisted_ids(spark) <= before
 
 
+def test_build_keeps_caller_cache(spark):
+    """A route table the caller cached stays cached: the build pins only
+    what it persisted itself, and releases only that."""
+    routes = spark.createDataFrame(FIXTURE_ROUTES + [("cached/only", 2)], "prefix string, depth int").cache()
+    routes.count()
+    level = routes.storageLevel
+    PathLPM.build(routes, num_partitions=2)
+    assert routes.storageLevel == level
+    routes.unpersist()
+
+
 def test_fib_bound_is_a_value_error(spark, monkeypatch):
     """The FIB design bound is a ValueError (not an ``assert``, which
     ``python -O`` strips), raised before the insert pass and leaving

@@ -3,6 +3,7 @@ text analysis, top-k, quantiles, multimodal plumbing — each against an
 exact oracle computed with Spark built-ins or numpy."""
 
 import hashlib
+import re
 
 import numpy as np
 import pytest
@@ -1080,11 +1081,12 @@ def test_balanced_sample_matches_naive_window(spark):
     assert got == want and len(got) == 21
 
 
-def test_incremental_lsh_index_finds_planted_near_dup(spark, tmp_path):
+def test_incremental_lsh_index_finds_planted_near_dup(spark, tmp_path, executed_plans):
     """A new doc nearly identical to an indexed doc is found; an
     unrelated new doc pairs with nothing; the bucket-cap predicate is
     pushed into the postings scan (no corpus-side bucket-count job at
-    query time)."""
+    query time). The query runs inside the call (its output is cut), so
+    the plans checked are those of the executions the call ran."""
     from ip_filter_spark.operators.dedup import build_lsh_index, query_lsh_index
 
     base = "spark merge window table scan filter join group sort hash value batch"
@@ -1098,14 +1100,16 @@ def test_incremental_lsh_index_finds_planted_near_dup(spark, tmp_path):
     )
     idx = str(tmp_path / "lsh")
     build_lsh_index(old, "doc_id", "text", idx, num_perm=64, bands=16)
-    res = query_lsh_index(
-        spark, idx, new, "doc_id", "text", num_perm=64, bands=16, threshold=0.5
+    out = []
+    plans = executed_plans(
+        lambda: out.extend(
+            query_lsh_index(spark, idx, new, "doc_id", "text", num_perm=64, bands=16, threshold=0.5).collect()
+        )
     )
-    rows = res.collect()
-    assert {(r.new_id, r.old_id) for r in rows} == {(100, 1)}
-    assert all(r.est_jaccard >= 0.5 for r in rows)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "n_in_bucket" in plan.split("Scan parquet")[1][:2000]  # filter reaches the scan
+    assert {(r.new_id, r.old_id) for r in out} == {(100, 1)}
+    assert all(r.est_jaccard >= 0.5 for r in out)
+    # the bucket-cap filter reaches the postings scan
+    assert any(re.search(r"PushedFilters: \[[^\]]*n_in_bucket", p) for p in plans), plans
 
 
 def test_new_operators_handle_empty_and_degenerate_inputs(spark, tmp_path):
@@ -2071,6 +2075,24 @@ def test_minband_prefilter_matches_jvm_tail(spark, docs):
         }
         assert kern == jvm, (threshold, max_bucket, len(kern), len(jvm))
     sig.unpersist()
+
+
+def test_minband_prefilter_keeps_rounding_boundary_pair(spark):
+    """The min-band slack covers the ROUND(agree/n, 6) window (n·5e-7),
+    not just float error: two 256-component signatures differing in 2
+    components, in different bands of 128, have agree/n = 0.9921875,
+    which ROUND(·, 6) lifts to the threshold 0.992188 — the verify keeps
+    that pair, so the prefilter must not drop it (it needs 126 band
+    collisions; a fixed 1e-4 slack demanded 127)."""
+    from ip_filter_spark.operators.dedup import _banded_pairs, _banded_pairs_jvm
+
+    a = list(range(1, 257))
+    b = list(a)
+    b[0], b[2] = 10_001, 10_003  # components 0 and 2: bands 0 and 1
+    sig = spark.createDataFrame([(1, a), (2, b)], "id long, sig array<int>")
+    got = [tuple(r) for r in _banded_pairs(sig, 256, 128, 0.992188, 200).collect()]
+    assert got == [(1, 2, 0.992188)], got
+    assert [tuple(r) for r in _banded_pairs_jvm(sig, 256, 128, 0.992188, 200).collect()] == got
 
 
 def test_exact_quantiles_histogram_refinement_paths(spark, monkeypatch):

@@ -132,21 +132,23 @@ def test_cidr_probe_plan_shuffle_free(spark):
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan or "MapInArrow" in plan, plan
 
 
-def test_minhash_verify_joins_broadcast_pairs(spark, sf_dir):
+def test_minhash_verify_joins_broadcast_pairs(spark, sf_dir, executed_plans):
     """The LSH verify stage must broadcast the candidate pair list into
     the cached signature table, never sort-merge-shuffle the corpus-sized
     sig side (round-3 fix: AQE cannot convert joins against an
-    InMemoryRelation, so the operator chooses the shape explicitly)."""
+    InMemoryRelation, so the operator chooses the shape explicitly).
+    The verify runs inside the call (its output is cut), so the plans
+    checked are those of the executions the call ran."""
     from ip_filter_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").alias("id"), F.col("text")
     )
-    out = minhash_lsh_pairs(docs, "id", "text", num_perm=16, bands=4, threshold=0.5)
-    out.count()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    plans = executed_plans(
+        lambda: minhash_lsh_pairs(docs, "id", "text", num_perm=16, bands=4, threshold=0.5).count()
+    )
+    assert any("BroadcastHashJoin" in p for p in plans), plans
+    assert not any("SortMergeJoin" in p for p in plans), plans
 
 
 def test_salted_agg_two_phase_shape_and_equivalence(spark, sf_dir):
