@@ -4,12 +4,22 @@ domain (/root/reference/prototype/utils.py:53-56 encodes routes as
 {'v4': 32, 'v6': 128}``).
 
 The PathLPM kernel is domain-agnostic (it hashes (prefix, depth) pairs),
-so the adapter is a pure column-expression mapping: an address becomes a
-per-bit '/'-joined path (``"1/0/0/..."``, 32 or 128 components) and a
-CIDR route becomes the first ``prefix_len`` components at depth
-``prefix_len``. Longest-prefix-match over bit-paths IS longest-prefix-
-match over CIDRs. Everything stays JVM-side (split/transform/floor —
-whole-stage codegen); no Python touches a row.
+so each key domain is a column-expression mapping plus a truncation:
+
+- bit paths: an address becomes a per-bit '/'-joined path
+  (``"1/0/0/..."``, 32 or 128 components) and a CIDR route the first
+  ``prefix_len`` components at depth ``prefix_len``. Longest-prefix-
+  match over bit-paths IS longest-prefix-match over CIDRs;
+- numeric IPv4 (``ip4_trunc``): the key is the address as a long and a
+  route is its masked address as a decimal string;
+- masked-hex IPv6 (``ip6_trunc``): the key is 32 lowercase hex chars.
+
+Parsing, masking and formatting run JVM-side (whole-stage codegen).
+Per-depth key hashing runs JVM-side too, except for numeric IPv4: there
+the LPM kernels receive the address as one int64 column and hash it in
+the Python worker with ``ip4_depth_hashes``, bit-identical to the JVM's
+``xxhash64(depth, ip4_trunc(key, depth))`` (see operators/lpm.py "Key
+encoding").
 
 Golden behavior pinned from the reference's test suite
 (/root/reference/prototype/tests.py_bak:309-349): 1.0.0.0 → /24 when
@@ -19,6 +29,7 @@ the 5-address traffic batch finds exactly 3.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,17 +105,142 @@ def parse_cidr4(cidr_col):
 
 
 def ip4_trunc(key_col, depth):
-    """The IPv4 LPM domain's truncation: decimal-string key → masked
-    decimal-string key at ``depth`` (int or Column). Plugs into
-    ``PathLPM.build(trunc=...)`` / ``lookup(trunc=...)`` so v4 keys are
-    three integer ops per depth instead of a 32-component bit-string
-    build + split + rejoin (~10x less JVM work per probed row).
-    pow(2, 32-d) is exact in double through 2^31, so the mask arithmetic
-    is exact for all v4 depths."""
+    """The IPv4 LPM domain's truncation: key → masked decimal-string key
+    at ``depth`` (int or Column). Plugs into ``PathLPM.build(trunc=...)``
+    / ``lookup(trunc=...)`` so v4 keys are three integer ops per depth
+    instead of a 32-component bit-string build + split + rejoin. The
+    key may be a long, int or decimal-string column: the first step is
+    ``cast(key as long)``. pow(2, 32-d) is exact in double through
+    2^31, so the mask arithmetic is exact for all v4 depths.
+
+    This is the JVM definition of the domain: ``exact_lpm`` and the
+    ``lpm_prefix`` column use it, and ``ip4_depth_hashes`` reproduces
+    its key hash bit for bit, so the LPM kernels hash v4 keys in the
+    Python worker instead of receiving one hash column per depth."""
     d = depth if hasattr(depth, "cast") else F.lit(depth)
     ip = key_col.cast("long")
     p2 = F.pow(F.lit(2.0), (F.lit(V4_BITS) - d).cast("double")).cast("long")
     return (ip - (ip % p2)).cast("long").cast("string")
+
+
+# ---------------------------------------------------------------------------
+# The v4 key hash in numpy: Spark's xxhash64(int d, string decimal(ip & mask_d))
+# ---------------------------------------------------------------------------
+_U = np.uint64
+# XXH64 primes, as in Spark's org.apache.spark.sql.catalyst.expressions.XXH64
+_P1, _P2, _P3, _P4, _P5 = (
+    _U(p) for p in (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+)
+_SPARK_XXHASH_SEED = 42
+_POW10 = np.array([10**i for i in range(10)], dtype=np.uint64)
+# v < 10^4 → its 4 zero-padded ASCII digits, the most significant in the
+# lowest byte: the little-endian int XXH64 reads from those 4 bytes
+_ASCII4 = sum(((np.arange(10_000) // 10 ** (3 - i)) % 10 + 0x30) << (8 * i) for i in range(4)).astype(np.uint64)
+# rows x depths per block of ip4_depth_hashes: 128 KB temporaries stay in
+# L2 and under numpy's 256 KB temporary-elision threshold, whose check is
+# a costly stack walk on every larger binary op
+_HASH_BLOCK = 1 << 14
+
+
+def _rotl(x, r: int):
+    return (x << _U(r)) | (x >> _U(64 - r))
+
+
+def _fmix(h):
+    h = (h ^ (h >> _U(33))) * _P2
+    h = (h ^ (h >> _U(29))) * _P3
+    return h ^ (h >> _U(32))
+
+
+def _xxh64_depth_seeds(depths) -> np.ndarray:
+    """``xxhash64(int d)`` per depth: XXH64's 4-byte int hash of d under
+    Spark's seed, which is the seed the key string is then hashed with
+    (Spark folds ``xxhash64(a, b)`` left to right) and the whole hash of
+    a null key."""
+    d = np.asarray(depths, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        h = (_U(_SPARK_XXHASH_SEED) + _P5 + _U(4)) ^ (d * _P1)
+        return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _xxh64_digits8_10(t, seed):
+    """XXH64 of the decimal strings of 10^7 <= t < 10^10 (8-10 digits):
+    one 8-byte word (the first 8 digits), then 0-2 single bytes. Both
+    byte steps are computed for every cell and kept by a 0/1 multiply,
+    which numpy runs faster than a data-dependent ``where``."""
+    ge9 = (t >= _POW10[8]).astype(np.uint64)
+    ge10 = (t >= _POW10[9]).astype(np.uint64)
+    t10 = t // _U(10)
+    t100 = t10 // _U(10)
+    first8 = t + ge9 * (t10 - t) + ge10 * (t100 - t10)  # t // 10^(len - 8)
+    hi = first8 // _U(10_000)
+    word = _ASCII4[hi] | (_ASCII4[first8 - hi * _U(10_000)] << _U(32))
+    h = seed + _P5 + _U(8) + ge9 + ge10
+    h ^= _rotl(word * _P2, 31) * _P1
+    h = _rotl(h, 27) * _P1 + _P4
+    for digit, present in ((t10 - t100 * _U(10), ge10), (t - t10 * _U(10), ge9)):
+        step = _rotl(h ^ ((digit + _U(0x30)) * _P5), 11) * _P1
+        h ^= (h ^ step) * present
+    return _fmix(h)
+
+
+def _xxh64_digits1_7(t, seed):
+    """XXH64 of the decimal strings of t < 10^7 (1-7 digits): for 4+
+    digits one 4-byte int (the first 4), then 0-3 single bytes. The
+    rare complement of ``_xxh64_digits8_10``: only a truncation with a
+    zero first octet is this short."""
+    n = np.searchsorted(_POW10[1:], t, side="right") + 1  # digit count
+    h = seed + _P5 + n.astype(np.uint64)
+    four = n >= 4
+    first4 = t[four] // _POW10[n[four] - 4]
+    h[four] = _rotl(h[four] ^ (_ASCII4[first4] * _P1), 23) * _P2 + _P3
+    left = np.where(four, n - 4, n)  # digits for the byte loop, in order
+    for i in (2, 1, 0):
+        step = _rotl(h ^ ((t // _POW10[i] % _U(10) + _U(0x30)) * _P5), 11) * _P1
+        h = np.where(left > i, step, h)
+    return _fmix(h)
+
+
+def ip4_depth_hashes(keys: np.ndarray, depths) -> np.ndarray:
+    """(n, D) uint64 key hashes of int64 v4 ``keys`` at each depth, bit
+    for bit the values ``lpm._depth_hashes(key, depths, ip4_trunc)``
+    computes JVM-side: ``xxhash64(int d, string(key & mask_d))``. A key
+    of -1 stands for null and hashes to the per-depth seed, as
+    ``xxhash64(d, NULL)`` does. Keys must lie in [-1, 2^32) (see
+    ``ip4_key_array``), so every truncation has 1-10 digits."""
+    depths = np.asarray(depths, dtype=np.uint64)
+    seeds = _xxh64_depth_seeds(depths)
+    masks = (_U(0xFFFFFFFF) << (_U(V4_BITS) - depths)) & _U(0xFFFFFFFF)
+    k = np.asarray(keys, dtype=np.int64).view(np.uint64)
+    out = np.empty((len(k), len(depths)), dtype=np.uint64)
+    rows = max(1, _HASH_BLOCK // max(len(depths), 1))
+    with np.errstate(over="ignore"):
+        for s in range(0, len(k), rows):
+            t = k[s : s + rows, None] & masks
+            h = _xxh64_digits8_10(t, seeds)
+            short = t < _POW10[7]
+            if short.any():
+                h[short] = _xxh64_digits1_7(t[short], np.broadcast_to(seeds, t.shape)[short])
+            out[s : s + rows] = h
+    out[np.asarray(keys) < 0] = seeds
+    return out
+
+
+def ip4_key_array(arr, name: str) -> np.ndarray:
+    """One batch of a v4 key column as shipped to an LPM kernel (an Arrow
+    int64 array, nulls allowed) → int64 numpy with null as -1. Raises
+    ``ValueError`` naming the column ``name`` on a key outside
+    [0, 2^32): such a key is no IPv4 address, and its mask truncation
+    would answer it silently."""
+    import pyarrow.compute as pc
+
+    lo, hi = (v.as_py() for v in pc.min_max(arr).values())
+    if lo is not None and (lo < 0 or hi >= 1 << V4_BITS):
+        raise ValueError(
+            f"IPv4 key column {name!r} holds {lo if lo < 0 else hi}, outside [0, 2^32): "
+            "keys must be uint32 addresses"
+        )
+    return pc.fill_null(arr, -1).to_numpy()
 
 
 def cidr4_route_table(cidrs: DataFrame, cidr_col: str = "cidr") -> DataFrame:
@@ -139,9 +275,14 @@ def lookup_ip4(
     prefix length, 0 = default route) and lpm_prefix_ip (the matched
     prefix's masked address as a long, null on miss). The engine must
     have been built in the numeric key domain (``build_ip4_lpm`` or
-    ``PathLPM.build(trunc=ip4_trunc)``). ``exact_repair``: the numeric
-    route table (``cidr4_route_table``) to close the FIB's 64-bit
-    collision window exactly (see operators/lpm.py module docstring)."""
+    ``PathLPM.build(trunc=ip4_trunc)``). ``ip_col`` may be long, int or
+    a decimal string; it is cast to long and crosses into the probe
+    kernel as one int64 column, hashed there by ``ip4_depth_hashes``. A
+    null address answers depth 0; an address outside [0, 2^32) fails the
+    action with a ``ValueError`` naming ``ip_col``. ``exact_repair``: the
+    numeric route table (``cidr4_route_table``) to close the FIB's
+    64-bit collision window exactly (see operators/lpm.py module
+    docstring)."""
     out = engine.lookup(
         traffic, path_col=ip_col, mode=mode, trunc=ip4_trunc, exact_repair=exact_repair
     )

@@ -32,8 +32,8 @@ built so far", because its ascending insertion order guarantees every
 candidate BMP precedes its descendants, so "filter so far" ≡ "complete
 table at shorter depths" (invariant pinned at the prototype's
 ipfilter.py:67-69). No join runs: the hash of
-every truncation already arrives in the kernel as a flat column, exactly
-as ``lookup`` feeds its kernel.
+every truncation is already in the kernel's batch, exactly as ``lookup``
+feeds its kernel (see "Key encoding").
 
 Exactness note: the reference can return a genuine-but-not-longest match
 when false-positive noise corrupts the decoded pointer and the corrupted
@@ -43,12 +43,25 @@ h < hit additionally verifies the (h, hit] depth interval, so guided ≡
 linear ≡ exact always — making the operator oracle-checkable — while
 keeping the probe-count savings (the interval is almost always empty).
 
-Key encoding: each (prefix, depth) route key is hashed JVM-side to ONE
-64-bit value (``xxhash64(depth, prefix)``), which serves as both the
-Bloom hash base and the FIB confirm key. The probe therefore ships 8
-bytes per (row, depth) over Arrow — half the previous 16-byte truncated
-sha256 digests, which themselves halved full sha256 — and the Python
-kernel starts from ready-made hashes (no per-batch FNV pass). The FIB is
+Key encoding: each (prefix, depth) route key hashes to ONE 64-bit value,
+Spark's ``xxhash64(int depth, string prefix)``, which serves as both the
+Bloom hash base and the FIB confirm key. The kernels take an (n, D)
+matrix of these hashes, one column per route depth, built where the
+domain makes it cheapest:
+
+- path and IPv6 keys are strings, so the JVM truncates and hashes them
+  (``_depth_hashes``) and ships 8 bytes per (row, depth) over Arrow,
+  which the kernel views as the matrix without a copy;
+- an IPv4 key is one int64 whose truncation is a mask, so it crosses as
+  that one column (8 bytes per row) and the worker hashes it per kernel
+  sub-chunk with ``cidr.ip4_depth_hashes``, a numpy twin of the JVM hash
+  that is bit-identical to it (``tests/test_cidr.py`` checks every depth,
+  every decimal length, 100k random keys and null). The domain is the
+  ``trunc`` the caller passes: ``ip4_trunc`` selects the twin.
+
+Both give the same hashes, so the filter bits, the FIB and the engine
+blob do not depend on where the hashing ran. The own-route hash of the
+build's FIB collect stays JVM-side in every domain. The FIB is
 a sorted uint64 array; its confirm is exact up to 64-bit collisions
 between a probed non-route key and a stored route (expected wrong rows ≈
 n_routes·probes / 2^64 — under 3 per trillion probes at the
@@ -82,6 +95,7 @@ from pyspark.sql.types import (
 )
 
 from ip_filter_spark.lifetime import cut, pinned
+from ip_filter_spark.operators.cidr import ip4_depth_hashes, ip4_key_array, ip4_trunc
 from ip_filter_spark.plans.obst import GuideTree
 from ip_filter_spark.sketches.bloom import BloomFilter
 SEP = "/"
@@ -119,8 +133,34 @@ def _depth_hashes(key_col, depths: list[int], trunc) -> list:
     truncated to ``depths[j]``, hashed by ``_h64_expr``. Flat int64
     columns, NOT array<bigint>: a nested list column materializes per-row
     list cells plus a worker-side unpack, while flat int64 buffers arrive
-    kernel-ready. Shared by the build's insert pass and ``lookup``."""
+    kernel-ready. How the path and IPv6 domains feed the build's insert
+    pass and ``lookup``; for IPv4 keys it is the reference that
+    ``cidr.ip4_depth_hashes`` reproduces in the worker (``_key_cols``)."""
     return [_h64_expr(trunc(key_col, d), F.lit(d)).alias(f"__h{j}") for j, d in enumerate(depths)]
+
+
+def _key_cols(key_col, depths: list[int], trunc) -> list:
+    """The columns a kernel batch carries its keys in. IPv4
+    (``trunc=ip4_trunc``): ONE int64 column ``__k``, the key cast to
+    long (the first step of ``ip4_trunc``), which the worker hashes per
+    depth with ``cidr.ip4_depth_hashes``: 8 bytes per row over Arrow
+    instead of 8 per (row, depth), and no JVM hashing. Other domains:
+    the D JVM hash columns of ``_depth_hashes``."""
+    if trunc is ip4_trunc:
+        return [key_col.cast("long").alias("__k")]
+    return _depth_hashes(key_col, depths, trunc)
+
+
+def _batch_hashes(b: pd.DataFrame, depths: list[int]) -> np.ndarray:
+    """The (n, D) uint64 hash matrix of one pandas batch of ``_key_cols``
+    (the build's insert and by_share passes). A route prefix outside
+    [0, 2^32) raises ``ValueError`` in the v4 domain."""
+    if "__k" in b.columns:
+        import pyarrow as pa
+
+        keys = pa.Array.from_pandas(b["__k"])  # float64 with NaN if the batch has a null
+        return ip4_depth_hashes(ip4_key_array(keys.cast(pa.int64()), "prefix"), depths)
+    return np.column_stack([b[f"__h{j}"].to_numpy() for j in range(len(depths))]).astype(np.int64, copy=False).view(np.uint64)
 
 
 def _fib_member(fib: np.ndarray, h: np.ndarray) -> np.ndarray:
@@ -134,7 +174,7 @@ def _fib_member(fib: np.ndarray, h: np.ndarray) -> np.ndarray:
 
 
 def _route_bmp(fib: np.ndarray, depths: list[int], b: pd.DataFrame):
-    """One batch of routes (h64, depth, __h0..) → (H, own, bmp_ix): the
+    """One batch of routes (h64, depth, key columns) → (H, own, bmp_ix): the
     (n, D) uint64 hash matrix, each route's own depth column, and its BMP
     pointer — the index into [0] + depths of the deepest strictly shorter
     depth whose truncation is a FIB route, 0 if none. The reference reads
@@ -142,7 +182,7 @@ def _route_bmp(fib: np.ndarray, depths: list[int], b: pd.DataFrame):
     complete table, equal to it at shorter depths (module docstring).
     The one BMP function, behind both the insert kernel and by_share."""
     D = len(depths)
-    H = np.column_stack([b[f"__h{j}"].to_numpy() for j in range(D)]).astype(np.int64, copy=False).view(np.uint64)
+    H = _batch_hashes(b, depths)
     own = np.searchsorted(depths, b["depth"].to_numpy())
     below = np.arange(D)[None, :] < own[:, None]
     hit = np.zeros(H.shape, dtype=bool)
@@ -363,7 +403,7 @@ class PathLPM:
                     )
                 fib = np.sort(keys["h64"].to_numpy().astype(np.int64, copy=False).view(np.uint64))
                 depths, counts = (a.tolist() for a in np.unique(keys["depth"].to_numpy(), return_counts=True))
-                cols = [own_h64, depth, *_depth_hashes(F.col("prefix"), depths, trunc)]
+                cols = [own_h64, depth, *_key_cols(F.col("prefix"), depths, trunc)]
                 if weighting == "by_share":
                     fib_bc = sc.broadcast(fib)
 
@@ -453,26 +493,43 @@ class PathLPM:
 
         Python stage is ``mapInArrow``, not ``mapInPandas``: passthrough
         columns are re-emitted as the SAME Arrow arrays (zero copy — a
-        wide corpus row never materializes as pandas objects) and the D
-        key-hash columns are int64 Arrow buffers viewed as an (n, D)
-        uint64 matrix with no copy and no Python-side hashing.
+        wide corpus row never materializes as pandas objects). The
+        kernel works on an (n, D) uint64 matrix of per-depth key hashes.
+        Which side computes it depends on the domain:
+
+        - IPv4 (``trunc=ip4_trunc``): the key crosses as one int64
+          column, and each 8k-row kernel sub-chunk hashes it with
+          ``cidr.ip4_depth_hashes``, the bit-identical twin of the JVM
+          hash. A long-typed key column crosses once, as itself. A key
+          outside [0, 2^32) raises ``ValueError`` naming ``path_col``.
+        - Path and IPv6 domains: the JVM computes ``_depth_hashes``, and
+          the D int64 Arrow buffers are viewed as the matrix with no
+          copy and no Python-side hashing.
 
         ``trunc`` must match the one the engine was built with (see
-        ``build``). ``exact_repair``: pass the route table (prefix,
-        depth) to close the FIB's 64-bit collision window — answers are
-        verified with a broadcast anti-join and the (expected-empty)
-        mismatch set is re-resolved exactly; see module docstring."""
-        assert mode in ("guided", "linear")
+        ``build``). ``mode`` is ``'guided'`` or ``'linear'``; anything
+        else raises ``ValueError``. ``exact_repair``: pass the route
+        table (prefix, depth) to close the FIB's 64-bit collision window
+        — answers are verified with a broadcast anti-join and the
+        (expected-empty) mismatch set is re-resolved exactly; see module
+        docstring."""
+        if mode not in ("guided", "linear"):
+            raise ValueError(f"mode must be 'guided' or 'linear', got {mode!r}")
         trunc = trunc or _trunc
         spark = df.sparkSession
         payload = self.to_bytes()
         bc = spark.sparkContext.broadcast(payload)
         depths = self.depths
 
-        hcols = [f"__h{j}" for j in range(len(depths))]
-        src = df.select("*", *_depth_hashes(F.col(path_col), depths, trunc))
-        keep = [f for f in src.schema.fields if f.name not in hcols]
-        names = [f.name for f in keep]
+        v4 = trunc is ip4_trunc
+        n_keep = len(df.columns)
+        if v4 and dict(df.dtypes).get(path_col) == "bigint":
+            key_cols, key_ix = [], df.columns.index(path_col)
+        else:
+            key_cols, key_ix = _key_cols(F.col(path_col), depths, trunc), n_keep
+        src = df.select("*", *key_cols)
+        keep = df.schema.fields
+        names = df.columns
         out_schema = StructType(
             keep
             + [
@@ -488,18 +545,27 @@ class PathLPM:
             import pyarrow as pa
 
             eng = PathLPM.from_bytes(bc.value)
+            kern = eng._lookup_batch_guided if mode_guided else eng._lookup_batch_linear
             out_names = names + ["lpm_depth", "bit_lookups", "fib_probes", "fell_back"]
             for b in batches:
                 nb = b.num_rows
-                passthrough = [b.column(b.schema.get_field_index(nm)) for nm in names]
+                passthrough = b.columns[:n_keep]
                 if nb == 0:
                     ans = np.zeros(0, dtype=np.int64)
                     bits, fibp = ans, ans
                     fell = np.zeros(0, dtype=bool)
                 else:
-                    H = np.column_stack(
-                        [_arrow_int64(b.column(b.schema.get_field_index(hc))) for hc in hcols]
-                    )
+                    if v4:
+                        keys = ip4_key_array(b.column(key_ix), path_col)
+
+                        def hashes(s):
+                            return ip4_depth_hashes(keys[s : s + _KERNEL_CHUNK], depths)
+                    else:
+                        H = np.column_stack([_arrow_int64(c) for c in b.columns[n_keep:]])
+
+                        def hashes(s):
+                            return H[s : s + _KERNEL_CHUNK]
+
                     # kernel sub-chunks: one Arrow batch can be 64k+ rows
                     # (transfer-efficient), but the kernel's temporaries
                     # (hash/slot/hit matrices) scale with rows x depths —
@@ -509,10 +575,7 @@ class PathLPM:
                     # ~4 active cores). 8k-row sub-chunks keep the
                     # working set L2-resident; answers are row-local so
                     # chunking cannot change them.
-                    kern = eng._lookup_batch_guided if mode_guided else eng._lookup_batch_linear
-                    parts = [
-                        kern(H[s : s + _KERNEL_CHUNK]) for s in range(0, nb, _KERNEL_CHUNK)
-                    ]
+                    parts = [kern(hashes(s)) for s in range(0, nb, _KERNEL_CHUNK)]
                     ans, bits, fibp, fell = (np.concatenate(x) for x in zip(*parts))
                 yield pa.RecordBatch.from_arrays(
                     passthrough

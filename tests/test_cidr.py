@@ -219,3 +219,81 @@ def test_ip4_exact_repair_and_blob_version(spark):
         PathLPM.from_bytes(bytes(blob))
     with _pytest.raises(ValueError, match="not a PathLPM blob"):
         PathLPM.from_bytes(b"garbage")
+
+
+def test_ip4_twin_matches_jvm_hash(spark):
+    """The worker-side v4 key hash equals the JVM's ``_depth_hashes(key,
+    depths, ip4_trunc)`` bit for bit: every depth 0-32, keys at every
+    decimal-length boundary, 100k random uint32 keys, and a null key,
+    which hashes to the per-depth seed ``xxhash64(d)`` (so a null
+    address keeps ``lpm_depth = 0``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ip_filter_spark.operators.cidr import ip4_depth_hashes, ip4_key_array, ip4_trunc
+    from ip_filter_spark.operators.lpm import _depth_hashes
+
+    depths = list(range(33))
+    edges = sorted({0, 2**32 - 1, *(10**e + o for e in range(1, 10) for o in (-1, 0))})
+    rand = spark.range(100_000, numPartitions=4).select(F.pmod(F.xxhash64("id", F.lit(7)), F.lit(2**32)).alias("ip"))
+    keys = (
+        spark.createDataFrame([(k,) for k in edges] + [(None,)], "ip long")
+        .unionByName(rand)
+        .select("ip", *_depth_hashes(F.col("ip"), depths, ip4_trunc))
+    )
+    pdf = keys.toPandas()
+    jvm = pdf[[f"__h{j}" for j in range(len(depths))]].to_numpy().astype(np.int64).view(np.uint64)
+    twin = ip4_depth_hashes(ip4_key_array(pa.Array.from_pandas(pdf["ip"]).cast(pa.int64()), "ip"), depths)
+    assert len(pdf) == len(edges) + 1 + 100_000
+    assert int((twin != jvm).sum()) == 0
+    null = pdf["ip"].isna().to_numpy()
+    seeds = spark.range(1).select(*[F.xxhash64(F.lit(d)).alias(f"s{d}") for d in depths]).first()
+    assert (twin[null] == np.array(list(seeds), dtype=np.int64).view(np.uint64)).all()
+
+
+def test_ip4_lookup_ships_one_key_column(spark):
+    """A v4 lookup carries no per-depth hash column into the Python node
+    (a long key crosses as itself, another type as one ``__k`` column),
+    while a path-domain lookup still carries ``__h0..``. String- and
+    int-typed keys answer like long ones: the key is cast to long, as
+    ``ip4_trunc`` does."""
+    from ip_filter_spark.operators.lpm import PathLPM
+
+    cidrs = spark.createDataFrame(CIDRS, "cidr string")
+    eng = build_ip4_lpm(cidrs, num_partitions=2)
+    traffic = spark.createDataFrame([(ip,) for ip in TRAFFIC + [7]], "ip long")
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    as_long = lookup_ip4(eng, traffic)
+    assert "__h" not in plan(as_long) and "__k" not in plan(as_long)
+    want = sorted(as_long.collect())
+    as_str = lookup_ip4(eng, traffic.select(F.col("ip").cast("string").alias("ip")))
+    assert "__h" not in plan(as_str) and "__k" in plan(as_str)
+    assert sorted((int(r.ip), *r[1:]) for r in as_str.collect()) == want
+    small = traffic.where(F.col("ip") < 2**31)  # int holds the lower half of v4
+    want_small = sorted(lookup_ip4(eng, small).collect())
+    as_int = lookup_ip4(eng, small.select(F.col("ip").cast("int").alias("ip")))
+    assert sorted(as_int.collect()) == want_small
+
+    path_eng = PathLPM.build(spark.createDataFrame([("a", 1), ("a/b", 2)], "prefix string, depth int"))
+    assert "__h0" in plan(path_eng.lookup(spark.createDataFrame([("a/b/c",)], "path string")))
+
+
+@pytest.mark.parametrize("bad", [-5, 2**32, 2**40])
+def test_ip4_out_of_range_keys_raise(spark, bad):
+    """A v4 key outside [0, 2^32) is no address: lookup and build fail
+    naming the key column, where the mask truncation used to answer it
+    with a silent depth 0."""
+    from ip_filter_spark.operators.cidr import ip4_trunc
+    from ip_filter_spark.operators.lpm import PathLPM
+
+    eng = build_ip4_lpm(spark.createDataFrame(CIDRS, "cidr string"), num_partitions=2)
+    traffic = spark.createDataFrame([(16777216,), (bad,)], "ip long")
+    with pytest.raises(Exception, match=f"IPv4 key column 'ip' holds {bad}, outside"):
+        lookup_ip4(eng, traffic).collect()
+    routes = spark.createDataFrame([("16777216", 8), (str(bad), 8)], "prefix string, depth int")
+    for threshold in (1_000_000, 0):  # driver-local and distributed insert pass
+        with pytest.raises(Exception, match=f"IPv4 key column 'prefix' holds {bad}, outside"):
+            PathLPM.build(routes, trunc=ip4_trunc, num_partitions=2, local_build_max_inserts=threshold)

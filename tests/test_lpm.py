@@ -63,6 +63,14 @@ def test_lpm_goldens_guided_and_linear(spark, fixture_lpm):
     assert n_found == 3  # 3/5 match, like the reference traffic fixture
 
 
+def test_lookup_rejects_unknown_mode(spark, fixture_lpm):
+    """An unknown mode is a ValueError, not an ``assert`` that
+    ``python -O`` strips (which would silently run the linear scan)."""
+    q = spark.createDataFrame([("a/b",)], "path string")
+    with pytest.raises(ValueError, match="mode must be 'guided' or 'linear', got 'fast'"):
+        fixture_lpm.lookup(q, mode="fast")
+
+
 def test_exact_lpm_oracle(spark):
     pdf = spark.createDataFrame(FIXTURE_ROUTES, "prefix string, depth int")
     q = spark.createDataFrame([(p,) for p, _ in FIXTURE_QUERIES], "path string")
