@@ -11,13 +11,16 @@ Three lookup engines, all returning *exactly* the same answers:
   broadcast join → max depth). The DuckDB-expressible oracle, mirroring
   the reference's FIB-only oracle (/root/reference/prototype/
   tests.py_bak:229-248).
-- ``PathLPM.lookup(mode='linear')``: Bloom-probe every domain depth from
-  deepest down with all k hashes, confirm hits in the exact FIB set
-  (/root/reference/prototype/ipfilter.py:145-175 vectorized).
+- ``PathLPM.lookup(mode='linear')``: walk the domain depths deepest
+  first; at each, Bloom-probe all k hashes of the rows still unresolved,
+  confirm the hits in the exact FIB set, and stop a row at its first
+  confirmed depth (the reference's prototype/ipfilter.py:145-175
+  vectorized). This walk, ``PathLPM._scan``, is the package's one LPM
+  scan: the guided engine's fallback and exactness check run it too.
 - ``PathLPM.lookup(mode='guided')``: descend the guide BST probing only
   hash 0; decode the best-matching-prefix *pointer* hidden in spare hash
-  slots; validate with the remaining hashes + FIB; fall back to linear
-  below the deepest hit on any inconsistency
+  slots; validate with the remaining hashes + FIB; fall back to the
+  linear scan below the deepest hit on any inconsistency
   (/root/reference/prototype/ipfilter.py:184-238 vectorized,
   level-synchronous across each Arrow batch).
 
@@ -39,9 +42,11 @@ Exactness note: the reference can return a genuine-but-not-longest match
 when false-positive noise corrupts the decoded pointer and the corrupted
 hypothesis happens to be a real route (same failure mode it documents at
 doc/tex/report.tex:288-305). We close that hole: an accepted hypothesis
-h < hit additionally verifies the (h, hit] depth interval, so guided ≡
-linear ≡ exact always — making the operator oracle-checkable — while
-keeping the probe-count savings (the interval is almost always empty).
+h < hit additionally runs the linear scan over the (h, hit] depth
+interval, in the same ``_scan`` call as the rejected rows' fallback, so
+guided ≡ linear ≡ exact always — making the operator oracle-checkable —
+while keeping the probe-count savings (the interval is almost always
+empty).
 
 Key encoding: each (prefix, depth) route key hashes to ONE 64-bit value,
 Spark's ``xxhash64(int depth, string prefix)``, which serves as both the
@@ -239,9 +244,7 @@ def derive_prefix_table(corpus: DataFrame, path_col: str = "path", max_depth: in
     return out.select("prefix", "depth")
 
 
-def exact_lpm(
-    queries: DataFrame, prefix_df: DataFrame, path_col: str = "path", trunc=None, depth_guard: bool = None
-) -> DataFrame:
+def exact_lpm(queries: DataFrame, prefix_df: DataFrame, path_col: str = "path", trunc=None) -> DataFrame:
     """Exact LPM via explode + broadcast join + groupBy max — the oracle.
 
     Scale shape: candidate explosion is bounded by the (small) distinct
@@ -254,8 +257,6 @@ def exact_lpm(
     truncatable at every route depth by construction.
     """
     trunc = trunc or _trunc
-    if depth_guard is None:
-        depth_guard = trunc is _trunc
     depths = [r.depth for r in prefix_df.select("depth").distinct().collect()]
     # __qid feeds two join branches; monotonically_increasing_id is
     # nondeterministic under recomputation (task retry / AQE replan), so
@@ -267,7 +268,7 @@ def exact_lpm(
         F.col(path_col),
         F.explode(F.array(*[F.lit(d) for d in sorted(depths)])).alias("__d"),
     )
-    if depth_guard:
+    if trunc is _trunc:
         cand = cand.where(path_depth(F.col(path_col)) >= F.col("__d"))
     cand = cand.select("__qid", F.col("__d"), trunc(F.col(path_col), F.col("__d")).alias("__prefix"))
     joined = cand.join(
@@ -361,8 +362,10 @@ class PathLPM:
         inserts runs the kernel once on the driver; a larger one runs it
         per partition (``num_partitions``) and OR-merges the partial
         filters through the engine's ``tree_merge``. Both give the same
-        bytes. ``weighting='by_share'`` adds one pass of the same BMP
-        function before the guide tree is built.
+        bytes. ``weighting`` sets the guide tree's per-depth weights:
+        ``'by_count'`` (routes per depth) or ``'by_share'`` (tight
+        address-space share, ``_share_weights``), which adds one pass of
+        the same BMP function before the tree is built.
 
         The filter is deliberately sparse (``bits_per_route`` bits/route
         by default) — the reference's own finding: hash-0 markers and
@@ -376,9 +379,11 @@ class PathLPM:
         round-trip through 32-component bit strings. The SAME trunc must
         be passed to ``lookup``.
 
-        Raises ``ValueError`` on an empty route table and on one of more
-        than ``MAX_FIB_ROUTES`` routes.
+        Raises ``ValueError`` on an unknown ``weighting``, on an empty
+        route table and on one of more than ``MAX_FIB_ROUTES`` routes.
         """
+        if weighting not in ("by_count", "by_share"):
+            raise ValueError(f"weighting must be 'by_count' or 'by_share', got {weighting!r}")
         trunc = trunc or _trunc
         sc = prefix_df.sparkSession.sparkContext
         # the route table is read by two actions below (the FIB collect
@@ -415,10 +420,8 @@ class PathLPM:
 
                     bmps = prefix_df.select(*cols).mapInPandas(route_bmp, "depth int, bmp_depth int")
                     weights = cls._share_weights(bmps, depths, share_base)
-                elif weighting == "by_count":
-                    weights = counts
                 else:
-                    weights = [1.0] * len(depths)
+                    weights = counts
                 tree = GuideTree.from_weights(depths, weights)
                 k_auto, enc_bits = cls.required_k(len(depths), tree.height())
                 k = k or k_auto
@@ -505,6 +508,23 @@ class PathLPM:
         - Path and IPv6 domains: the JVM computes ``_depth_hashes``, and
           the D int64 Arrow buffers are viewed as the matrix with no
           copy and no Python-side hashing.
+
+        The three diagnostic columns count what the kernel did for the
+        row, as the reference's invocation-counting profiler does:
+
+        - ``bit_lookups``: Bloom bits read. The linear scan reads k per
+          depth it visits, deepest first, down to the first depth the
+          FIB confirms (all D depths when none does). The guided engine
+          reads one bit per descent step; then, at its deepest hit, the
+          ``enc_bits`` pointer bits and, when the decoded hypothesis is
+          a candidate, that hypothesis's remaining validation bits; then
+          k per depth its ``_scan`` visits.
+        - ``fib_probes``: FIB confirms made: one per depth whose k Bloom
+          bits all pass in the scan, plus one for a guided candidate
+          hypothesis, made whether or not its validation bits pass.
+        - ``fell_back``: the guided hypothesis was rejected and the row
+          ran the linear scan below its deepest hit. Always false in
+          linear mode and for rows the descent never hit.
 
         ``trunc`` must match the one the engine was built with (see
         ``build``). ``mode`` is ``'guided'`` or ``'linear'``; anything
@@ -635,55 +655,41 @@ class PathLPM:
         return out.where(F.col("lpm_depth") == 0).unionByName(ok).unionByName(fixed)
 
     # ------------------------------------------------------- batch kernels
-    def _scan_below(
-        self, H: np.ndarray, rows: np.ndarray, cap_col: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Vectorized linear scan: for each row in ``rows``, find the deepest
-        domain depth with column index <= cap_col whose key passes all k
-        Bloom hashes AND the exact FIB — the reference's linear fallback
-        (/root/reference/prototype/ipfilter.py:145-159) batched.
-        Returns (answer_depth, bit_lookups, fib_probes) per row."""
-        D = len(self.depths)
-        k = self.bf.k
+    def _scan(self, H: np.ndarray, rows: np.ndarray, lo_col: np.ndarray, cap_col: np.ndarray):
+        """The one LPM scan — the reference's linear probe
+        (prototype/ipfilter.py:145-159) batched: for each
+        row in ``rows``, walk the domain columns in (lo_col, cap_col]
+        deepest first; at each column Bloom-probe all k hashes of the
+        rows still unresolved, FIB-confirm the hits, and drop the rows
+        that confirm. Returns (answer_depth, bit_lookups, fib_probes) per
+        row: the depth is 0 where nothing in the interval confirms, and
+        the counters are the probes this walk actually made."""
         nr = len(rows)
-        if nr == 0:
-            z = np.zeros(0, dtype=np.int64)
-            return z, z.copy(), z.copy()
-        hsub = H[rows]  # (nr, D)
-        slots = np.arange(k, dtype=np.uint64)
-        hit_all = np.ones((nr, D), dtype=bool)
-        bitcount = np.zeros(nr, dtype=np.int64)
-        valid = np.arange(D)[None, :] <= cap_col[:, None]
-        for j in range(D):
-            act = valid[:, j]
-            if not act.any():
-                continue
-            bitsj = self._probe_slots(hsub[act, j], np.broadcast_to(slots, (int(act.sum()), k)))
-            hit_all[act, j] = bitsj.all(axis=1)
-            # branchless batch probe: count all k per candidate (upper bound;
-            # scalar early-exit doesn't vectorize)
-            bitcount[act] += k
-        hit_all &= valid
-        # FIB-confirm bloom hits, deepest first
         ans = np.zeros(nr, dtype=np.int64)
+        bits = np.zeros(nr, dtype=np.int64)
         fibp = np.zeros(nr, dtype=np.int64)
         unresolved = np.ones(nr, dtype=bool)
-        for j in range(D - 1, -1, -1):
-            chk = unresolved & hit_all[:, j]
-            if not chk.any():
+        k = self.bf.k
+        slots = np.arange(k, dtype=np.uint64)
+        for j in range(len(self.depths) - 1, -1, -1):
+            act = unresolved & (lo_col < j) & (j <= cap_col)
+            if not act.any():
                 continue
-            rows_chk = np.nonzero(chk)[0]
-            ok = _fib_member(self.fib, hsub[rows_chk, j])
-            fibp[rows_chk] += 1
-            got = rows_chk[ok]
-            ans[got] = self.depths[j]
-            unresolved[got] = False
-        return ans, bitcount, fibp
+            r = np.nonzero(act)[0]
+            bj = self._probe_slots(H[rows[r], j], np.broadcast_to(slots, (len(r), k)))
+            bits[r] += k
+            hr = r[bj.all(axis=1)]
+            if len(hr):
+                ok = _fib_member(self.fib, H[rows[hr], j])
+                fibp[hr] += 1
+                got = hr[ok]
+                ans[got] = self.depths[j]
+                unresolved[got] = False
+        return ans, bits, fibp
 
     def _lookup_batch_linear(self, H: np.ndarray):
-        n = H.shape[0]
-        cap = np.full(n, len(self.depths) - 1, dtype=np.int64)
-        ans, bits, fibp = self._scan_below(H, np.arange(n), cap)
+        n, D = H.shape
+        ans, bits, fibp = self._scan(H, np.arange(n), np.full(n, -1), np.full(n, D - 1))
         return ans, bits, fibp, np.zeros(n, dtype=bool)
 
     def _lookup_batch_guided(self, H: np.ndarray):
@@ -739,10 +745,17 @@ class PathLPM:
         hyp_depth = np.where(valid_ix, ix2len_arr[np.clip(bmp_ix, 0, len(ix2len_arr) - 1)], hit_depth)
         hyp_depth = np.where(all_ones, hit_depth, hyp_depth)
 
+        # the scan each hit row still needs: a rejected row falls back to
+        # the linear scan strictly below its deepest hit (ipfilter.py:
+        # 234-236), i.e. columns (-1, hit-1]; an accepted row checks
+        # (hyp, hit] — the exactness patch (module docstring), empty when
+        # the hypothesis is the hit itself
+        lo_col = np.full(len(hit_rows), -1, dtype=np.int64)
+        cap_col = hit_col[hit_rows] - 1
+        accepted = np.zeros(len(hit_rows), dtype=bool)
         # candidate accept: hypothesis must exist (depth>0) and be
         # self (all-ones) or strictly shorter (ipfilter.py:227)
         cand = (all_ones | (hyp_depth < hit_depth)) & (hyp_depth > 0)
-        accepted = np.zeros(len(hit_rows), dtype=bool)
         if cand.any():
             c = np.nonzero(cand)[0]
             hyp_col = np.searchsorted(depths_arr, hyp_depth[c])
@@ -758,64 +771,21 @@ class PathLPM:
                 ok = (vbits.astype(bool) | ~in_range).all(axis=1)
                 bits_used[hit_rows[c]] += width
             # exact FIB confirm (ipfilter.py:231)
-            fib_ok = _fib_member(self.fib, H[hit_rows[c], hyp_col])
+            fib_ok = _fib_member(self.fib, hch)
             fibp[hit_rows[c]] += 1
             accept = ok & fib_ok
             accepted[c] = accept
             acc = c[accept]
             ans[hit_rows[acc]] = hyp_depth[acc]
-            # exactness patch: verify nothing deeper in (hyp, hit]
-            gap = acc[hyp_depth[acc] < hit_depth[acc]]
-            if len(gap):
-                cap_col = hit_col[hit_rows[gap]]
-                lo_col = np.searchsorted(depths_arr, hyp_depth[gap])
-                deeper, gb, gf = self._scan_interval(H, hit_rows[gap], lo_col, cap_col)
-                bits_used[hit_rows[gap]] += gb
-                fibp[hit_rows[gap]] += gf
-                upd = deeper > 0
-                ans[hit_rows[gap[upd]]] = deeper[upd]
-
-        # fallback: linear scan strictly below the deepest hit
-        # (ipfilter.py:234-236)
-        fb = np.nonzero(~accepted)[0]
-        if len(fb):
-            fell[hit_rows[fb]] = True
-            cap_col = hit_col[hit_rows[fb]] - 1
-            has = cap_col >= 0
-            fbh = fb[has]
-            if len(fbh):
-                a2, b2, f2 = self._scan_below(H, hit_rows[fbh], cap_col[has])
-                ans[hit_rows[fbh]] = a2
-                bits_used[hit_rows[fbh]] += b2
-                fibp[hit_rows[fbh]] += f2
+            lo_col[acc] = hyp_col[accept]
+            cap_col[acc] += 1
+        fell[hit_rows[~accepted]] = True
+        deeper, sb, sf = self._scan(H, hit_rows, lo_col, cap_col)
+        bits_used[hit_rows] += sb
+        fibp[hit_rows] += sf
+        upd = deeper > 0
+        ans[hit_rows[upd]] = deeper[upd]
         return ans, bits_used, fibp, fell
-
-    def _scan_interval(self, H, rows, lo_col, cap_col):
-        """FIB-backed scan of domain columns in (lo_col, cap_col]."""
-        D = len(self.depths)
-        nr = len(rows)
-        ans = np.zeros(nr, dtype=np.int64)
-        bits = np.zeros(nr, dtype=np.int64)
-        fibp = np.zeros(nr, dtype=np.int64)
-        unresolved = np.ones(nr, dtype=bool)
-        k = self.bf.k
-        slots = np.arange(k, dtype=np.uint64)
-        for j in range(D - 1, -1, -1):
-            act = unresolved & (lo_col < j) & (j <= cap_col)
-            if not act.any():
-                continue
-            r = np.nonzero(act)[0]
-            bj = self._probe_slots(H[rows[r], j], np.broadcast_to(slots, (len(r), k)))
-            bits[r] += k
-            hit = bj.all(axis=1)
-            hr = r[hit]
-            if len(hr):
-                ok = _fib_member(self.fib, H[rows[hr], j])
-                fibp[hr] += 1
-                got = hr[ok]
-                ans[got] = self.depths[j]
-                unresolved[got] = False
-        return ans, bits, fibp
 
     # ------------------------------------------------------------ serialization
     def to_bytes(self) -> bytes:

@@ -295,3 +295,60 @@ def test_nested_v4_triple_agreement(spark):
     for mode in ("guided", "linear"):
         got = {r.ip: r.lpm_depth for r in lookup_ip4(eng, traffic, mode=mode).collect()}
         assert got == exact, mode
+
+
+def test_unknown_weighting_is_a_value_error(spark):
+    """A misspelled ``weighting`` fails loudly instead of building a guide
+    tree from some other weights."""
+    routes = spark.createDataFrame(FIXTURE_ROUTES, "prefix string, depth int")
+    with pytest.raises(ValueError, match="weighting must be 'by_count' or 'by_share', got 'by_shares'"):
+        PathLPM.build(routes, weighting="by_shares", num_partitions=2)
+
+
+# sha256 of the sorted per-row (key, lpm_depth, fib_probes, fell_back)
+# of each table and lookup mode, pinned when linear mode and the guided
+# fallback had a scan of their own: the one deepest-first scan must make
+# the same FIB confirms and fall back on the same rows
+GOLDEN_COUNTERS_SHA = {
+    ("v4", "guided"): "94d01725e2d41b3add3cd532da780c6f48a990d6c3db272b66d60af6dcac8eb5",
+    ("v4", "linear"): "1005e888f32c95eda55e1702493501ce4f011a50669ee598bf536ed8aae21596",
+    ("path", "guided"): "9b87898dafd526685e1ef5adec56a73ecbcfb772cbd362c3381d14ad94f7254a",
+    ("path", "linear"): "420099ac898c8180fe30a09474ced1ea7591ad0e80b1fff3d43d112298108174",
+}
+
+
+@pytest.mark.parametrize("table", ["v4", "path"])
+def test_kernel_counters(spark, fixture_lpm, table):
+    """Linear mode reads k Bloom bits per depth it visits, deepest first,
+    down to the depth the FIB confirms: ``bit_lookups == k·(D − c)`` with
+    c the column of the answer depth (0 when unmatched). The other
+    counters are pinned per row in both modes."""
+    import hashlib
+
+    from ip_filter_spark.operators.cidr import build_ip4_lpm, lookup_ip4
+
+    if table == "v4":
+        ips = set(np.random.default_rng(7).integers(0, 2**32, 200).tolist())
+        for c in NESTED_CIDRS:
+            addr, plen = c.split("/")
+            base = int.from_bytes(bytes(int(x) for x in addr.split(".")), "big")
+            span = 1 << (32 - int(plen))
+            ips |= {base, base + span // 2, base + span - 1, base + span}
+        eng = build_ip4_lpm(spark.createDataFrame([(c,) for c in NESTED_CIDRS], "cidr string"), num_partitions=2)
+        q = spark.createDataFrame([(ip,) for ip in sorted(ips)], "ip long")
+        key, look = "ip", lambda mode: lookup_ip4(eng, q, mode=mode)
+    else:
+        paths = {p for p, _ in FIXTURE_QUERIES} | {"a/b/zz", "x/y", "x/y/z", "m/n", "q", "zz"}
+        paths |= {p for p, _ in FIXTURE_ROUTES} | {f"{p}/leaf/f" for p, _ in FIXTURE_ROUTES}
+        eng = fixture_lpm
+        q = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
+        key, look = "path", lambda mode: eng.lookup(q, mode=mode)
+    k, D = eng.bf.k, len(eng.depths)
+    for mode in ("guided", "linear"):
+        rows = look(mode).select(key, "lpm_depth", "bit_lookups", "fib_probes", "fell_back").collect()
+        if mode == "linear":
+            for r in rows:
+                c = eng.depths.index(r.lpm_depth) if r.lpm_depth else 0
+                assert r.bit_lookups == k * (D - c), (r, k, D)
+        pinned = sorted((r[key], r.lpm_depth, r.fib_probes, r.fell_back) for r in rows)
+        assert hashlib.sha256(repr(pinned).encode()).hexdigest() == GOLDEN_COUNTERS_SHA[table, mode], mode
