@@ -16,11 +16,12 @@ Three lookup engines, all returning *exactly* the same answers:
   confirm the hits in the exact FIB set, and stop a row at its first
   confirmed depth (the reference's prototype/ipfilter.py:145-175
   vectorized). This walk, ``PathLPM._scan``, is the package's one LPM
-  scan: the guided engine's fallback and exactness check run it too.
+  scan: the guided engine's fallback and exactness check run it too,
+  asking the FIB directly instead of the filter first.
 - ``PathLPM.lookup(mode='guided')``: descend the guide BST probing only
   hash 0; decode the best-matching-prefix *pointer* hidden in spare hash
-  slots; validate with the remaining hashes + FIB; fall back to the
-  linear scan below the deepest hit on any inconsistency
+  slots; confirm the hypothesis in the FIB; fall back to the scan below
+  the deepest hit on any inconsistency
   (/root/reference/prototype/ipfilter.py:184-238 vectorized,
   level-synchronous across each Arrow batch).
 
@@ -42,11 +43,18 @@ Exactness note: the reference can return a genuine-but-not-longest match
 when false-positive noise corrupts the decoded pointer and the corrupted
 hypothesis happens to be a real route (same failure mode it documents at
 doc/tex/report.tex:288-305). We close that hole: an accepted hypothesis
-h < hit additionally runs the linear scan over the (h, hit] depth
-interval, in the same ``_scan`` call as the rejected rows' fallback, so
-guided ≡ linear ≡ exact always — making the operator oracle-checkable —
-while keeping the probe-count savings (the interval is almost always
-empty).
+h < hit additionally scans the (h, hit] depth interval, in the same
+``_scan`` call as the rejected rows' fallback, so guided ≡ linear ≡
+exact always — making the operator oracle-checkable — while keeping the
+probe-count savings (the interval is almost always empty). The guided
+engine's hypothesis and scan confirm through the FIB alone. That gives
+the linear scan's answers: the filter has no false negatives, so every
+key the FIB confirms (a route, or a 64-bit collision with one) has all
+k of its bits set, and the reference's Bloom checks before the FIB can
+never reject it. In this numpy kernel one FIB probe costs a fraction
+of one k-bit Bloom check (about 40 against 250 ns), so skipping the
+filter there is the cheaper order, the inverse of the reference's
+on-chip/off-chip cost model.
 
 Key encoding: each (prefix, depth) route key hashes to ONE 64-bit value,
 Spark's ``xxhash64(int depth, string prefix)``, which serves as both the
@@ -67,7 +75,10 @@ domain makes it cheapest:
 Both give the same hashes, so the filter bits, the FIB and the engine
 blob do not depend on where the hashing ran. The own-route hash of the
 build's FIB collect stays JVM-side in every domain. The FIB is
-a sorted uint64 array; its confirm is exact up to 64-bit collisions
+a sorted uint64 array in the blob. Where a kernel runs, ``_FibIndex``
+adds a radix directory over its top bits, so a confirm reads about one
+bucket entry instead of a binary search's ~log2(n) dependent misses.
+The confirm is exact up to 64-bit collisions
 between a probed non-route key and a stored route (expected wrong rows ≈
 n_routes·probes / 2^64 — under 3 per trillion probes at the
 ``MAX_FIB_ROUTES`` design bound; zero at any test scale). Every such
@@ -107,7 +118,8 @@ SEP = "/"
 _MAGIC = b"IFLPM2"  # v2: uint64 xxhash64 keys (v1 shipped 16-byte sha256 digests)
 _KERNEL_CHUNK = 8192
 #: design bound on the FIB: the driver collects it and every probe task
-#: holds it (8 B per route); a larger table is sharded (see build())
+#: holds it (8 B per route for the keys plus under 8 B per route for the
+#: ``_FibIndex`` directory); a larger table is sharded (see build())
 MAX_FIB_ROUTES = 50_000_000
 
 
@@ -168,17 +180,57 @@ def _batch_hashes(b: pd.DataFrame, depths: list[int]) -> np.ndarray:
     return np.column_stack([b[f"__h{j}"].to_numpy() for j in range(len(depths))]).astype(np.int64, copy=False).view(np.uint64)
 
 
-def _fib_member(fib: np.ndarray, h: np.ndarray) -> np.ndarray:
-    """Membership of uint64 key hashes in a sorted FIB array — one
-    searchsorted + equality gather, shared by the build's BMP read and
-    the lookup kernels (see module docstring for the 64-bit collision
-    bound and the exact_repair escape hatch)."""
-    if len(fib) == 0:
+class _FibIndex:
+    """The FIB as its kernels probe it: the sorted uint64 route-key array
+    plus a radix directory over the keys' top ``b`` bits, 2^b >= n. A
+    key ``h`` can only sit in ``keys[dir[t] : dir[t + 1]]`` with
+    ``t = h >> (64 - b)``, a bucket of about one entry — ``dir`` equals
+    ``searchsorted(keys >> (64 - b), arange(2^b + 1))``. int32 offsets
+    (n < 2^31 under ``MAX_FIB_ROUTES``) make the directory under 8 B per
+    route. Derived where a kernel runs (the worker's ``from_bytes``,
+    once per build partition, the driver-local build); never
+    serialized, so the engine blob holds only ``keys``."""
+
+    __slots__ = ("keys", "shift", "dir")
+
+    def __init__(self, keys: np.ndarray):
+        b = max(1, (len(keys) - 1).bit_length())
+        self.keys = keys
+        self.shift = np.uint64(64 - b)
+        counts = np.bincount((keys >> self.shift).astype(np.intp), minlength=1 << b)
+        self.dir = np.zeros(len(counts) + 1, dtype=np.int32)
+        np.cumsum(counts, dtype=np.int32, out=self.dir[1:])
+
+
+def _fib_member(fib: _FibIndex, h: np.ndarray) -> np.ndarray:
+    """Membership of uint64 key hashes in the FIB — shared by the build's
+    BMP read and the lookup kernels (see module docstring for the 64-bit
+    collision bound and the exact_repair escape hatch). Each key walks
+    its directory bucket in lockstep with the others, one sorted entry
+    per round, until it meets a key >= itself or the bucket ends."""
+    keys = fib.keys
+    if not len(keys):
         return np.zeros(len(h), dtype=bool)
-    return fib[np.minimum(np.searchsorted(fib, h), len(fib) - 1)] == h
+    t = (h >> fib.shift).astype(np.intp)
+    lo, hi = fib.dir[t], fib.dir[t + 1]
+    # round 1, every key at once: its bucket's first entry. Where the
+    # bucket is empty the (clamped) read lands in another bucket, whose
+    # keys differ from h in the top bits, so it cannot match
+    v = keys[np.minimum(lo, len(keys) - 1)]
+    found = v == h
+    # later rounds: only the keys still below an entry of their bucket
+    act = np.nonzero((v < h) & (hi - lo > 1))[0]
+    lo, hi, h = lo[act] + 1, hi[act], h[act]
+    while len(act):
+        v = keys[lo]
+        found[act[v == h]] = True
+        lo += 1
+        more = (v < h) & (lo < hi)
+        act, lo, hi, h = act[more], lo[more], hi[more], h[more]
+    return found
 
 
-def _route_bmp(fib: np.ndarray, depths: list[int], b: pd.DataFrame):
+def _route_bmp(fib: _FibIndex, depths: list[int], b: pd.DataFrame):
     """One batch of routes (h64, depth, key columns) → (H, own, bmp_ix): the
     (n, D) uint64 hash matrix, each route's own depth column, and its BMP
     pointer — the index into [0] + depths of the deepest strictly shorter
@@ -195,7 +247,7 @@ def _route_bmp(fib: np.ndarray, depths: list[int], b: pd.DataFrame):
     return H, own, np.where(hit.any(axis=1), D - np.argmax(hit[:, ::-1], axis=1), 0)
 
 
-def _insert_routes(bf: BloomFilter, fib: np.ndarray, depths: list[int], walk_cols: np.ndarray, b: pd.DataFrame) -> int:
+def _insert_routes(bf: BloomFilter, fib: _FibIndex, depths: list[int], walk_cols: np.ndarray, b: pd.DataFrame) -> int:
     """Insert one batch of routes into a filter — the reference's guided
     insert (ipfilter.py:78-122) as one numpy pass: all k hashes of the
     route; a hash-0 marker (not an item) at the s-th right turn of its
@@ -308,6 +360,16 @@ class PathLPM:
         self.fib = fib
         self.enc_bits = enc_bits
 
+    @property
+    def fib(self) -> np.ndarray:
+        return self._fib.keys
+
+    @fib.setter
+    def fib(self, keys: np.ndarray):
+        # the probe directory follows the keys, so a reassigned FIB takes
+        # effect in the kernels at once
+        self._fib = _FibIndex(keys)
+
     # ----------------------------------------------------------------- build
     @staticmethod
     def _share_weights(with_bmp: DataFrame, depths: list[int], base: float) -> list[float]:
@@ -414,8 +476,9 @@ class PathLPM:
 
                     def route_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         ix2len = np.array([0] + depths)
+                        fibx = _FibIndex(fib_bc.value)
                         for b in batches:
-                            bmp_ix = _route_bmp(fib_bc.value, depths, b)[2]
+                            bmp_ix = _route_bmp(fibx, depths, b)[2]
                             yield pd.DataFrame({"depth": b["depth"], "bmp_depth": ix2len[bmp_ix]})
 
                     bmps = prefix_df.select(*cols).mapInPandas(route_bmp, "depth int, bmp_depth int")
@@ -446,7 +509,7 @@ class PathLPM:
                 n_inserts_max = n_routes + 2 * sum(c * len(w) for c, w in zip(counts, walks))
                 if n_inserts_max <= local_build_max_inserts:
                     bf = BloomFilter(**bf_params)
-                    _insert_routes(bf, fib, depths, walk_cols, prefix_df.select(*cols).toPandas())
+                    _insert_routes(bf, _FibIndex(fib), depths, walk_cols, prefix_df.select(*cols).toPandas())
                 else:
                     # OR-merge the partial filters through the engine's
                     # hierarchical tree_merge — O(P * blob) bytes over the
@@ -458,8 +521,8 @@ class PathLPM:
                         fib_bc = sc.broadcast(fib)
 
                     def build_filter(batches: Iterator[pd.DataFrame]) -> tuple[list[BloomFilter], int]:
-                        bf = BloomFilter(**bf_params)
-                        return [bf], sum(_insert_routes(bf, fib_bc.value, depths, walk_cols, b) for b in batches)
+                        bf, fibx = BloomFilter(**bf_params), _FibIndex(fib_bc.value)
+                        return [bf], sum(_insert_routes(bf, fibx, depths, walk_cols, b) for b in batches)
 
                     # repartition the narrow route rows, then hash: the
                     # shuffle moves (prefix, depth), not D + 1 hash columns
@@ -515,15 +578,13 @@ class PathLPM:
         - ``bit_lookups``: Bloom bits read. The linear scan reads k per
           depth it visits, deepest first, down to the first depth the
           FIB confirms (all D depths when none does). The guided engine
-          reads one bit per descent step; then, at its deepest hit, the
-          ``enc_bits`` pointer bits and, when the decoded hypothesis is
-          a candidate, that hypothesis's remaining validation bits; then
-          k per depth its ``_scan`` visits.
-        - ``fib_probes``: FIB confirms made: one per depth whose k Bloom
-          bits all pass in the scan, plus one for a guided candidate
-          hypothesis, made whether or not its validation bits pass.
+          reads one bit per descent step and, at its deepest hit, the
+          ``enc_bits`` pointer bits; nothing after that.
+        - ``fib_probes``: FIB confirms made. Linear: one per depth whose
+          k Bloom bits all pass. Guided: one for a candidate hypothesis,
+          plus one per depth its fallback or exactness scan visits.
         - ``fell_back``: the guided hypothesis was rejected and the row
-          ran the linear scan below its deepest hit. Always false in
+          ran the scan below its deepest hit. Always false in
           linear mode and for rows the descent never hit.
 
         ``trunc`` must match the one the engine was built with (see
@@ -655,15 +716,18 @@ class PathLPM:
         return out.where(F.col("lpm_depth") == 0).unionByName(ok).unionByName(fixed)
 
     # ------------------------------------------------------- batch kernels
-    def _scan(self, H: np.ndarray, rows: np.ndarray, lo_col: np.ndarray, cap_col: np.ndarray):
+    def _scan(self, H: np.ndarray, rows: np.ndarray, lo_col: np.ndarray, cap_col: np.ndarray, bloom: bool = True):
         """The one LPM scan — the reference's linear probe
         (prototype/ipfilter.py:145-159) batched: for each
         row in ``rows``, walk the domain columns in (lo_col, cap_col]
         deepest first; at each column Bloom-probe all k hashes of the
         rows still unresolved, FIB-confirm the hits, and drop the rows
-        that confirm. Returns (answer_depth, bit_lookups, fib_probes) per
-        row: the depth is 0 where nothing in the interval confirms, and
-        the counters are the probes this walk actually made."""
+        that confirm. ``bloom=False`` skips the Bloom probe and asks the
+        FIB directly: the filter has no false negatives for FIB keys, so
+        the answers are the same and only the counters move. Returns
+        (answer_depth, bit_lookups, fib_probes) per row: the depth is 0
+        where nothing in the interval confirms, and the counters are the
+        probes this walk actually made."""
         nr = len(rows)
         ans = np.zeros(nr, dtype=np.int64)
         bits = np.zeros(nr, dtype=np.int64)
@@ -675,12 +739,13 @@ class PathLPM:
             act = unresolved & (lo_col < j) & (j <= cap_col)
             if not act.any():
                 continue
-            r = np.nonzero(act)[0]
-            bj = self._probe_slots(H[rows[r], j], np.broadcast_to(slots, (len(r), k)))
-            bits[r] += k
-            hr = r[bj.all(axis=1)]
+            hr = np.nonzero(act)[0]
+            if bloom:
+                bj = self._probe_slots(H[rows[hr], j], np.broadcast_to(slots, (len(hr), k)))
+                bits[hr] += k
+                hr = hr[bj.all(axis=1)]
             if len(hr):
-                ok = _fib_member(self.fib, H[rows[hr], j])
+                ok = _fib_member(self._fib, H[rows[hr], j])
                 fibp[hr] += 1
                 got = hr[ok]
                 ans[got] = self.depths[j]
@@ -694,7 +759,7 @@ class PathLPM:
 
     def _lookup_batch_guided(self, H: np.ndarray):
         n, D = H.shape
-        tree, bf = self.tree, self.bf
+        tree = self.tree
         col_of_val = {int(v): j for j, v in enumerate(self.depths)}
         node_col = np.array([col_of_val[int(v)] for v in tree.val], dtype=np.int64)
 
@@ -727,7 +792,6 @@ class PathLPM:
             return ans, bits_used, fibp, fell
 
         E = self.enc_bits
-        k = bf.k
         depths_arr = np.array(self.depths, dtype=np.int64)
         ix2len_arr = np.array(self.ix2len, dtype=np.int64)
 
@@ -759,28 +823,19 @@ class PathLPM:
         if cand.any():
             c = np.nonzero(cand)[0]
             hyp_col = np.searchsorted(depths_arr, hyp_depth[c])
-            hch = H[hit_rows[c], hyp_col]
-            # remaining validation hashes [count_hit+E, k) (ipfilter.py:228-230)
-            width = k - (slot0[c] + E)
-            maxw = int(width.max()) if len(width) else 0
-            ok = np.ones(len(c), dtype=bool)
-            if maxw > 0:
-                vs = (slot0[c] + E)[:, None] + np.arange(maxw, dtype=np.int64)[None, :]
-                vbits = self._probe_slots(hch, vs)
-                in_range = np.arange(maxw)[None, :] < width[:, None]
-                ok = (vbits.astype(bool) | ~in_range).all(axis=1)
-                bits_used[hit_rows[c]] += width
-            # exact FIB confirm (ipfilter.py:231)
-            fib_ok = _fib_member(self.fib, hch)
+            # exact FIB confirm (ipfilter.py:231). The reference first
+            # checks the remaining validation hashes (ipfilter.py:228-230),
+            # but a FIB key has all k of its bits set, so they cannot
+            # reject a hypothesis the FIB confirms
+            accept = _fib_member(self._fib, H[hit_rows[c], hyp_col])
             fibp[hit_rows[c]] += 1
-            accept = ok & fib_ok
             accepted[c] = accept
             acc = c[accept]
             ans[hit_rows[acc]] = hyp_depth[acc]
             lo_col[acc] = hyp_col[accept]
             cap_col[acc] += 1
         fell[hit_rows[~accepted]] = True
-        deeper, sb, sf = self._scan(H, hit_rows, lo_col, cap_col)
+        deeper, sb, sf = self._scan(H, hit_rows, lo_col, cap_col, bloom=False)
         bits_used[hit_rows] += sb
         fibp[hit_rows] += sf
         upd = deeper > 0

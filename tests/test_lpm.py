@@ -306,13 +306,16 @@ def test_unknown_weighting_is_a_value_error(spark):
 
 
 # sha256 of the sorted per-row (key, lpm_depth, fib_probes, fell_back)
-# of each table and lookup mode, pinned when linear mode and the guided
-# fallback had a scan of their own: the one deepest-first scan must make
-# the same FIB confirms and fall back on the same rows
+# of each table in linear mode, and of (key, lpm_depth, fell_back) in
+# guided mode, pinned when linear mode and the guided fallback had a
+# scan of their own: the one deepest-first scan must make the same FIB
+# confirms and fall back on the same rows. The guided fallback now asks
+# the FIB directly, so its fib_probes moved by design; test_guided_
+# counters_match_scalar_oracle checks them per row instead
 GOLDEN_COUNTERS_SHA = {
-    ("v4", "guided"): "94d01725e2d41b3add3cd532da780c6f48a990d6c3db272b66d60af6dcac8eb5",
+    ("v4", "guided"): "a35963d5b5aecb7851c051969357e9e6048d6f8f6d72cbea855dfe6327f210b8",
     ("v4", "linear"): "1005e888f32c95eda55e1702493501ce4f011a50669ee598bf536ed8aae21596",
-    ("path", "guided"): "9b87898dafd526685e1ef5adec56a73ecbcfb772cbd362c3381d14ad94f7254a",
+    ("path", "guided"): "adb60cc1e6798a814c2729d1f923b75c8a110ee484b6b0f9566b8f96a4004455",
     ("path", "linear"): "420099ac898c8180fe30a09474ced1ea7591ad0e80b1fff3d43d112298108174",
 }
 
@@ -350,5 +353,123 @@ def test_kernel_counters(spark, fixture_lpm, table):
             for r in rows:
                 c = eng.depths.index(r.lpm_depth) if r.lpm_depth else 0
                 assert r.bit_lookups == k * (D - c), (r, k, D)
-        pinned = sorted((r[key], r.lpm_depth, r.fib_probes, r.fell_back) for r in rows)
+        cols = [key, "lpm_depth", "fib_probes", "fell_back"] if mode == "linear" else [key, "lpm_depth", "fell_back"]
+        pinned = sorted(tuple(r[c] for c in cols) for r in rows)
         assert hashlib.sha256(repr(pinned).encode()).hexdigest() == GOLDEN_COUNTERS_SHA[table, mode], mode
+
+
+def _guided_oracle(eng: PathLPM, h: list[int]) -> tuple[int, int, int, bool]:
+    """One key's guided lookup, walked scalar from the reference's
+    (prototype/ipfilter.py:184-238), with this package's two changes: an
+    accepted hypothesis also checks the (hypothesis, hit] interval, and
+    the fallback asks the FIB directly. ``h[j]`` is the key's hash at
+    ``eng.depths[j]``. Returns (lpm_depth, bit_lookups, fib_probes,
+    fell_back)."""
+    bits, m, depths, t = eng.bf.bits, eng.bf.m, eng.depths, eng.tree
+    fib = set(eng.fib.tolist())
+
+    def bit(x: int, slot: int) -> int:
+        ix = ((x & 0xFFFFFFFF) + slot * ((x >> 32) | 1)) % 2**64 % m
+        return (int(bits[ix >> 3]) >> (ix & 7)) & 1
+
+    node, n_bits, hits, hit = t.root, 0, 0, -1
+    while node >= 0:  # descent on hash 0
+        j = depths.index(int(t.val[node]))
+        n_bits += 1
+        if bit(h[j], 0):
+            hits, hit, node = hits + 1, j, int(t.right[node])
+        else:
+            node = int(t.left[node])
+    if hit < 0:
+        return 0, n_bits, 0, False
+    E = eng.enc_bits
+    ptr = sum(bit(h[hit], hits + e) << e for e in range(E))
+    n_bits += E
+    hyp = depths[hit] if ptr == 2**E - 1 or ptr > len(depths) else ([0] + depths)[ptr]
+    n_fib, accepted = 0, False
+    if hyp > 0 and (ptr == 2**E - 1 or hyp < depths[hit]):
+        n_fib += 1
+        accepted = h[depths.index(hyp)] in fib
+    ans, lo, cap = (hyp, depths.index(hyp), hit) if accepted else (0, -1, hit - 1)
+    for j in range(cap, lo, -1):  # deepest first, FIB only
+        n_fib += 1
+        if h[j] in fib:
+            ans = depths[j]
+            break
+    return ans, n_bits, n_fib, not accepted
+
+
+@pytest.mark.parametrize("table", ["v4", "path"])
+def test_guided_counters_match_scalar_oracle(spark, fixture_lpm, table):
+    """Every guided output column equals the scalar walk's, per row:
+    ``lpm_depth``, ``bit_lookups`` (descent plus pointer bits only),
+    ``fib_probes`` (hypothesis plus one per depth the fallback or the
+    exactness check asks) and ``fell_back``. The key hashes come from the
+    JVM, independent of the kernel's own key hashing."""
+    from ip_filter_spark.operators.cidr import build_ip4_lpm, ip4_trunc, lookup_ip4
+    from ip_filter_spark.operators.lpm import _depth_hashes, _trunc
+
+    if table == "v4":
+        ips = set(np.random.default_rng(9).integers(0, 2**32, 300).tolist())
+        for c in NESTED_CIDRS:
+            addr, plen = c.split("/")
+            base = int.from_bytes(bytes(int(x) for x in addr.split(".")), "big")
+            ips |= {base - 1, base, base + (1 << (32 - int(plen))) - 1}
+        eng = build_ip4_lpm(spark.createDataFrame([(c,) for c in NESTED_CIDRS], "cidr string"), num_partitions=2)
+        q = spark.createDataFrame([(ip,) for ip in sorted(ips) if 0 <= ip < 2**32], "ip long")
+        key, trunc, got = "ip", ip4_trunc, lookup_ip4(eng, q, mode="guided")
+    else:
+        paths = {p for p, _ in FIXTURE_QUERIES} | {"a/b/zz", "x/y", "x/y/z", "m/n", "q", "zz", "a/k/z/w/v"}
+        paths |= {p for p, _ in FIXTURE_ROUTES} | {f"{p}/leaf/f" for p, _ in FIXTURE_ROUTES}
+        eng = fixture_lpm
+        q = spark.createDataFrame([(p,) for p in sorted(paths)], "path string")
+        key, trunc, got = "path", _trunc, fixture_lpm.lookup(q, mode="guided")
+    hashes = {
+        r[0]: [x % 2**64 for x in r[1:]]
+        for r in q.select(key, *_depth_hashes(F.col(key), eng.depths, trunc)).collect()
+    }
+    rows = got.select(key, "lpm_depth", "bit_lookups", "fib_probes", "fell_back").collect()
+    assert len(rows) == len(hashes)
+    for r in rows:
+        assert tuple(r[1:]) == _guided_oracle(eng, hashes[r[key]]), r
+    assert any(r.fell_back for r in rows) and any(r.lpm_depth and not r.fell_back for r in rows)
+
+
+@pytest.mark.parametrize(
+    "case", ["one_route", "edge_keys", "duplicates", "one_bucket", "last_bucket", "random_100k"]
+)
+def test_fib_directory_matches_isin(case):
+    """The radix-directory FIB confirm answers exactly ``np.isin`` on
+    tables that stress its bucket bounds."""
+    from ip_filter_spark.operators.lpm import _fib_member, _FibIndex
+
+    def u(*xs):
+        return np.array(xs, dtype=np.uint64)
+
+    rng = np.random.default_rng(17)
+    top = np.uint64(2**64 - 1)
+    rand = rng.integers(0, 2**64, 1000, dtype=np.uint64)
+    if case == "one_route":
+        fib = u(12345)
+        probes = np.concatenate([fib, fib - np.uint64(1), fib + np.uint64(1), u(0, top), rand])
+    elif case == "edge_keys":
+        fib = np.sort(np.concatenate([u(0, top), rand[:500]]))
+        probes = np.concatenate([u(0, top, 1, top - np.uint64(1)), rand])
+        assert _fib_member(_FibIndex(fib[1:-1]), u(0, top)).tolist() == [False, False]
+    elif case == "duplicates":
+        fib = np.sort(np.repeat(rand[:300], 3))
+        probes = np.concatenate([rand, rand + np.uint64(1)])
+    elif case == "one_bucket":
+        # 1k keys under one top-bits prefix: one bucket of 1k entries
+        fib = np.sort(np.uint64(0xABC) << np.uint64(52) | rng.integers(0, 2**40, 1000, dtype=np.uint64))
+        probes = np.concatenate([fib, fib + np.uint64(1), fib - np.uint64(1), rand])
+    elif case == "last_bucket":
+        fib = np.sort(np.concatenate([top - rng.integers(0, 2**50, 50, dtype=np.uint64), rand]))
+        probes = np.concatenate([fib[-60:], top - rng.integers(0, 2**50, 1000, dtype=np.uint64), u(top)])
+    else:
+        fib = np.sort(rng.integers(0, 2**64, 100_000, dtype=np.uint64))
+        probes = np.concatenate([fib, rng.integers(0, 2**64, 100_000, dtype=np.uint64)])
+    probes = rng.permutation(probes)
+    assert fib.dtype == probes.dtype == np.uint64
+    assert (_fib_member(_FibIndex(fib), probes) == np.isin(probes, fib)).all()
+    assert _fib_member(_FibIndex(fib), probes[:0]).shape == (0,)
