@@ -88,12 +88,6 @@ def ip6_to_bitpath(hex_col):
     return _bits_to_path(ip6_bits(hex_col))
 
 
-def ip4_prefix_path(ip_col, plen_col):
-    """(masked uint32, prefix_len) → bit path of the first plen bits —
-    the PathLPM 'prefix' column for a CIDR route."""
-    return _bits_to_path(ip4_bits(ip_col), plen_col)
-
-
 def parse_cidr4(cidr_col):
     """'1.0.0.0/24' → struct(prefix_path, depth): the PathLPM route row."""
     ip = ip4_from_dotted(F.split(cidr_col, "/")[0])

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
+from ip_filter_spark.arrow import combine, vec_matrix
 from ip_filter_spark.functions.text import tokens_expr
 from ip_filter_spark.lifetime import cut, pinned
 from ip_filter_spark.operators.joins import broadcast_pair_join
@@ -104,13 +105,6 @@ def _shingle_hashes_src(df: DataFrame, id_col: str, text_col: str, n: int, hash_
     whole = F.array(F.array_join(toks, " "))
     sh = F.when(n_sh >= 1, grams).otherwise(whole)
     return b.select("id", F.transform(sh, lambda s: shingle_hash31(s, hash_fn)).alias("hs"))
-
-
-def _combine(arr):
-    """ChunkedArray → contiguous Array (mapInArrow batches may chunk)."""
-    import pyarrow as pa
-
-    return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -220,8 +214,8 @@ def minhash_signatures(
         A = np.array(a_c, dtype=np.int64)
         B = np.array(b_c, dtype=np.int64)
         for b in batches:
-            ids = _combine(b.column(0))
-            hs = _combine(b.column(1))
+            ids = combine(b.column(0))
+            hs = combine(b.column(1))
             n = len(ids)
             if n == 0:
                 continue
@@ -291,6 +285,48 @@ def minhash_lsh_pairs(
         return _banded_pairs(sig, num_perm, bands, threshold, max_bucket)
 
 
+def _bucket_pairs(batches, max_bucket: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every in-bucket id pair of one shuffle partition's (bk, id) rows.
+
+    Sorts the partition's plain int64 columns once; for every bucket of
+    2..max_bucket rows it decodes all (i < j) pairs in closed form — no
+    per-bucket Python loop. Returns (id_a, id_b, capped): one row per
+    (bucket, pair), id_a <= id_b, plus the sorted distinct ids seen in an
+    over-cap bucket (empty, at no cost, when no bucket is over the cap).
+    An empty partition gives three empty arrays."""
+    bks, idsl = [], []
+    for b in batches:
+        bks.append(combine(b.column(0)).to_numpy(zero_copy_only=False))
+        idsl.append(combine(b.column(1)).to_numpy(zero_copy_only=False))
+    empty = np.empty(0, dtype=np.int64)
+    bk = np.concatenate(bks + [empty])
+    ids = np.concatenate(idsl + [empty])
+    if not len(bk):
+        return empty, empty, empty
+    order = np.lexsort((ids, bk))
+    bk, ids = bk[order], ids[order]
+    bnd = np.flatnonzero(np.r_[True, bk[1:] != bk[:-1], True])
+    sizes = np.diff(bnd)
+    keep = (sizes >= 2) & (sizes <= max_bucket)
+    st, sz = bnd[:-1][keep], sizes[keep]
+    over = sizes > max_bucket
+    capped = np.unique(ids[np.repeat(over, sizes)]) if over.any() else empty
+    # all (i < j) pairs of every kept bucket, closed-form: pair rank
+    # t within its bucket decodes to j = row of the triangle, i = t -
+    # j(j-1)/2 (float sqrt + integer guard — exact for t < 2^52)
+    m = sz * (sz - 1) // 2
+    goff = np.repeat(np.cumsum(m) - m, m)
+    gst = np.repeat(st, m)
+    t = np.arange(int(m.sum()), dtype=np.int64) - goff
+    j = ((1.0 + np.sqrt(8.0 * t + 1.0)) / 2.0).astype(np.int64)
+    lo = j * (j - 1) // 2
+    j = np.where(lo > t, j - 1, j)
+    lo = j * (j - 1) // 2
+    j = np.where(t - lo >= j, j + 1, j)
+    i = t - j * (j - 1) // 2
+    return ids[gst + i], ids[gst + j], capped
+
+
 def _banded_pairs(
     sig: DataFrame,
     n_components: int,
@@ -346,13 +382,13 @@ def _banded_pairs(
     def band_kern(batches):
         comp = np.array(comp_ix, dtype=np.int64)  # (bands, r)
         for b in batches:
-            ids_arr = _combine(b.column(0))
-            hs = _combine(b.column(1))
+            ids_arr = combine(b.column(0))
+            hs = combine(b.column(1))
             n = len(ids_arr)
             if n == 0:
                 continue
             ids = ids_arr.to_numpy(zero_copy_only=False)
-            S = hs.values.to_numpy(zero_copy_only=False).reshape(n, n_components)
+            S = vec_matrix(hs, "sig")
             bk = np.empty((n, bands), dtype=np.int64)
             for band in range(bands):
                 acc = np.full(n, band + 1, dtype=np.int64)
@@ -366,38 +402,7 @@ def _banded_pairs(
             )
 
     def pair_kern(batches):
-        bks, idsl = [], []
-        for b in batches:
-            bks.append(_combine(b.column(0)).to_numpy(zero_copy_only=False))
-            idsl.append(_combine(b.column(1)).to_numpy(zero_copy_only=False))
-        if not bks:
-            return
-        bk = np.concatenate(bks)
-        ids = np.concatenate(idsl)
-        order = np.lexsort((ids, bk))
-        bk, ids = bk[order], ids[order]
-        bnd = np.flatnonzero(np.r_[True, bk[1:] != bk[:-1], True])
-        sizes = np.diff(bnd)
-        keep = (sizes >= 2) & (sizes <= max_bucket)
-        st, sz = bnd[:-1][keep], sizes[keep]
-        if len(sz) == 0:
-            ea = np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays([pa.array(ea), pa.array(ea)], names=["id_a", "id_b"])
-            return
-        # all (i < j) pairs of every kept bucket, closed-form: pair rank
-        # t within its bucket decodes to j = row of the triangle, i = t -
-        # j(j-1)/2 (float sqrt + integer guard — exact for t < 2^52)
-        m = sz * (sz - 1) // 2
-        goff = np.repeat(np.cumsum(m) - m, m)
-        gst = np.repeat(st, m)
-        t = np.arange(int(m.sum()), dtype=np.int64) - goff
-        j = ((1.0 + np.sqrt(8.0 * t + 1.0)) / 2.0).astype(np.int64)
-        lo = j * (j - 1) // 2
-        j = np.where(lo > t, j - 1, j)
-        lo = j * (j - 1) // 2
-        j = np.where(t - lo >= j, j + 1, j)
-        i = t - j * (j - 1) // 2
-        pa_ids, pb_ids = ids[gst + i], ids[gst + j]
+        pa_ids, pb_ids, _ = _bucket_pairs(batches, max_bucket)
         # local pre-dedup (same pair from several bands in one task)
         # before the global distinct shuffle
         u = np.unique(np.stack([pa_ids, pb_ids], axis=1), axis=0)
@@ -409,48 +414,8 @@ def _banded_pairs(
         — the global groupBy sums them into the pair's band-collision
         count) plus one (id, NULL, 0) marker row per id seen in an
         over-cap bucket (the prefilter's capped-id escape hatch)."""
-        bks, idsl = [], []
-        for b in batches:
-            bks.append(_combine(b.column(0)).to_numpy(zero_copy_only=False))
-            idsl.append(_combine(b.column(1)).to_numpy(zero_copy_only=False))
-        ea = np.empty(0, dtype=np.int64)
-        if not bks:
-            return
-        bk = np.concatenate(bks)
-        ids = np.concatenate(idsl)
-        order = np.lexsort((ids, bk))
-        bk, ids = bk[order], ids[order]
-        bnd = np.flatnonzero(np.r_[True, bk[1:] != bk[:-1], True])
-        sizes = np.diff(bnd)
-        keep = (sizes >= 2) & (sizes <= max_bucket)
-        st, sz = bnd[:-1][keep], sizes[keep]
-        over = np.flatnonzero(sizes > max_bucket)
-        capped = (
-            np.unique(np.concatenate([ids[bnd[o] : bnd[o] + sizes[o]] for o in over]))
-            if len(over)
-            else ea
-        )
-        if len(sz) == 0:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(capped),
-                    pa.array(np.zeros(len(capped), dtype=np.int64), mask=np.ones(len(capped), dtype=bool)),
-                    pa.array(np.zeros(len(capped), dtype=np.int32)),
-                ],
-                names=["id_a", "id_b", "nb"],
-            )
-            return
-        m = sz * (sz - 1) // 2
-        goff = np.repeat(np.cumsum(m) - m, m)
-        gst = np.repeat(st, m)
-        t = np.arange(int(m.sum()), dtype=np.int64) - goff
-        j = ((1.0 + np.sqrt(8.0 * t + 1.0)) / 2.0).astype(np.int64)
-        lo = j * (j - 1) // 2
-        j = np.where(lo > t, j - 1, j)
-        lo = j * (j - 1) // 2
-        j = np.where(t - lo >= j, j + 1, j)
-        i = t - j * (j - 1) // 2
-        u, nb = np.unique(np.stack([ids[gst + i], ids[gst + j]], axis=1), axis=0, return_counts=True)
+        pa_ids, pb_ids, capped = _bucket_pairs(batches, max_bucket)
+        u, nb = np.unique(np.stack([pa_ids, pb_ids], axis=1), axis=0, return_counts=True)
         id_a = np.concatenate([u[:, 0], capped])
         id_b_vals = np.concatenate([u[:, 1], np.zeros(len(capped), dtype=np.int64)])
         id_b_mask = np.concatenate([np.zeros(len(u), dtype=bool), np.ones(len(capped), dtype=bool)])
@@ -547,12 +512,12 @@ def _verify_pairs(
             n = bt.num_rows
             if n == 0:
                 continue
-            ia = _combine(bt.column(bt.schema.get_field_index("id_a")))
-            ib = _combine(bt.column(bt.schema.get_field_index("id_b")))
-            sa = _combine(bt.column(bt.schema.get_field_index("sig_a")))
-            sb = _combine(bt.column(bt.schema.get_field_index("sig_b")))
-            SA = sa.values.to_numpy(zero_copy_only=False).reshape(n, n_components)
-            SB = sb.values.to_numpy(zero_copy_only=False).reshape(n, n_components)
+            ia = combine(bt.column(bt.schema.get_field_index("id_a")))
+            ib = combine(bt.column(bt.schema.get_field_index("id_b")))
+            sa = combine(bt.column(bt.schema.get_field_index("sig_a")))
+            sb = combine(bt.column(bt.schema.get_field_index("sig_b")))
+            SA = vec_matrix(sa, "sig_a")
+            SB = vec_matrix(sb, "sig_b")
             agree = (SA == SB).sum(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays([ia, ib, pa.array(agree)], names=["id_a", "id_b", "agree"])
 
@@ -681,8 +646,8 @@ def oph_signatures(
         pos_base = np.arange(2 * k)
         offs = np.arange(k)
         for b in batches:
-            ids = _combine(b.column(0))
-            hs = _combine(b.column(1))
+            ids = combine(b.column(0))
+            hs = combine(b.column(1))
             n = len(ids)
             if n == 0:
                 continue
@@ -792,8 +757,8 @@ def simhash_signatures(
 
     def kern(batches):
         for bt in batches:
-            ids = _combine(bt.column(0))
-            hs = _combine(bt.column(1))
+            ids = combine(bt.column(0))
+            hs = combine(bt.column(1))
             n = len(ids)
             if n == 0:
                 continue

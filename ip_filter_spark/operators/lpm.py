@@ -110,6 +110,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ip_filter_spark.arrow import uint64_view
 from ip_filter_spark.lifetime import cut, pinned
 from ip_filter_spark.operators.cidr import ip4_depth_hashes, ip4_key_array, ip4_trunc
 from ip_filter_spark.plans.obst import GuideTree
@@ -134,15 +135,6 @@ def _h64_expr(key_col, depth_col):
     bound and the ``exact_repair`` escape hatch)."""
     d = depth_col if hasattr(depth_col, "cast") else F.lit(depth_col)
     return F.xxhash64(d.cast("int"), key_col)
-
-
-def _arrow_int64(arr) -> np.ndarray:
-    """Arrow int64 array (no nulls) → uint64 numpy view, zero-copy."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    return arr.to_numpy(zero_copy_only=False).view(np.uint64)
 
 
 def _depth_hashes(key_col, depths: list[int], trunc) -> list:
@@ -356,7 +348,6 @@ class PathLPM:
         self.tree = tree
         self.depths = list(depths)  # sorted distinct route depths
         self.ix2len = [0] + self.depths
-        self.len2ix = {l: i for i, l in enumerate(self.ix2len)}
         self.fib = fib
         self.enc_bits = enc_bits
 
@@ -642,7 +633,7 @@ class PathLPM:
                         def hashes(s):
                             return ip4_depth_hashes(keys[s : s + _KERNEL_CHUNK], depths)
                     else:
-                        H = np.column_stack([_arrow_int64(c) for c in b.columns[n_keep:]])
+                        H = np.column_stack([uint64_view(c) for c in b.columns[n_keep:]])
 
                         def hashes(s):
                             return H[s : s + _KERNEL_CHUNK]

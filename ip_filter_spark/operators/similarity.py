@@ -7,7 +7,7 @@
   the fly — b seeded hyperplanes give a b-bit signature; candidates
   share the query's bucket or any multi-probe neighbor, then exact
   cosine re-ranks. Signature computation is a vectorized numpy matmul
-  inside one ``mapInPandas`` (Arrow batches).
+  per Arrow batch.
 - ``RHPIndex``: the persisted form — the signature table written
   partitioned by bucket, so a query prunes to ~(1 + b·multiprobe)
   PARTITIONS instead of scanning the corpus.
@@ -17,14 +17,21 @@
   clustered (i.e. real) embedding corpora.
 - ``embedding_near_dup_pairs``: all pairs with cosine >= threshold inside
   LSH buckets — embedding-based near-duplicate detection.
+- ``lloyd_kmeans``, ``IVFIndex.train_kmeans`` and ``PQCodebook.train``
+  are one distributed Lloyd pass (``_lloyd``) with three assign steps;
+  every PQ encoder is ``_pq_codes``.
+
+Every Python kernel here is a ``mapInArrow`` function: it reads its
+(n, dim) vectors through ``arrow.vec_matrix`` (a null or ragged vector
+raises ``ValueError`` naming the column), writes list outputs through
+``arrow.list_array`` and re-emits carried columns as the Arrow arrays
+it received.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -36,6 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ip_filter_spark.arrow import list_array, vec_matrix
 from ip_filter_spark.operators.joins import broadcast_pair_join
 
 
@@ -86,19 +94,18 @@ def rhp_signatures(
 
     schema = StructType([StructField("id", src.schema["id"].dataType, False), StructField("bucket", LongType(), False)])
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def assign(batches):
         P = bc.value
-        w = (np.uint64(1) << np.arange(P.shape[1], dtype=np.uint64))
+        w = np.uint64(1) << np.arange(P.shape[1], dtype=np.uint64)
         for b in batches:
-            if not len(b):
-                yield pd.DataFrame({"id": [], "bucket": []}).astype({"bucket": "int64"})
+            if not b.num_rows:
                 continue
-            M = np.vstack(b["v"].to_numpy()).astype(np.float32)
+            M = vec_matrix(b.column(1), vec_col).astype(np.float32)
             bits_m = (M @ P) > 0
             buckets = (bits_m.astype(np.uint64) * w[None, :]).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({"id": b["id"].to_numpy(), "bucket": buckets})
+            yield pa.RecordBatch.from_arrays([b.column(0), pa.array(buckets)], names=["id", "bucket"])
 
-    return src.mapInPandas(assign, schema=schema)
+    return src.mapInArrow(assign, schema=schema)
 
 
 def _probe_buckets(query_vec, bits: int, seed: int, multiprobe: int, budget: int | None = None) -> list[int]:
@@ -216,11 +223,98 @@ class RHPIndex:
 
 
 # --------------------------------------------------------------------- IVF
-def _assign_cids(vec_series, C: np.ndarray) -> np.ndarray:
+def _unit(M: np.ndarray) -> np.ndarray:
+    """Rows (last axis) scaled to unit L2 norm; zero rows stay zero."""
+    return M / np.maximum(np.linalg.norm(M, axis=-1, keepdims=True), 1e-12)
+
+
+def _assign_cids(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Nearest-centroid ids by cosine (rows and centroids unit-normed)."""
-    M = np.vstack(vec_series.to_numpy()).astype(np.float32)
-    M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    return np.argmax(M @ C.T, axis=1).astype(np.int32)
+    return np.argmax(_unit(V.astype(np.float32)) @ C.T, axis=1).astype(np.int32)
+
+
+def _seed_rows(emb: DataFrame, id_col: str, vec_col: str, k: int) -> np.ndarray:
+    """The vectors of the k rows with the smallest xxhash64(id), float64
+    (k, dim): the deterministic seeding of every trainer here — identity-
+    hash order, invariant to partitioning and cluster size, no RNG."""
+    src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    seeds = src.orderBy(F.xxhash64(F.col("id").cast("string"))).limit(k).collect()
+    return np.vstack([np.asarray(r.v, dtype=np.float64) for r in seeds])
+
+
+def _lloyd(vecs: DataFrame, C: np.ndarray, iters: int, assign, post=None) -> tuple[np.ndarray, list[float], int]:
+    """Distributed Lloyd iterations over the one list column of ``vecs``.
+
+    ``C`` is a (g, k, d) codebook: g codebooks of k centroids, one per
+    d-wide slice of a vector (g = 1 for k-means, g = m subspaces for
+    PQ). ``assign(V, C)`` maps one batch's (n, g·d) vector view to
+    ``(X (n, g, d), codes (n, g), cost)`` — each trainer keeps its own
+    distance arithmetic. Each iteration is ONE mapInArrow pass emitting
+    one (Σvec, count, cost) partial per partition — O(P·g·k·d) to the
+    driver, never O(rows). The driver folds the partials in partition
+    order, moves every centroid that won a row to its members' mean
+    (the others stay put) and applies ``post`` (IVF renormalises).
+
+    Returns (codebook, per-iteration costs, rows assigned in the last
+    pass)."""
+    sc = vecs.sparkSession.sparkContext
+    name = vecs.columns[0]
+    costs: list[float] = []
+    n_rows = 0
+    for _ in range(iters):
+        bc = sc.broadcast(C)
+
+        def partials(batches):
+            Cl = bc.value
+            g, k, d = Cl.shape
+            sums = np.zeros((g, k, d), dtype=np.float64)
+            cnts = np.zeros((g, k), dtype=np.int64)
+            cost = 0.0
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                X, codes, c = assign(vec_matrix(b.column(0), name), Cl)
+                cost += c
+                for s in range(g):
+                    np.add.at(sums[s], codes[:, s], X[:, s, :])
+                    np.add.at(cnts[s], codes[:, s], 1)
+            yield pa.RecordBatch.from_arrays(
+                [list_array(sums.reshape(1, -1)), list_array(cnts.reshape(1, -1)), pa.array([cost])],
+                names=["s", "n", "c"],
+            )
+
+        parts = vecs.mapInArrow(partials, schema="s array<double>, n array<bigint>, c double").collect()
+        sums = np.zeros(C.shape, dtype=np.float64)
+        cnts = np.zeros(C.shape[:2], dtype=np.int64)
+        cost = 0.0
+        for r in parts:
+            sums += np.asarray(r.s).reshape(sums.shape)
+            cnts += np.asarray(r.n).reshape(cnts.shape)
+            cost += r.c
+        nz = cnts > 0
+        C = C.astype(np.float64)
+        C[nz] = sums[nz] / cnts[nz][:, None]
+        if post is not None:
+            C = post(C)
+        costs.append(cost)
+        n_rows = int(cnts[0].sum())
+    return C, costs, n_rows
+
+
+def _euclid_assign(V: np.ndarray, C: np.ndarray):
+    """k-means assign step: nearest centroid by squared Euclidean
+    distance, plus the batch's inertia under that assignment."""
+    M = V.astype(np.float64)
+    Cl = C[0]
+    d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ Cl.T) + (Cl * Cl).sum(axis=1)[None, :]
+    cid = np.argmin(d2, axis=1)
+    cost = float(np.maximum(d2[np.arange(len(M)), cid], 0.0).sum())
+    return M[:, None, :], cid[:, None], cost
+
+
+def _cosine_assign(V: np.ndarray, C: np.ndarray):
+    """IVF assign step: float32 cosine against unit-normed centroids."""
+    return V.astype(np.float32)[:, None, :], _assign_cids(V, C[0])[:, None], 0.0
 
 
 def lloyd_kmeans(
@@ -233,11 +327,11 @@ def lloyd_kmeans(
 
     Seeding is deterministic: the k rows with smallest xxhash64(id) —
     identity-hash order, invariant to partitioning and cluster size.
-    Each iteration is ONE mapInPandas pass emitting per-partition
-    (cid, Σvec, count, cost) partials — O(P·k·D) to the driver, never
-    O(rows); the new centroids AND the inertia of the assignment just
-    made come from the same pass (no separate cost job).  Distances use
-    the ‖x‖² − 2xᵀc + ‖c‖² expansion (no n×k×D intermediate).
+    Each iteration is ONE ``mapInArrow`` pass (``_lloyd``) emitting one
+    (Σvec, count, cost) partial per partition — O(P·k·D) to the driver,
+    never O(rows); the new centroids AND the inertia of the assignment
+    just made come from the same pass (no separate cost job).  Distances
+    use the ‖x‖² − 2xᵀc + ‖c‖² expansion (no n×k×D intermediate).
 
     Lloyd's descent guarantee: inertia is non-increasing per iteration
     in exact arithmetic (the assign step can't increase cost given
@@ -246,55 +340,9 @@ def lloyd_kmeans(
     partial-sum fold-order noise.
 
     Returns (centroids float64[k, D], per-iteration costs, n_rows)."""
-    src = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    seeds = src.orderBy(F.xxhash64(F.col("id").cast("string"))).limit(k).collect()
-    C = np.vstack([np.asarray(r.v, dtype=np.float64) for r in seeds])
-    dim = C.shape[1]
-    sc = emb.sparkSession.sparkContext
-    costs: list[float] = []
-    n_rows = 0
-    for _ in range(iters):
-        bc = sc.broadcast(C)
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cl = bc.value
-            c_sq = (Cl * Cl).sum(axis=1)
-            sums = np.zeros((len(Cl), dim), dtype=np.float64)
-            cnts = np.zeros(len(Cl), dtype=np.int64)
-            cost = 0.0
-            for b in batches:
-                if not len(b):
-                    continue
-                M = np.vstack(b["v"].to_numpy()).astype(np.float64)
-                d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ Cl.T) + c_sq[None, :]
-                cid = np.argmin(d2, axis=1)
-                cost += float(np.maximum(d2[np.arange(len(M)), cid], 0.0).sum())
-                np.add.at(sums, cid, M)
-                np.add.at(cnts, cid, 1)
-            c_col = np.zeros(len(Cl))
-            c_col[0] = cost  # partition cost rides the cid-0 row only
-            yield pd.DataFrame(
-                {"cid": np.arange(len(Cl)), "s": list(sums), "n": cnts, "c": c_col}
-            )
-
-        agg = src.select("v").mapInPandas(
-            partials, schema="cid int, s array<double>, n long, c double"
-        ).collect()
-        sums = np.zeros((k, dim), dtype=np.float64)
-        cnts = np.zeros(k, dtype=np.int64)
-        cost = 0.0
-        for r in agg:
-            sums[r.cid] += np.asarray(r.s)
-            cnts[r.cid] += r.n
-            cost += r.c
-        nz = cnts > 0
-        C = C.copy()
-        C[nz] = sums[nz] / cnts[nz, None]
-        costs.append(cost)
-        n_rows = int(cnts.sum())
-    return C, costs, n_rows
+    vecs = emb.select(F.col(vec_col).cast("array<double>").alias(vec_col))
+    C, costs, n_rows = _lloyd(vecs, _seed_rows(emb, id_col, vec_col, k)[None], iters, _euclid_assign)
+    return C[0], costs, n_rows
 
 
 class IVFIndex:
@@ -307,10 +355,11 @@ class IVFIndex:
     budget yields much higher recall.
 
     Spark shape: training is Lloyd iterations where ONLY (nlist x dim)
-    partial sums leave the executors (mapInPandas partials, driver
-    update — the classic distributed k-means); the index is a parquet
-    table partitioned by cid, so queries prune to nprobe partitions.
-    Deterministic: centroid seeds are the hash-smallest ids, no RNG."""
+    partial sums leave the executors (``_lloyd``'s mapInArrow partials,
+    driver update — the classic distributed k-means); the index is a
+    parquet table partitioned by cid, so queries prune to nprobe
+    partitions. Deterministic: centroid seeds are the hash-smallest ids,
+    no RNG."""
 
     def __init__(self, spark, path: str, centroids: np.ndarray, id_col: str, vec_col: str):
         self.spark = spark
@@ -323,43 +372,11 @@ class IVFIndex:
     def train_kmeans(
         cls, emb: DataFrame, nlist: int, id_col: str, vec_col: str, iters: int = 5
     ) -> np.ndarray:
-        src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        seeds = src.orderBy(F.xxhash64(F.col("id").cast("string"))).limit(nlist).collect()
-        C = np.vstack([np.asarray(r.v, dtype=np.float32) for r in seeds])
-        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        dim = C.shape[1]
-        sc = emb.sparkSession.sparkContext
-        for _ in range(iters):
-            bc = sc.broadcast(C)
-
-            def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                Cl = bc.value
-                sums = np.zeros((len(Cl), dim), dtype=np.float64)
-                cnts = np.zeros(len(Cl), dtype=np.int64)
-                for b in batches:
-                    if not len(b):
-                        continue
-                    M = np.vstack(b["v"].to_numpy()).astype(np.float32)
-                    cid = _assign_cids(b["v"], Cl)
-                    np.add.at(sums, cid, M)
-                    np.add.at(cnts, cid, 1)
-                yield pd.DataFrame(
-                    {"cid": np.arange(len(Cl)), "s": list(sums), "n": cnts}
-                )
-
-            agg = emb.select(F.col(vec_col).alias("v")).mapInPandas(
-                partials, schema="cid int, s array<double>, n long"
-            ).collect()
-            sums = np.zeros((nlist, dim), dtype=np.float64)
-            cnts = np.zeros(nlist, dtype=np.int64)
-            for r in agg:
-                sums[r.cid] += np.asarray(r.s)
-                cnts[r.cid] += r.n
-            nz = cnts > 0
-            C = C.astype(np.float64)
-            C[nz] = sums[nz] / cnts[nz, None]
-            C = (C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)).astype(np.float32)
-        return C
+        C = _unit(_seed_rows(emb, id_col, vec_col, nlist).astype(np.float32))
+        C, _, _ = _lloyd(
+            emb.select(vec_col), C[None], iters, _cosine_assign, post=lambda C: _unit(C).astype(np.float32)
+        )
+        return C[0]
 
     @classmethod
     def build(
@@ -375,19 +392,17 @@ class IVFIndex:
         bc = emb.sparkSession.sparkContext.broadcast(C)
         src = emb.select(id_col, vec_col)
 
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def assign(batches):
             for b in batches:
-                if not len(b):
-                    yield b.assign(cid=np.zeros(0, dtype=np.int32))
+                if not b.num_rows:
                     continue
-                b = b.copy()
-                b["cid"] = _assign_cids(b[vec_col], bc.value)
-                yield b
+                cid = _assign_cids(vec_matrix(b.column(1), vec_col), bc.value)
+                yield pa.RecordBatch.from_arrays([*b.columns, pa.array(cid)], names=[id_col, vec_col, "cid"])
 
         # fresh StructType: StructType.add mutates in place, and df.schema
         # hands back the live object — mutating it corrupts src itself
         schema = StructType(list(src.schema.fields) + [StructField("cid", IntegerType(), False)])
-        src.mapInPandas(assign, schema=schema).write.mode("overwrite").partitionBy("cid").parquet(path)
+        src.mapInArrow(assign, schema=schema).write.mode("overwrite").partitionBy("cid").parquet(path)
         return cls(emb.sparkSession, path, C, id_col, vec_col)
 
     def probe_cids(self, query_vec, nprobe: int) -> list[int]:
@@ -528,14 +543,36 @@ def quantized_dot_topk(
     )
 
 
+def _pq_codes(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """PQ encoder: per subspace s, the codeword j minimising
+    ‖x_s − c_sj‖², i.e. ‖c_sj‖² − 2·x_s·c_sj (‖x_s‖² is constant per
+    row). X is (n, dim) or its (n, m, dsub) float64 split, C the
+    (m, k, dsub) codebooks; int32 (n, m)."""
+    m, _, dsub = C.shape
+    X = X.astype(np.float64, copy=False).reshape(len(X), m, dsub)
+    codes = np.empty((len(X), m), dtype=np.int32)
+    for s in range(C.shape[0]):
+        d2 = (C[s] ** 2).sum(1)[None, :] - 2.0 * (X[:, s, :] @ C[s].T)
+        codes[:, s] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _pq_assign(V: np.ndarray, C: np.ndarray):
+    """PQ Lloyd assign step: float64 subvectors and their ``_pq_codes``."""
+    m, _, dsub = C.shape
+    X = V.astype(np.float64).reshape(len(V), m, dsub)
+    return X, _pq_codes(X, C), 0.0
+
+
 class PQCodebook:
     """Product quantization (Jégou, Douze & Schmid, TPAMI 2011): the
     vector dimension splits into ``m`` subspaces; each subspace gets its
-    own ``k``-centroid codebook (distributed Lloyd — the IVF trainer's
-    pattern, but all m subspaces learn in the SAME passes). A vector
-    encodes as m small ints: m bytes instead of 4*dim float32 —
-    (4*dim/m)x compression, the memory regime that makes billion-vector
-    ANN fit a cluster's RAM.
+    own ``k``-centroid codebook (distributed Lloyd — the same ``_lloyd``
+    pass as the IVF trainer, with all m subspaces learning in the SAME
+    passes; ``_pq_codes`` is the one encoder for training, ``encode``
+    and the IVF-PQ build). A vector encodes as m small ints: m bytes
+    instead of 4*dim float32 — (4*dim/m)x compression, the memory
+    regime that makes billion-vector ANN fit a cluster's RAM.
 
     Query scoring is Asymmetric Distance Computation (ADC): the query
     precomputes an (m x k) lookup table of per-subspace partial dots;
@@ -562,78 +599,28 @@ class PQCodebook:
         vec_col: str = "embedding",
         iters: int = 3,
     ) -> "PQCodebook":
-        src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        seeds = src.orderBy(F.xxhash64(F.col("id").cast("string"))).limit(k).collect()
-        S = np.vstack([np.asarray(r.v, dtype=np.float64) for r in seeds])  # (k, dim)
+        S = _seed_rows(emb, id_col, vec_col, k)  # (k, dim)
         dim = S.shape[1]
-        assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-        dsub = dim // m
-        C = S.reshape(k, m, dsub).transpose(1, 0, 2).copy()  # (m, k, dsub)
-        sc = emb.sparkSession.sparkContext
-        for _ in range(iters):
-            bc = sc.broadcast(C)
-
-            def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                Cl = bc.value  # (m, k, dsub)
-                mm, kk, dd = Cl.shape
-                sums = np.zeros((mm, kk, dd), dtype=np.float64)
-                cnts = np.zeros((mm, kk), dtype=np.int64)
-                for b in batches:
-                    if not len(b):
-                        continue
-                    M = np.vstack(b["v"].to_numpy()).astype(np.float64)
-                    X = M.reshape(len(M), mm, dd)
-                    for s in range(mm):
-                        # L2 assignment: argmin ||x - c||^2 = argmin (|c|^2 - 2 x.c)
-                        d2 = (Cl[s] ** 2).sum(1)[None, :] - 2.0 * (X[:, s, :] @ Cl[s].T)
-                        a = np.argmin(d2, axis=1)
-                        np.add.at(sums[s], a, X[:, s, :])
-                        np.add.at(cnts[s], a, 1)
-                yield pd.DataFrame(
-                    {
-                        "s": np.repeat(np.arange(mm), kk),
-                        "j": np.tile(np.arange(kk), mm),
-                        "vec": list(sums.reshape(mm * kk, dd)),
-                        "n": cnts.reshape(mm * kk),
-                    }
-                )
-
-            agg = (
-                src.select("v")
-                .mapInPandas(partials, schema="s int, j int, vec array<double>, n long")
-                .collect()
-            )
-            sums = np.zeros((m, k, dsub), dtype=np.float64)
-            cnts = np.zeros((m, k), dtype=np.int64)
-            for r in agg:
-                sums[r.s, r.j] += np.asarray(r.vec)
-                cnts[r.s, r.j] += r.n
-            nz = cnts > 0
-            C[nz] = sums[nz] / cnts[nz][:, None]
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m {m}")
+        C = S.reshape(k, m, dim // m).transpose(1, 0, 2).copy()  # (m, k, dsub)
+        C, _, _ = _lloyd(emb.select(vec_col), C, iters, _pq_assign)
         return cls(C)
 
     def encode(self, emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         """(id, codes array<int>[m]) — one Arrow pass."""
         bc = emb.sparkSession.sparkContext.broadcast(self.C)
 
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cl = bc.value
-            mm, kk, dd = Cl.shape
+        def assign(batches):
             for b in batches:
-                if not len(b):
-                    yield pd.DataFrame({"id": [], "codes": []})
+                if not b.num_rows:
                     continue
-                M = np.vstack(b["v"].to_numpy()).astype(np.float64)
-                X = M.reshape(len(M), mm, dd)
-                codes = np.empty((len(M), mm), dtype=np.int32)
-                for s in range(mm):
-                    d2 = (Cl[s] ** 2).sum(1)[None, :] - 2.0 * (X[:, s, :] @ Cl[s].T)
-                    codes[:, s] = np.argmin(d2, axis=1)
-                yield pd.DataFrame({"id": b["id"].to_numpy(), "codes": list(codes)})
+                codes = _pq_codes(vec_matrix(b.column(1), vec_col), bc.value)
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(0).cast(pa.int64()), list_array(codes)], names=["id", "codes"]
+                )
 
-        return emb.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-        ).mapInPandas(assign, schema="id bigint, codes array<int>")
+        return emb.select(id_col, vec_col).mapInArrow(assign, schema="id bigint, codes array<int>")
 
     def adc_score_expr(self, query_vec) -> "F.Column":
         """Approximate dot(query, x) from the codes column, as a pure
@@ -689,25 +676,21 @@ class IVFPQIndex:
         bc_c = spark.sparkContext.broadcast(centroids)
         bc_q = spark.sparkContext.broadcast(pq.C)
 
-        def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            Cc, Cq = bc_c.value, bc_q.value
-            mm, kk, dd = Cq.shape
+        def fused(batches):
             for b in batches:
-                if not len(b):
-                    yield pd.DataFrame({"id": [], "cid": [], "codes": []})
+                if not b.num_rows:
                     continue
-                M = np.vstack(b["v"].to_numpy()).astype(np.float64)
-                cid = _assign_cids(b["v"], Cc)
-                X = M.reshape(len(M), mm, dd)
-                codes = np.empty((len(M), mm), dtype=np.int32)
-                for s in range(mm):
-                    d2 = (Cq[s] ** 2).sum(1)[None, :] - 2.0 * (X[:, s, :] @ Cq[s].T)
-                    codes[:, s] = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {"id": b["id"].to_numpy(), "cid": cid.astype("int32"), "codes": list(codes)}
+                V = vec_matrix(b.column(1), vec_col)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column(0).cast(pa.int64()),
+                        pa.array(_assign_cids(V, bc_c.value)),
+                        list_array(_pq_codes(V, bc_q.value)),
+                    ],
+                    names=["id", "cid", "codes"],
                 )
 
-        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(
+        emb.select(id_col, vec_col).mapInArrow(
             fused, schema="id bigint, cid int, codes array<int>"
         ).write.mode("overwrite").partitionBy("cid").parquet(path)
         return cls(spark, path, centroids, pq, id_col)
@@ -756,7 +739,7 @@ def exact_gram(
     scaled product is < 2**(2*(scale_bits+2)); at scale_bits=14 that is
     2**32 per row pair-term, leaving 2**31 rows of headroom in int64.
 
-    Shape at 100 TB: one ``mapInArrow``-style pass computes a per-batch
+    Shape at 100 TB: one ``mapInArrow`` pass computes a per-batch
     numpy ``Xs.T @ Xs`` (vectorized, D^2 ints per BATCH regardless of
     batch rows), partitions emit D*(D+1)/2 upper-triangle cells, and one
     tiny groupBy over <= D^2 keys folds them — the classic map-side
@@ -771,28 +754,23 @@ def exact_gram(
     )
     scale = float(2**scale_bits)
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fold(batches):
         acc = None
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xs = np.floor(X * scale).astype(np.int64)
+            Xs = np.floor(vec_matrix(b.column(0), vec_col).astype(np.float64) * scale).astype(np.int64)
             G = Xs.T @ Xs
             acc = G if acc is None else acc + G
         if acc is None:
             return
-        D = acc.shape[0]
-        iu, ju = np.triu_indices(D)
-        yield pd.DataFrame(
-            {
-                "pos_i": iu.astype(np.int32),
-                "pos_j": ju.astype(np.int32),
-                "scaled_sum": acc[iu, ju],
-            }
+        iu, ju = np.triu_indices(acc.shape[0])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(iu.astype(np.int32)), pa.array(ju.astype(np.int32)), pa.array(acc[iu, ju])],
+            names=["pos_i", "pos_j", "scaled_sum"],
         )
 
-    partials = df.select(vec_col).mapInPandas(fold, schema=out_schema)
+    partials = df.select(vec_col).mapInArrow(fold, schema=out_schema)
     return partials.groupBy("pos_i", "pos_j").agg(
         F.sum("scaled_sum").alias("scaled_sum")
     )
@@ -833,7 +811,8 @@ def jl_project(
     index size and per-distance cost by D/out_dim.
 
     Shape at 100 TB: map-only — one vectorized numpy matmul per Arrow
-    batch inside ``mapInPandas``; the (D x out_dim) matrix is rebuilt
+    batch inside ``mapInArrow``, the id columns passed through as the
+    Arrow arrays they arrived in; the (D x out_dim) matrix is rebuilt
     from (dim, out_dim, seed) inside each task (microseconds for any
     practical D), so nothing is broadcast and no shuffle is introduced:
     the projection inherits the input's partitioning unchanged.
@@ -844,20 +823,19 @@ def jl_project(
         + [StructField(out_col, ArrayType(DoubleType(), False), False)]
     )
 
-    def proj(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def proj(batches):
         R = None
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = vec_matrix(b.column(len(id_cols)), vec_col).astype(np.float64)
             if R is None:
                 R = jl_sign_matrix(X.shape[1], out_dim, seed)
-            P = X @ R
-            out = pdf[list(id_cols)].copy()
-            out[out_col] = list(P)
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                b.columns[: len(id_cols)] + [list_array(X @ R)], names=[*id_cols, out_col]
+            )
 
-    return df.select(*id_cols, vec_col).mapInPandas(proj, schema=out_schema)
+    return df.select(*id_cols, vec_col).mapInArrow(proj, schema=out_schema)
 
 
 def pca_from_gram(

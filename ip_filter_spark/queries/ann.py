@@ -610,7 +610,7 @@ def gram_matrix_exact_emb(spark, sf_dir):
     every cell is an order-independent BIGINT sum: both engines compute
     bit-identical integers, no float fold-order anywhere. Spark shape is
     the map-side matrix accumulation (per-batch numpy Xs.T @ Xs inside
-    mapInPandas, D^2 ints per partition, one tiny groupBy over <= D^2
+    mapInArrow, D^2 ints per partition, one tiny groupBy over <= D^2
     keys) — shuffle volume O(partitions * D^2), never O(rows); the
     oracle replays the same quantized products via a positional
     self-join."""
@@ -807,9 +807,10 @@ def kmeans_inertia_emb(spark, sf_dir):
     can't given assignments) — a provable-by-construction invariant in
     the bound-column style, checked at 1e-9 relative tolerance for
     float fold-order noise, plus a strict overall decrease (measured
-    ≥ 20% at sf0.001–0.1).  The heavy pass is one mapInPandas per
-    iteration emitting O(P·k·D) partials (Σvec, count, cost per
-    centroid) — never O(rows) to the driver; seeding is identity-hash
+    ≥ 20% at sf0.001–0.1).  The heavy pass is one mapInArrow per
+    iteration emitting one O(k·D) partial per partition (Σvec and count
+    per centroid, plus the partition's cost) — never O(rows) to the
+    driver; seeding is identity-hash
     deterministic.  Exact anchors: n_vectors, k, iters."""
     _ensure_shipped(spark)
     from ip_filter_spark.operators.similarity import lloyd_kmeans

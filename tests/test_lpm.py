@@ -139,17 +139,17 @@ def test_arrow_int64_view_paths():
     import numpy as np
     import pyarrow as pa
 
-    from ip_filter_spark.operators.lpm import _arrow_int64
+    from ip_filter_spark.arrow import uint64_view
 
     vals = [0, 1, -1, 2**63 - 1, -(2**63), 42, -12345]
     expect = np.array(vals, dtype=np.int64).view(np.uint64)
 
     dense = pa.array(vals, type=pa.int64())
-    assert (_arrow_int64(dense) == expect).all()
-    assert (_arrow_int64(dense.slice(2, 4)) == expect[2:6]).all()
+    assert (uint64_view(dense) == expect).all()
+    assert (uint64_view(dense.slice(2, 4)) == expect[2:6]).all()
     chunked = pa.chunked_array([pa.array(vals[:3], type=pa.int64()), pa.array(vals[3:], type=pa.int64())])
-    assert (_arrow_int64(chunked) == expect).all()
-    assert _arrow_int64(pa.array([], type=pa.int64())).shape == (0,)
+    assert (uint64_view(chunked) == expect).all()
+    assert uint64_view(pa.array([], type=pa.int64())).shape == (0,)
 
 
 def test_exact_repair_fixes_forced_fib_collision(spark):

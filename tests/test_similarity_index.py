@@ -171,3 +171,124 @@ def test_pca_from_gram_matches_direct_eigh(spark):
     assert vals[0] >= vals[-1] >= -1e-9 * vals.sum()
     # components reconstruct the Gram: V diag(vals) V^T == G
     assert np.allclose(vecs @ np.diag(vals) @ vecs.T, G, atol=1e-8)
+
+
+def _unit_rows(M):
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _one_batch_corpus(spark, n=120, dim=8, seed=21):
+    """Four float32 clusters in ONE partition and ONE Arrow batch, rows in
+    list order, so each trainer's single partial equals a driver-side
+    numpy pass over the same matrix, operation for operation. Also
+    returns the row indices ordered by Spark's xxhash64(id) — the
+    trainers' seeding order."""
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((4, dim)) * 4.0
+    X = (centers[rng.integers(0, 4, n)] + rng.standard_normal((n, dim))).astype(np.float32)
+    rows = [(int(i) * 7 + 3, [float(x) for x in X[i]]) for i in range(n)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    h = {r.vec_id: r.h for r in emb.select("vec_id", F.xxhash64(F.col("vec_id").cast("string")).alias("h")).collect()}
+    by_hash = sorted(range(n), key=lambda i: h[rows[i][0]])
+    return emb, X, [r[0] for r in rows], by_hash
+
+
+def test_trainers_equal_numpy_replicas(spark):
+    """The three distributed Lloyd trainers share one partial-sum pass;
+    each must still equal an in-test numpy replica of its own algorithm
+    exactly: Euclidean k-means (centroids and per-iteration inertia),
+    spherical IVF k-means in float32, and PQ codebooks plus codes."""
+    from ip_filter_spark.operators.similarity import IVFIndex, PQCodebook, lloyd_kmeans
+
+    emb, X32, ids, by_hash = _one_batch_corpus(spark)
+    X = X32.astype(np.float64)
+    n, k, iters = len(X), 5, 3
+
+    # classic Lloyd: squared Euclidean via the ‖x‖² − 2x·c + ‖c‖² expansion
+    C = X[by_hash[:k]].copy()
+    costs = []
+    for _ in range(iters):
+        d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
+        cid = np.argmin(d2, axis=1)
+        costs.append(float(np.maximum(d2[np.arange(n), cid], 0.0).sum()))
+        sums = np.zeros_like(C)
+        np.add.at(sums, cid, X)
+        cnts = np.bincount(cid, minlength=k)
+        C = C.copy()
+        C[cnts > 0] = sums[cnts > 0] / cnts[cnts > 0, None]
+    got_C, got_costs, got_n = lloyd_kmeans(emb, "vec_id", "embedding", k=k, iters=iters)
+    assert got_n == n
+    assert np.array_equal(got_C, C)
+    assert got_costs == costs
+
+    # IVF: float32 cosine assignment, float64 means, renormalised to float32
+    C = _unit_rows(X32[by_hash[:k]])
+    for _ in range(iters):
+        cid = np.argmax(_unit_rows(X32) @ C.T, axis=1).astype(np.int32)
+        sums = np.zeros(C.shape, dtype=np.float64)
+        np.add.at(sums, cid, X32)
+        cnts = np.bincount(cid, minlength=k)
+        C = C.astype(np.float64)
+        C[cnts > 0] = sums[cnts > 0] / cnts[cnts > 0, None]
+        C = _unit_rows(C).astype(np.float32)
+    got = IVFIndex.train_kmeans(emb, k, "vec_id", "embedding", iters)
+    assert got.dtype == np.float32 and np.array_equal(got, C)
+
+    # PQ: m subspaces, argmin ‖c‖² − 2x·c per subspace, all in one pass
+    m, kq = 4, 6
+    dsub = X.shape[1] // m
+    C = X[by_hash[:kq]].reshape(kq, m, dsub).transpose(1, 0, 2).copy()
+    Xs = X.reshape(n, m, dsub)
+
+    def codes_of(C):
+        out = np.empty((n, m), dtype=np.int32)
+        for s in range(m):
+            out[:, s] = np.argmin((C[s] ** 2).sum(1)[None, :] - 2.0 * (Xs[:, s, :] @ C[s].T), axis=1)
+        return out
+
+    for _ in range(iters):
+        codes = codes_of(C)
+        for s in range(m):
+            sums = np.zeros((kq, dsub))
+            np.add.at(sums, codes[:, s], Xs[:, s, :])
+            cnts = np.bincount(codes[:, s], minlength=kq)
+            C[s][cnts > 0] = sums[cnts > 0] / cnts[cnts > 0, None]
+    pq = PQCodebook.train(emb, m=m, k=kq, iters=iters)
+    assert np.array_equal(pq.C, C)
+    got_codes = {r.id: list(r.codes) for r in pq.encode(emb, "vec_id", "embedding").collect()}
+    want = codes_of(C)
+    assert got_codes == {ids[i]: want[i].tolist() for i in range(n)}
+
+
+def test_vec_matrix_views_and_rejects():
+    """The one list→matrix view: honours a slice's offset, and a null or
+    ragged vector is a ValueError that names the column."""
+    import pyarrow as pa
+    import pytest
+
+    from ip_filter_spark.arrow import list_array, vec_matrix
+
+    M = np.arange(12, dtype=np.float32).reshape(4, 3)
+    arr = list_array(M)
+    assert np.array_equal(vec_matrix(arr, "v"), M)
+    assert np.array_equal(vec_matrix(arr.slice(1, 2), "v"), M[1:3])
+    assert vec_matrix(arr.slice(4, 0), "v").shape[0] == 0
+    for bad, what in (([[1.0, 2.0], [3.0]], "ragged"), ([[1.0, 2.0], None], "null vector"), ([[1.0, None]], "null element")):
+        with pytest.raises(ValueError, match=f"vector column 'emb' .*{what}"):
+            vec_matrix(pa.array(bad, type=pa.list_(pa.float32())), "emb")
+
+
+def test_bad_embedding_fails_naming_the_column(spark):
+    """A ragged or null embedding reaching a similarity kernel fails with
+    the helper's ValueError naming the column, not a bare numpy error."""
+    import pytest
+    from pyspark.errors import PythonException
+
+    from ip_filter_spark.operators.similarity import jl_project, lloyd_kmeans
+
+    ragged = spark.createDataFrame([(1, [1.0, 2.0]), (2, [3.0])], "vec_id long, embedding array<float>")
+    null = spark.createDataFrame([(1, [1.0, 2.0]), (2, None)], "vec_id long, embedding array<float>")
+    with pytest.raises(PythonException, match=r"ValueError: vector column 'embedding' is ragged"):
+        jl_project(ragged.coalesce(1), out_dim=4).collect()
+    with pytest.raises(PythonException, match=r"ValueError: vector column 'embedding' holds 1 null vector"):
+        lloyd_kmeans(null.coalesce(1), "vec_id", "embedding", k=1, iters=1)
