@@ -5,6 +5,8 @@ buffers behind them; these are the only conversions it needs:
 
 - ``combine``: a possibly chunked column → one contiguous Array;
 - ``uint64_view``: an int64 column (no nulls) → its uint64 numpy view;
+- ``bytes_matrix``: a binary column of fixed-width values (the key
+  digests) → an (n, width) uint8 matrix;
 - ``vec_matrix``: a list column of equal-length vectors → an (n, dim)
   numpy view of its values, honouring the array's slice offset;
 - ``list_array``: the inverse, the rows of an (n, dim) matrix as a list
@@ -28,6 +30,22 @@ def combine(arr):
 def uint64_view(arr) -> np.ndarray:
     """Arrow int64 array (no nulls) → uint64 numpy view, zero-copy."""
     return combine(arr).to_numpy(zero_copy_only=False).view(np.uint64)
+
+
+def bytes_matrix(arr, width: int, name: str) -> np.ndarray:
+    """(n, width) uint8 matrix of a binary column whose every value is
+    ``width`` bytes long, read from one fixed-size copy of the column. A
+    null or a value of another length raises ``ValueError`` naming
+    ``name``."""
+    arr = combine(arr)
+    if arr.null_count:
+        raise ValueError(f"binary column {name!r} holds {arr.null_count} null(s)")
+    try:
+        fixed = arr.cast(pa.binary(width))
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"binary column {name!r} is not {width} bytes wide: {e}") from None
+    M = np.frombuffer(fixed.buffers()[1], dtype=np.uint8).reshape(-1, width) if len(fixed) else np.empty((0, width), np.uint8)
+    return M[fixed.offset : fixed.offset + len(fixed)]
 
 
 def vec_matrix(arr, name: str) -> np.ndarray:

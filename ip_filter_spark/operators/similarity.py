@@ -86,21 +86,23 @@ def rhp_signatures(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", bits: int = 12, seed: int = 42
 ) -> DataFrame:
     """(id, bucket long): sign-bit signature under seeded random
-    hyperplanes. One numpy matmul per Arrow batch."""
-    dim = len(emb.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, bits, seed)
-    bc = emb.sparkSession.sparkContext.broadcast(planes)
+    hyperplanes. One numpy matmul per Arrow batch; the (dim, bits)
+    planes are rebuilt from (batch width, bits, seed) inside each task,
+    as ``jl_project`` builds its sign matrix, so no job reads the width
+    first and an empty frame gives 0 rows."""
     src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
 
     schema = StructType([StructField("id", src.schema["id"].dataType, False), StructField("bucket", LongType(), False)])
 
     def assign(batches):
-        P = bc.value
-        w = np.uint64(1) << np.arange(P.shape[1], dtype=np.uint64)
+        P = None
+        w = np.uint64(1) << np.arange(bits, dtype=np.uint64)
         for b in batches:
             if not b.num_rows:
                 continue
             M = vec_matrix(b.column(1), vec_col).astype(np.float32)
+            if P is None:
+                P = _hyperplanes(M.shape[1], bits, seed)
             bits_m = (M @ P) > 0
             buckets = (bits_m.astype(np.uint64) * w[None, :]).sum(axis=1).astype(np.int64)
             yield pa.RecordBatch.from_arrays([b.column(0), pa.array(buckets)], names=["id", "bucket"])

@@ -12,8 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ip_filter_spark.engine import SketchSpec, _emit_partials, _fold_blobs, _params_hash, build_and_merge, tree_merge
-from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64
+from ip_filter_spark.engine import SketchSpec, _emit_partials, _fold_blobs, _params_hash, build_and_merge, probe_counts, tree_merge
 
 
 def exact_topk(df: DataFrame, key_col: str, k: int = 10) -> DataFrame:
@@ -39,7 +38,8 @@ def cms_topk_df(
     never undercounts, so ordering errors are bounded by eps*N.
 
     100 TB shape: the merged CMS blob BROADCASTS and candidates are
-    estimated executor-side (mapInPandas over the candidate table), then
+    estimated executor-side (``engine.probe_counts`` over the candidate
+    table, the engine's one probe body), then
     ranked with one TakeOrdered — nothing but the final k rows reaches
     the driver. (The r2 form collected all O(P · candidates_per_partition)
     candidate keys and looped the CMS on the driver — fine at 32
@@ -48,16 +48,10 @@ def cms_topk_df(
     Returns (key string, cnt long, rank int), ordered like ``exact_topk``
     (est desc, then the key's ORIGINAL type order — numeric keys rank
     numerically, so ties break identically to the exact SQL)."""
-    import pandas as pd
-
-    from ip_filter_spark.engine import sha256_digest
-    from ip_filter_spark.sketches import from_bytes
-
     spec = SketchSpec("cms", {"eps": eps, "delta": delta})
     sketches = build_and_merge(df, [spec], key=key_col)
     cms = sketches[spec.key()]
 
-    key_type = df.schema[key_col].dataType.simpleString()
     local = (
         df.groupBy(F.spark_partition_id().alias("pid"), F.col(key_col).alias("key"))
         .agg(F.count("*").alias("cnt"))
@@ -66,20 +60,7 @@ def cms_topk_df(
         .select("key")
         .distinct()
     )
-    blob_bc = df.sparkSession.sparkContext.broadcast(cms.to_bytes())
-    with_dig = local.withColumn("__dig", sha256_digest(F.col("key").cast("string")))
-
-    def estimate(batches):
-        sk = from_bytes(blob_bc.value)
-        for b in batches:
-            out = pd.DataFrame({"key": b["key"]})
-            if len(b):
-                out["est"] = sk.query_hashes(fnv1a64(digests_to_matrix(b["__dig"]))).astype("int64")
-            else:
-                out["est"] = pd.Series([], dtype="int64")
-            yield out
-
-    est_df = with_dig.mapInPandas(estimate, schema=f"key {key_type}, est long")
+    est_df = probe_counts(local, "key", cms, out_col="est")
     # orderBy().limit(k) compiles to TakeOrderedAndProject — a distributed
     # top-k, not a global sort; the rank window then runs over only k rows
     topk = est_df.orderBy(F.desc("est"), F.col("key")).limit(k)

@@ -16,9 +16,14 @@ Scale shape at 100 TB / ~100k files:
 
 - the index is ~100k rows of (file, blob) with blobs sized by
   ``fpp``/``expected_keys`` — megabytes, not terabytes;
-- the PROBE is a Spark job over the index table (a pandas-UDF batch
-  membership test per blob), so the index itself is scanned in parallel
-  and never concentrated on the driver;
+- the PROBE is a Spark job over the index table (a ``mapInArrow``
+  membership test per blob, through ``skipping.may_hold``, the skip test
+  the snapshot planners share), so the index itself is scanned in
+  parallel and never concentrated on the driver;
+- the probe keys are hashed the way the build hashed the column: cast
+  to its Spark type and digested by the engine's JVM expression
+  (``skipping.literal_probe``, one small local job), so double, boolean
+  and decimal keys find their files;
 - only the CANDIDATE FILE NAMES are collected — the minimum that must
   reach the driver, because they parameterize the subsequent read (the
   same driver-side role Parquet's own footer pruning plays);
@@ -33,18 +38,15 @@ results, because the exact predicate is re-applied on read.
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from ip_filter_spark.engine import _fold_blobs
-from ip_filter_spark.sketches import BloomFilter, from_bytes
-from ip_filter_spark.sketches.hashing import DIGEST_W, digests_to_matrix, fnv1a64
+from ip_filter_spark.engine import _fold_blobs, _hashable, sha256_digest
+from ip_filter_spark.sketches import BloomFilter
+from ip_filter_spark.sources.skipping import bloom_of, literal_probe, may_hold
 
 _INDEX_SUBDIR = "_bloom_index"  # leading underscore: hidden from parquet listings
 
@@ -76,9 +78,7 @@ def write_bloom_index(
     idx = (
         df.select(
             F.col("_metadata.file_path").alias("file"),
-            F.substring(F.unhex(F.sha2(F.col(key_col).cast("string"), 256)), 1, DIGEST_W).alias(
-                "digest"
-            ),
+            sha256_digest(_hashable(df, key_col)).alias("digest"),
         )
         .groupBy("file")
         .agg(sketch_agg("bloom", fpp=fpp, n=expected_keys_per_file)(F.col("digest")).alias("blob"))
@@ -98,11 +98,6 @@ class PruneStats:
         return self.files_scanned < self.files_total
 
 
-def _key_hashes(keys) -> np.ndarray:
-    digests = [hashlib.sha256(str(k).encode("utf-8")).digest()[:DIGEST_W] for k in keys]
-    return fnv1a64(digests_to_matrix(pd.Series(digests)))
-
-
 def bloom_pruned_read(
     spark: SparkSession, data_path: str, key_col: str, keys: list
 ) -> tuple[DataFrame, PruneStats]:
@@ -110,28 +105,27 @@ def bloom_pruned_read(
     sidecar Bloom index), with the exact ``key IN (...)`` predicate
     re-applied — false positives cost a scan, never a wrong row.
 
-    The index probe runs AS A SPARK JOB (membership UDF over the index
-    table); the driver receives candidate file names only. ``keys`` is a
-    driver-side list by construction (a point/batch lookup — for
-    key-SETS that are themselves data-scaled, use ``bloom_semijoin``,
-    which broadcasts a single Bloom the other way around).
-    """
-    h64 = _key_hashes(keys)
+    The index probe runs AS A SPARK JOB (a ``mapInArrow`` membership
+    test over the index table); the driver receives candidate file
+    names only. ``keys`` is a driver-side list by construction (a
+    point/batch lookup — for key-SETS that are themselves data-scaled,
+    use ``bloom_semijoin``, which broadcasts a single Bloom the other
+    way around)."""
+    schema = spark.read.parquet(data_path).schema
+    _, _, h64 = literal_probe(spark, list(keys), schema[key_col].dataType)
 
-    @pandas_udf("boolean")
-    def may_contain(blobs: pd.Series) -> pd.Series:
-        return blobs.apply(lambda b: bool(from_bytes(bytes(b)).contains_hashes(h64).any()))
+    def probe(batches):
+        for b in batches:
+            hit = [may_hold(None, bloom_of(blob), None, None, h64) for blob in b.column(1).to_pylist()]
+            yield pa.RecordBatch.from_arrays([b.column(0), pa.array(hit, pa.bool_())], names=["file", "hit"])
 
-    idx = spark.read.parquet(_index_path(data_path, key_col))
-    counted = idx.select(
-        F.col("file"), may_contain(F.col("blob")).alias("hit")
-    ).agg(
+    idx = spark.read.parquet(_index_path(data_path, key_col)).select("file", "blob")
+    counted = idx.mapInArrow(probe, "file string, hit boolean").agg(
         F.count("*").alias("total"),
         F.collect_list(F.when(F.col("hit"), F.col("file"))).alias("candidates"),
     )
     row = counted.collect()[0]
     stats = PruneStats(files_total=int(row["total"]), files_scanned=len(row["candidates"]))
-    schema = spark.read.parquet(data_path).schema
     if not row["candidates"]:
         out = spark.createDataFrame([], schema)
     else:

@@ -36,15 +36,20 @@ plain parquet, exactly the mechanism Iceberg's metadata layer provides:
   per partition, OR-merge — so the blob never funnels row data to the
   driver) and stores the blob in the manifest; ``read_point`` plans a
   ``col = value`` lookup by probing each file set's bloom driver-side.
-  This is what min/max bounds cannot do when appends interleave the key
-  space (every file's [min, max] spans the whole domain): the bloom
-  skips all-but-the-matching file sets with FPP chosen at append time.
+  Every planner shares ``skipping.py``'s one skip test and one key
+  hash: a probe key is cast to the column's Spark type and digested by
+  the build's own JVM expression, so double, boolean and decimal keys
+  hash exactly as they were built.  This is what min/max bounds cannot
+  do when appends interleave the key space (every file's [min, max]
+  spans the whole domain): the bloom skips all-but-the-matching file
+  sets with FPP chosen at append time.
   Iceberg and Parquet expose the same mechanism (per-file bloom
   filters); here it composes the repo's own filter kernel — the
   reference's ip-filter idea applied to table planning.
-- **copy-on-write MERGE / DELETE**: ``merge_upsert`` and
-  ``delete_where`` rewrite ONLY the file sets that may hold affected
-  keys (planned via the same manifest blooms/stats) and commit a new
+- **copy-on-write MERGE / DELETE**: ``merge_upsert``, ``delete_keys``
+  and ``compact_deletes`` rewrite ONLY the file sets that may hold
+  affected keys (planned on the executors via the same manifest
+  blooms/stats, so no key reaches the driver) and commit a new
   snapshot whose file list swaps the touched files for their rewritten
   survivors — O(files-touched) data I/O, never O(table), which is the
   whole point of CoW at 10^12 files.  Readers pinned to older
@@ -203,133 +208,12 @@ class SnapshotTable:
         os.rename(tmp, self._manifest_path(manifest["sid"]))
 
     # ----------------------------------------------------- copy-on-write
-    def _plan_touched(self, key_col: str, key_rows: list, m: dict) -> list[str]:
-        """Files that MAY contain any of the given key values, planned
-        from manifest metadata only: [min, max] bounds exclude a file
-        when the whole key batch falls outside; the per-file bloom
-        excludes it when none of the batch's digests hit.  Conservative
-        for files with neither."""
-        from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64, key_digest
-        from ip_filter_spark.sketches.registry import from_bytes
-
-        if not key_rows:  # empty batch touches nothing (min([]) would raise)
-            return []
-        stats = m.get("file_stats", {})
-        blooms = m.get("file_blooms", {})
-        # bloom digests must reproduce the BUILD-side rendering, which is
-        # Spark's CAST(col AS STRING) (engine.sha256_digest over
-        # _hashable). Python str(v) matches it only for str/bytes/int
-        # keys; for anything else (float '1.0E10' vs '10000000000.0',
-        # date/timestamp/decimal renderings) a mismatch would read as a
-        # bloom MISS and silently retain doomed rows — so bloom pruning
-        # is DISABLED for such batches and only bounds apply (ADVICE r5)
-        renderable = all(
-            isinstance(v, (str, bytes)) or (isinstance(v, int) and not isinstance(v, bool))
-            for v in key_rows
-        )
-        h64 = None
-        if renderable:
-            digests = [key_digest(v if isinstance(v, (str, bytes)) else str(v)) for v in key_rows]
-            h64 = fnv1a64(digests_to_matrix(digests)) if digests else None
-        try:
-            kmin, kmax = min(key_rows), max(key_rows)
-        except TypeError:  # mixed/None keys aren't range-comparable: bounds can't exclude
-            kmin = kmax = None
-        touched = []
-        for rel in m["files"]:
-            b = stats.get(rel, {}).get(key_col)
-            try:
-                if (
-                    kmin is not None
-                    and b is not None
-                    and b[0] is not None
-                    and b[1] is not None
-                    and (kmax < b[0] or kmin > b[1])
-                ):
-                    continue
-            except TypeError:
-                pass
-            blob_hex = blooms.get(rel, {}).get(key_col)
-            if blob_hex is not None and h64 is not None:
-                if not bool(from_bytes(bytes.fromhex(blob_hex)).contains_hashes(h64).any()):
-                    continue
-            touched.append(rel)
-        return touched
-
-    def _plan_touched_df(self, key_col: str, keys_df: DataFrame, m: dict) -> list[str]:
-        """Distributed twin of ``_plan_touched`` for DataFrame-valued key
-        batches (GDPR-scale deletes): the manifest's per-file
-        bounds/blooms broadcast to the executors, each partition probes
-        them against ITS slice of the keys, and only the ≤|files| hit
-        rel-names come back — the key batch itself never reaches the
-        driver.  Per-partition bounds make this at least as precise as
-        the driver form (which uses whole-batch min/max)."""
-        if not m["files"]:
-            return []
-        stats = m.get("file_stats", {})
-        blooms = m.get("file_blooms", {})
-        meta = [
-            (rel, stats.get(rel, {}).get(key_col), blooms.get(rel, {}).get(key_col))
-            for rel in m["files"]
-        ]
-        spark = keys_df.sparkSession
-        bc = spark.sparkContext.broadcast(meta)
-
-        def probe(batches):
-            import pandas as pd
-
-            from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64
-            from ip_filter_spark.sketches.registry import from_bytes
-
-            filters = [
-                (rel, b, from_bytes(bytes.fromhex(blob)) if blob else None)
-                for rel, b, blob in bc.value
-            ]
-            hit: set[str] = set()
-            for pdf in batches:
-                vals = pdf["__k"].tolist()
-                if not vals:
-                    continue
-                # digests arrive PRE-COMPUTED by the same JVM expression
-                # the file blooms were built with (sha256_digest over
-                # CAST(col AS STRING)) — Python str(v) of pandas-converted
-                # doubles/dates/timestamps renders differently and made
-                # bloom false negatives possible (ADVICE r5)
-                h64 = fnv1a64(digests_to_matrix(pdf["__d"].tolist()))
-                try:
-                    kmin, kmax = min(vals), max(vals)
-                except TypeError:
-                    kmin = kmax = None
-                for rel, b, filt in filters:
-                    if rel in hit:
-                        continue
-                    try:
-                        if (
-                            kmin is not None
-                            and b is not None
-                            and b[0] is not None
-                            and b[1] is not None
-                            and (kmax < b[0] or kmin > b[1])
-                        ):
-                            continue
-                    except TypeError:
-                        pass
-                    if filt is not None and not bool(filt.contains_hashes(h64).any()):
-                        continue
-                    hit.add(rel)
-            yield pd.DataFrame({"rel": sorted(hit)})
-
-        from pyspark.sql import functions as F
-
-        from ip_filter_spark.engine import _hashable, sha256_digest
-
-        base = keys_df.select(F.col(key_col).alias("__k")).distinct()
-        src = base.select("__k", sha256_digest(_hashable(base, F.col("__k"))).alias("__d"))
-        rels = {
-            r.rel
-            for r in src.mapInPandas(probe, schema="rel string").distinct().collect()
-        }
-        return [rel for rel in m["files"] if rel in rels]
+    @staticmethod
+    def _files(m: dict, col: str) -> list[tuple]:
+        """(rel, bounds, bloom blob) per file set of manifest ``m`` for
+        ``col``; None where the manifest records none."""
+        stats, blooms = m.get("file_stats", {}), m.get("file_blooms", {})
+        return [(rel, stats.get(rel, {}).get(col), blooms.get(rel, {}).get(col)) for rel in m["files"]]
 
     def merge_upsert(
         self,
@@ -339,13 +223,12 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         bloom_fpp: float = 1e-8,
-        distributed_plan: bool = False,
     ) -> tuple[int, int, int]:
         """Copy-on-write MERGE (Delta/Iceberg CoW semantics): rows of
         ``updates`` replace current rows with the same ``key_col`` value;
         unmatched keys insert.  Only the file sets that MAY contain an
-        affected key (planned via manifest blooms/bounds — zero data
-        I/O) are rewritten; every other file is carried into the new
+        affected key (planned via manifest blooms/bounds, no data file
+        read) are rewritten; every other file is carried into the new
         snapshot untouched, so the data rewritten is O(files-touched),
         never O(table).  Older snapshots still read the pre-merge rows.
 
@@ -353,12 +236,11 @@ class SnapshotTable:
         key (standard MERGE precondition).  Returns
         (new sid, files_rewritten, files_total_before).
 
-        Planning: by default the batch's distinct keys come to the
-        driver — O(delta), the same metadata the blooms are probed with.
-        For table-scale batches pass ``distributed_plan=True`` and the
-        manifest probe runs executor-side instead (``_plan_touched_df``);
-        no key ever reaches the driver."""
-        return self._rewrite(spark, updates, key_col, insert=True, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp, distributed_plan=distributed_plan)
+        Planning runs on the executors (``skipping.plan_keys``): the
+        manifest's bounds and blooms are broadcast, each task hashes its
+        slice of the batch's keys as the build did and tests them, and
+        only the hit file names reach the driver, never a key."""
+        return self._rewrite(spark, updates, key_col, insert=True, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp)
 
     def delete_keys(
         self,
@@ -371,27 +253,27 @@ class SnapshotTable:
     ) -> tuple[int, int, int]:
         """Copy-on-write row-level DELETE by key batch: rewrites only the
         file sets that may contain a doomed key.  ``keys`` is a Python
-        list for point deletes, or a DataFrame carrying a ``key_col``
-        column for table-scale batches — the DataFrame form plans via
-        the executor-side manifest probe and deletes via anti-join, so
-        no key ever reaches the driver.  Returns
+        list for point deletes (each cast to the column's type in a tiny
+        driver-local frame, so 13 deletes 13.0 from a double column), or
+        a DataFrame carrying a ``key_col`` column for table-scale
+        batches.  Both plan with the executor-side manifest probe of
+        ``merge_upsert`` and delete via anti-join; a DataFrame batch
+        never reaches the driver.  Returns
         (new sid, files_rewritten, files_total_before)."""
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
+
+        from ip_filter_spark.sources.skipping import literal_keys
 
         template = self.read(spark).limit(0)
-        from_df = isinstance(keys, DataFrame)
-        if from_df:
-            updates = keys.select(F.col(key_col).cast(template.schema[key_col].dataType)).distinct()
+        dtype = template.schema[key_col].dataType
+        if isinstance(keys, DataFrame):
+            updates = keys.select(F.col(key_col).cast(dtype)).distinct()
         else:
-            updates = spark.createDataFrame(
-                [(k,) for k in keys],
-                StructType([StructField(key_col, template.schema[key_col].dataType)]),
-            )
+            updates = literal_keys(spark, list(keys), dtype, key_col)
         for c in template.columns:
             if c != key_col:
                 updates = updates.withColumn(c, F.lit(None).cast(template.schema[c].dataType))
-        return self._rewrite(spark, updates.select(template.columns), key_col, insert=False, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp, distributed_plan=from_df)
+        return self._rewrite(spark, updates.select(template.columns), key_col, insert=False, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp)
 
     def delete_keys_mor(
         self, spark: SparkSession, key_col: str, keys: list | DataFrame
@@ -414,19 +296,16 @@ class SnapshotTable:
         m = self._read_manifest(parent)
         template = self._scan(spark, m["files"]).limit(0)
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
 
+        from ip_filter_spark.sources.skipping import literal_keys
+
+        dtype = template.schema[key_col].dataType
         if isinstance(keys, DataFrame):
             # DataFrame batch: the delete file is written straight from the
             # executors — the doomed keys never visit the driver
-            keys_df = keys.select(
-                F.col(key_col).cast(template.schema[key_col].dataType)
-            ).distinct()
+            keys_df = keys.select(F.col(key_col).cast(dtype)).distinct()
         else:
-            keys_df = spark.createDataFrame(
-                [(k,) for k in keys],
-                StructType([StructField(key_col, template.schema[key_col].dataType)]),
-            ).distinct()
+            keys_df = literal_keys(spark, list(keys), dtype, key_col).distinct()
         rel = f"deletes/{parent + 1}-{uuid.uuid4().hex[:8]}.parquet"
         keys_df.write.mode("errorifexists").parquet(os.path.join(self.table_dir, rel))
         n_keys = (
@@ -524,7 +403,6 @@ class SnapshotTable:
         bloom_cols: list[str] | None,
         bloom_fpp: float,
         _compacting_deletes: bool = False,
-        distributed_plan: bool = False,
     ) -> tuple[int, int, int]:
         parent = self.current_snapshot()
         if parent == 0:
@@ -535,11 +413,9 @@ class SnapshotTable:
             raise ValueError(
                 "pending merge-on-read delete files; run compact_deletes() before CoW ops"
             )
-        if distributed_plan:
-            touched = self._plan_touched_df(key_col, updates.select(key_col), m)
-        else:
-            key_rows = [r[0] for r in updates.select(key_col).distinct().collect()]
-            touched = self._plan_touched(key_col, key_rows, m)
+        from ip_filter_spark.sources.skipping import plan_keys
+
+        touched = plan_keys(updates, key_col, self._files(m, key_col))
         new_files = [f for f in m["files"] if f not in set(touched)]
         added = []
         file_stats = {k: v for k, v in m.get("file_stats", {}).items() if k not in set(touched)}
@@ -616,15 +492,10 @@ class SnapshotTable:
         ``col`` are conservatively kept (exactly Iceberg's rule for
         missing column stats).  Zero data/footer I/O — this is the
         10^12-file planning path."""
-        sid = self.current_snapshot() if sid is None else sid
-        m = self._read_manifest(sid)
-        stats = m.get("file_stats", {})
-        kept = []
-        for rel in m["files"]:
-            b = stats.get(rel, {}).get(col)
-            if b is None or (b[0] is None or b[1] is None) or not (b[1] < lo or b[0] > hi):
-                kept.append(rel)
-        return kept, len(m["files"])
+        from ip_filter_spark.sources.skipping import may_hold
+
+        m = self._read_manifest(self.current_snapshot() if sid is None else sid)
+        return [rel for rel, b, _ in self._files(m, col) if may_hold(b, None, lo, hi, None)], len(m["files"])
 
     def read_pruned(
         self, spark: SparkSession, col: str, lo, hi, sid: int | None = None
@@ -644,36 +515,26 @@ class SnapshotTable:
         its Bloom sketch says maybe-present (or it has no bloom for
         ``col`` — conservative, like missing min/max stats), further
         intersected with recorded [min, max] bounds when both exist.
-        Probing hashes the value exactly the way the engine's build path
-        does (sha256 of Spark's canonical string cast, truncated to
-        DIGEST_W, then FNV-1a 64 — ``engine.sha256_digest``'s Python
-        replica), so build and probe agree bit-for-bit.  Zero data I/O:
-        at 10^12 files a point lookup plans in O(files) driver-side blob
-        probes and scans only the handful of maybe-files."""
-        from ip_filter_spark.sketches.hashing import digests_to_matrix, fnv1a64, key_digest
-        from ip_filter_spark.sketches.registry import from_bytes
+        The value is cast to the column's Spark type (read from one
+        file set's footer) and hashed by the build's own JVM expression
+        (``skipping.probe_keys``), so build and probe agree bit for bit
+        on every key type: 13 probes a ``decimal(10,2)`` bloom as
+        ``'13.00'`` and 2.5e10 a double bloom as ``'2.5E10'``.  No data
+        file is read: the footer read and the hash are two small Spark
+        jobs, and the blobs are probed driver-side, O(files) at 10^12
+        files."""
+        from pyspark.sql import SparkSession
 
-        sid = self.current_snapshot() if sid is None else sid
-        m = self._read_manifest(sid)
-        stats = m.get("file_stats", {})
-        blooms = m.get("file_blooms", {})
-        key = value if isinstance(value, (str, bytes)) else str(value)
-        h64 = fnv1a64(digests_to_matrix([key_digest(key)]))
-        kept = []
-        for rel in m["files"]:
-            b = stats.get(rel, {}).get(col)
-            try:
-                if b is not None and b[0] is not None and b[1] is not None and (
-                    value < b[0] or value > b[1]
-                ):
-                    continue
-            except TypeError:
-                pass  # value/bounds not comparable after JSON round-trip: keep
-            blob_hex = blooms.get(rel, {}).get(col)
-            if blob_hex is not None and not bool(from_bytes(bytes.fromhex(blob_hex)).contains_hashes(h64)[0]):
-                continue
-            kept.append(rel)
-        return kept, len(m["files"])
+        from ip_filter_spark.sources.skipping import bloom_of, literal_probe, may_hold
+
+        m = self._read_manifest(self.current_snapshot() if sid is None else sid)
+        files = self._files(m, col)
+        typed = next((rel for rel, b, blob in files if b is not None or blob is not None), None)
+        if typed is None:  # nothing recorded for col: every file set stays
+            return [rel for rel, _, _ in files], len(files)
+        spark = SparkSession.active()
+        kmin, kmax, h64 = literal_probe(spark, [value], self._scan(spark, [typed]).schema[col].dataType)
+        return [rel for rel, b, blob in files if may_hold(b, bloom_of(blob), kmin, kmax, h64)], len(files)
 
     def read_point(
         self, spark: SparkSession, col: str, value, sid: int | None = None

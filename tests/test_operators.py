@@ -680,8 +680,9 @@ def test_bloom_index_scan_reads_only_candidate_files(spark, sf_dir, tmp_path):
 def test_bloom_index_compaction_merge(spark, sf_dir, tmp_path):
     """OR-merging file blobs (compaction path) preserves membership: the
     merged blob contains every key either input contained."""
-    from ip_filter_spark.sources.bloom_index import _key_hashes, merge_index_blobs, write_bloom_index
     from ip_filter_spark.sketches import from_bytes
+    from ip_filter_spark.sources.bloom_index import merge_index_blobs, write_bloom_index
+    from ip_filter_spark.sources.skipping import literal_probe
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     data = str(tmp_path / "ev")
@@ -690,7 +691,8 @@ def test_bloom_index_compaction_merge(spark, sf_dir, tmp_path):
     blobs = [bytes(r.blob) for r in spark.read.parquet(idx_path).collect()]
     merged = from_bytes(merge_index_blobs(blobs))
     all_keys = [int(r.user_id) for r in ev.select("user_id").distinct().collect()]
-    assert bool(merged.contains_hashes(_key_hashes(all_keys)).all())
+    _, _, h64 = literal_probe(spark, all_keys, ev.schema["user_id"].dataType)
+    assert len(h64) == len(all_keys) and bool(merged.contains_hashes(h64).all())
 
 
 def test_term_index_search_matches_postings_and_prunes(spark, sf_dir, tmp_path):
@@ -2011,10 +2013,10 @@ def test_snapshot_dataframe_valued_deletes(spark, tmp_path):
     # pinned older snapshot still sees the rows
     assert t.read(spark, sid2).where(F.col("doc_id") % 10 == 4).count() == n_doomed
 
-    # merge_upsert with distributed planning
+    # merge_upsert (planned executor-side, like every CoW op)
     t.compact_deletes(spark)
     ups = t.read(spark).where(F.col("doc_id") % 100 == 7).withColumn("grp", F.lit(99).cast("long"))
-    t.merge_upsert(spark, ups, "doc_id", distributed_plan=True)
+    t.merge_upsert(spark, ups, "doc_id")
     got = t.read(spark)
     assert got.where((F.col("doc_id") % 100 == 7) & (F.col("grp") != 99)).count() == 0
 
@@ -2024,9 +2026,9 @@ def test_snapshot_delete_double_keys_bloom_rendering(spark, tmp_path):
     Spark CAST(col AS STRING) rendering. Double keys render differently
     in Python str() (e.g. 1e10 -> '10000000000.0') than in Spark
     ('1.0E10'), which previously made the distributed planner's bloom
-    report a false MISS and silently retain doomed rows. The DataFrame
-    path now computes digests JVM-side; the driver-list path disables
-    bloom pruning for non-int/str keys (bounds still apply)."""
+    report a false MISS and silently retain doomed rows. Both the
+    DataFrame and the list path now plan executor-side with digests
+    computed JVM-side, so list keys prune by bloom too."""
     from pyspark.sql import functions as F
 
     from ip_filter_spark.sources.snapshots import SnapshotTable
@@ -2046,7 +2048,7 @@ def test_snapshot_delete_double_keys_bloom_rendering(spark, tmp_path):
     assert got.where(F.col("k").isin([1.0e10, 1.1e10, 1.2e10])).count() == 0
 
     # driver-list path with float keys: bloom pruning must not create
-    # false negatives either (it is disabled; bounds-only planning)
+    # false negatives either
     sid2, rewritten2, _ = t.delete_keys(spark, "k", [1.3e10, 1.4e10])
     got2 = t.read(spark)
     assert got2.count() == 95

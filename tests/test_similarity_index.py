@@ -292,3 +292,10 @@ def test_bad_embedding_fails_naming_the_column(spark):
         jl_project(ragged.coalesce(1), out_dim=4).collect()
     with pytest.raises(PythonException, match=r"ValueError: vector column 'embedding' holds 1 null vector"):
         lloyd_kmeans(null.coalesce(1), "vec_id", "embedding", k=1, iters=1)
+
+
+def test_rhp_signatures_empty_frame_gives_no_rows(spark):
+    from ip_filter_spark.operators.similarity import rhp_signatures
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert rhp_signatures(empty).count() == 0
