@@ -12,9 +12,7 @@ operator oracle-checkable, while the shuffle moves only
 (selectivity + fpp) of the probe table instead of all of it.
 
 Spark's AQE can inject runtime filters for some plans; this operator
-makes the decision explicit, works for any key expression, reuses a
-filter across many queries (the sketch is a value), and reports the
-pruning ratio through lineage columns if asked.
+makes the decision explicit and works for any key expression.
 """
 
 from __future__ import annotations
@@ -26,6 +24,25 @@ from pyspark.sql import functions as F
 
 from ip_filter_spark.engine import SketchSpec, build_and_merge, probe_membership
 from ip_filter_spark.lifetime import cut
+
+
+def _flag_build_keys(probe, build, probe_key, build_key, fpp, expected_n, broadcast_build):
+    """(probe + a ``__hit`` Bloom verdict column, the exact confirm
+    side): the build side's distinct keys as ``__k``, counted for sizing
+    unless ``expected_n`` is given, built into one Bloom filter that
+    flags the probe rows, and returned (broadcast-hinted if asked) for
+    the exact join that removes the false positives."""
+    # the distinct-keys subplan feeds THREE consumers (the sizing count,
+    # the filter build, the exact confirm join) — cut it so the
+    # build-side scan + distinct shuffle run once (guide §5). A cut, not
+    # a pin: the returned join reads it. The set is the build side's
+    # distinct keys — broadcast-side scale by the operator's contract.
+    keys = cut(build.select(F.col(build_key or probe_key).alias("__k")).distinct())
+    n = expected_n if expected_n is not None else keys.count()
+    spec = SketchSpec("bloom", {"fpp": fpp, "n": max(int(n), 1)})
+    bf = build_and_merge(keys, [spec], key="__k")[spec.key()]
+    flagged = probe_membership(probe, probe_key, bf, out_col="__hit")
+    return flagged, F.broadcast(keys) if broadcast_build else keys
 
 
 def bloom_semi_join(
@@ -48,19 +65,8 @@ def bloom_semi_join(
     build sides Spark falls back to a shuffle join on the ALREADY
     PRUNED probe side, which is the point of the prefilter).
     """
-    build_key = build_key or probe_key
-    # r6: the distinct-keys subplan feeds THREE consumers (the sizing
-    # count, the filter build, the exact confirm join) — cut it so the
-    # build-side scan + distinct shuffle run once (guide §5). A cut, not
-    # a pin: the returned join reads it. The set is the build side's
-    # distinct keys — broadcast-side scale by the operator's contract.
-    keys = cut(build.select(F.col(build_key).alias("__k")).distinct())
-    n = expected_n if expected_n is not None else keys.count()
-    spec = SketchSpec("bloom", {"fpp": fpp, "n": max(int(n), 1)})
-    bf = build_and_merge(keys, [spec], key="__k")[spec.key()]
-
-    pruned = probe_membership(probe, probe_key, bf, out_col="__hit").where(F.col("__hit")).drop("__hit")
-    confirm = keys if not broadcast_build else F.broadcast(keys)
+    flagged, confirm = _flag_build_keys(probe, build, probe_key, build_key, fpp, expected_n, broadcast_build)
+    pruned = flagged.where(F.col("__hit")).drop("__hit")
     return pruned.join(confirm, on=pruned[probe_key] == confirm["__k"], how="left_semi")
 
 
@@ -88,17 +94,9 @@ def bloom_anti_join(
     EXACTLY the plain anti-join (no false negatives ⇒ nothing exact is
     lost; the confirm removes every false positive).
     """
-    build_key = build_key or probe_key
-    # cut: three consumers, one the returned join (as bloom_semi_join)
-    keys = cut(build.select(F.col(build_key).alias("__k")).distinct())
-    n = expected_n if expected_n is not None else keys.count()
-    spec = SketchSpec("bloom", {"fpp": fpp, "n": max(int(n), 1)})
-    bf = build_and_merge(keys, [spec], key="__k")[spec.key()]
-
-    flagged = probe_membership(probe, probe_key, bf, out_col="__hit")
+    flagged, confirm = _flag_build_keys(probe, build, probe_key, build_key, fpp, expected_n, broadcast_build)
     certain_out = flagged.where(~F.col("__hit")).drop("__hit")
     candidates = flagged.where(F.col("__hit")).drop("__hit")
-    confirm = keys if not broadcast_build else F.broadcast(keys)
     confirmed_out = candidates.join(
         confirm, on=candidates[probe_key] == confirm["__k"], how="left_anti"
     )

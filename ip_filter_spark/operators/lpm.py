@@ -118,6 +118,11 @@ from ip_filter_spark.sketches.bloom import BloomFilter
 SEP = "/"
 _MAGIC = b"IFLPM2"  # v2: uint64 xxhash64 keys (v1 shipped 16-byte sha256 digests)
 _KERNEL_CHUNK = 8192
+#: the fpp every engine blob records; the filter is sized by
+#: ``bits_per_route`` instead, so this value sizes nothing
+_BUILD_FPP = 1e-4
+#: trie branching base of ``weighting='by_share'`` (exact for bit domains)
+_SHARE_BASE = 2.0
 #: design bound on the FIB: the driver collects it and every probe task
 #: holds it (8 B per route for the keys plus under 8 B per route for the
 #: ``_FibIndex`` directory); a larger table is sharded (see build())
@@ -394,13 +399,10 @@ class PathLPM:
     def build(
         cls,
         prefix_df: DataFrame,
-        fpp: float = 1e-4,
         k: int | None = None,
-        num_bits: int | None = None,
         weighting: str = "by_count",
         num_partitions: int = 32,
-        bits_per_route: int | None = 40,
-        share_base: float = 2.0,
+        bits_per_route: int = 40,
         trunc=None,
         local_build_max_inserts: int = 1_000_000,
     ) -> "PathLPM":
@@ -420,9 +422,9 @@ class PathLPM:
         address-space share, ``_share_weights``), which adds one pass of
         the same BMP function before the tree is built.
 
-        The filter is deliberately sparse (``bits_per_route`` bits/route
-        by default) — the reference's own finding: hash-0 markers and
-        pointer slots are only trustworthy in a sparse filter
+        The filter is deliberately sparse (``bits_per_route`` bits/route,
+        at least 1024 bits) — the reference's own finding: hash-0 markers
+        and pointer slots are only trustworthy in a sparse filter
         (/root/reference/doc/tex/report.tex:548-569, 'keep it sparse').
 
         ``trunc(key_col, depth)`` defines the prefix domain: given a key
@@ -473,15 +475,14 @@ class PathLPM:
                             yield pd.DataFrame({"depth": b["depth"], "bmp_depth": ix2len[bmp_ix]})
 
                     bmps = prefix_df.select(*cols).mapInPandas(route_bmp, "depth int, bmp_depth int")
-                    weights = cls._share_weights(bmps, depths, share_base)
+                    weights = cls._share_weights(bmps, depths, _SHARE_BASE)
                 else:
                     weights = counts
                 tree = GuideTree.from_weights(depths, weights)
                 k_auto, enc_bits = cls.required_k(len(depths), tree.height())
                 k = k or k_auto
-                if num_bits is None and bits_per_route:
-                    num_bits = max(1024, bits_per_route * n_routes)
-                bf_params = dict(fpp=fpp, n=n_routes, k=k, num_bits=num_bits)
+                num_bits = max(1024, bits_per_route * n_routes)
+                bf_params = dict(fpp=_BUILD_FPP, n=n_routes, k=k, num_bits=num_bits)
 
                 # per route depth, the depth columns of its walk's right
                 # turns: where a route plants its markers and pointer bits

@@ -598,10 +598,10 @@ GROUP BY lang
 def snapshot_schema_evolution_docs(spark, sf_dir):
     """Add-column schema evolution on the snapshot source: snapshot 1
     holds the original document columns, snapshot 2 appends rows WITH a
-    new ``quality`` column, and a ``merge_schema`` read of the current
-    snapshot plans the union schema — pre-evolution files read the new
-    column as NULL (Iceberg's add-column contract; no rewrite of old
-    data). The gate pins per-lang counts, the NULL/backfilled split, and
+    new ``quality`` column, and a plain read of the current snapshot
+    scans with the manifest's union schema — pre-evolution files read
+    the new column as NULL (Iceberg's add-column contract; no rewrite of
+    old data). The gate pins per-lang counts, the NULL/backfilled split, and
     the exact sum of the new column over the rows that have it."""
     import shutil
     import tempfile
@@ -618,7 +618,7 @@ def snapshot_schema_evolution_docs(spark, sf_dir):
                 "quality", (F.col("n_chars") % 7).cast("long")
             )
         )
-        cur = table.read(spark, merge_schema=True)
+        cur = table.read(spark)
         assert "quality" in cur.columns
         out = cur.groupBy("lang").agg(
             F.count("*").alias("n_docs"),
@@ -750,13 +750,7 @@ def snapshot_upsert_docs(spark, sf_dir):
             F.lit("xx").alias("lang"),
             F.lit(42).cast("long").alias("n_chars"),
         )
-        sid, rewritten, total = table.merge_upsert(
-            spark,
-            updates.unionByName(inserts),
-            "doc_id",
-            stats_cols=["doc_id"],
-            bloom_cols=["doc_id"],
-        )
+        sid, rewritten, total = table.merge_upsert(spark, updates.unionByName(inserts), "doc_id")
         assert (rewritten, total) == (2, 4), (rewritten, total)
         pre_rows = table.read(spark, sid=4).count()
         out = table.read(spark).groupBy("lang").agg(
@@ -1081,9 +1075,7 @@ def snapshot_vacuum_docs(spark, sf_dir):
                 bloom_cols=["doc_id"],
             )
         doomed = [r.doc_id for r in docs.where(F.col("doc_id") % 10 == 3).select("doc_id").collect()]
-        _sid, rewritten, total = table.delete_keys(
-            spark, "doc_id", doomed, stats_cols=["doc_id"], bloom_cols=["doc_id"]
-        )
+        _sid, rewritten, total = table.delete_keys(spark, "doc_id", doomed)
         assert (rewritten, total) == (2, 4), (rewritten, total)
         pre = table.vacuum()  # all file sets still referenced by manifests 1-4
         expired = table.expire_snapshots(keep_last=1)
@@ -1158,9 +1150,7 @@ def snapshot_mor_delete_docs(spark, sf_dir):
             table.merge_upsert(spark, docs.limit(1), "doc_id")
         except ValueError:
             refused = True
-        _csid, rewritten, total = table.compact_deletes(
-            spark, stats_cols=["doc_id"], bloom_cols=["doc_id"]
-        )
+        _csid, rewritten, total = table.compact_deletes(spark)
         assert (rewritten, total) == (2, 4), (rewritten, total)
         post_rows = table.read(spark).groupBy("lang").agg(
             F.count("*").alias("n_docs"),

@@ -52,6 +52,21 @@ class Sketch:
         raise NotImplementedError
 
     # ---- shared -----------------------------------------------------------
+    def _check_merge(self, other: "Sketch", *params: str) -> None:
+        """Raise ``ValueError`` unless ``other`` is a sketch of this class
+        with equal ``params`` attributes. An explicit raise, not an
+        ``assert``: ``python -O`` must not turn a bad merge into garbage."""
+        same = type(other) is type(self)
+        bad = [p for p in params if getattr(other, p, None) != getattr(self, p)]
+        if same and not bad:
+            return
+
+        def desc(s) -> str:
+            return f"{type(s).__name__}({', '.join(f'{p}={getattr(s, p, None)!r}' for p in params)})"
+
+        why = f"different {', '.join(bad)}" if same else "different classes"
+        raise ValueError(f"cannot merge {desc(other)} into {desc(self)}: {why}")
+
     def to_bytes(self) -> bytes:
         arrays = self._arrays()
         header = {

@@ -135,7 +135,7 @@ class BloomFilter(Sketch):
 
     # ---- merge / io -----------------------------------------------------
     def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.m == other.m and self.k == other.k, "incompatible Bloom params"
+        self._check_merge(other, "m", "k")
         np.bitwise_or(self.bits, other.bits, out=self.bits)
         self.n_items += other.n_items
         return self

@@ -122,7 +122,7 @@ class CountMinSketch(Sketch):
         return (e / self.w) * self.n_items * other.n_items
 
     def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        assert self.w == other.w and self.d == other.d
+        self._check_merge(other, "w", "d")
         self.table += other.table
         self.n_items += other.n_items
         return self

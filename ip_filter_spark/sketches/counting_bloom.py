@@ -108,7 +108,7 @@ class CountingBloomFilter(Sketch):
         return self.counters[self._ix(h64).astype(np.int64)].min(axis=1).astype(np.int64)
 
     def merge(self, other: "CountingBloomFilter") -> "CountingBloomFilter":
-        assert self.m == other.m and self.k == other.k
+        self._check_merge(other, "m", "k")
         wide = self.counters.astype(np.int64) + other.counters.astype(np.int64)
         if wide.max(initial=0) > _MAX:
             self.saturated = True

@@ -110,7 +110,7 @@ class CountSketch(Sketch):
         return float(np.median(dots))
 
     def merge(self, other: "CountSketch") -> "CountSketch":
-        assert self.w == other.w and self.d == other.d
+        self._check_merge(other, "w", "d")
         self.table += other.table
         self.n_items += other.n_items
         return self

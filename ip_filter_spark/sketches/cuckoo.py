@@ -207,9 +207,7 @@ class CuckooFilter(Sketch):
         return self
 
     def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        assert (self.nb, self.b, self.f) == (other.nb, other.b, other.f), (
-            "cuckoo merge requires identical geometry"
-        )
+        self._check_merge(other, "nb", "b", "f")
         rows, cols = np.nonzero(other.table)
         fps = other.table[rows, cols]
         placed = self._bulk_place(rows.astype(np.int64), fps)

@@ -101,7 +101,7 @@ class DDSketch(Sketch):
         return self.update_values(h64.astype(np.float64))
 
     def merge(self, other: "DDSketch") -> "DDSketch":
-        assert isinstance(other, DDSketch) and other.alpha == self.alpha
+        self._check_merge(other, "alpha")
         for mine, theirs in ((self.pos, other.pos), (self.neg, other.neg)):
             for i, c in theirs.items():
                 mine[i] = mine.get(i, 0) + c

@@ -95,8 +95,7 @@ class FrequentDirections(Sketch):
 
     # ---- merge ------------------------------------------------------------
     def merge(self, other: "FrequentDirections") -> "FrequentDirections":
-        assert isinstance(other, FrequentDirections)
-        assert (self.ell, self.dim) == (other.ell, other.dim), "incompatible FD params"
+        self._check_merge(other, "ell", "dim")
         rows = other.b[: other.nbuf]
         # other's rows carry sqrt-weights already; inserting them row-wise
         # is exactly the mergeable-summaries FD merge

@@ -76,7 +76,7 @@ class HyperLogLog(Sketch):
         return 1.04 / np.sqrt(self.m)
 
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
-        assert self.p == other.p
+        self._check_merge(other, "p")
         np.maximum(self.registers, other.registers, out=self.registers)
         self.n_items += other.n_items
         return self

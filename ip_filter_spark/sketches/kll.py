@@ -72,7 +72,7 @@ class KLLSketch(Sketch):
         self.levels[i + 1] = np.concatenate([self.levels[i + 1], survivors])
 
     def merge(self, other: "KLLSketch") -> "KLLSketch":
-        assert self.k == other.k
+        self._check_merge(other, "k")
         while len(self.levels) < len(other.levels):
             self.levels.append(np.empty(0, dtype=np.float64))
         for i, lv in enumerate(other.levels):

@@ -58,7 +58,7 @@ class KMVSketch(Sketch):
         return self
 
     def merge(self, other: "KMVSketch") -> "KMVSketch":
-        assert isinstance(other, KMVSketch) and other.k == self.k
+        self._check_merge(other, "k")
         self.n_items += other.n_items
         self.mins = self._keep_k(np.concatenate([self.mins, other.mins]))
         return self

@@ -59,7 +59,7 @@ class MinHashSignatures(Sketch):
         return self
 
     def merge(self, other: "MinHashSignatures") -> "MinHashSignatures":
-        assert self.num_perm == other.num_perm
+        self._check_merge(other, "num_perm")
         np.minimum(self.mins, other.mins, out=self.mins)
         self.n_items += other.n_items
         return self

@@ -78,7 +78,7 @@ class MisraGries(Sketch):
         return self
 
     def merge(self, other: "MisraGries") -> "MisraGries":
-        assert isinstance(other, MisraGries) and other.capacity == self.capacity
+        self._check_merge(other, "capacity")
         self.n_items += other.n_items
         self._combine(other.keys, other.counts, other.err)
         return self

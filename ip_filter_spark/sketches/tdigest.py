@@ -96,7 +96,7 @@ class TDigest(Sketch):
         self.weights = ws
 
     def merge(self, other: "TDigest") -> "TDigest":
-        assert self.delta == other.delta
+        self._check_merge(other, "delta")
         other._flush()
         if len(other.means):
             self.update_values(other.means, other.weights)

@@ -26,10 +26,12 @@ plain parquet, exactly the mechanism Iceberg's metadata layer provides:
   files whose [min, max] intersects the predicate range.  At 10^12
   files this is what makes a point/range query O(files-that-matter)
   instead of O(table) — the planning never opens a parquet footer, it
-  reads manifest JSON only.
-- **schema evolution**: later appends may add columns; ``read(...,
-  merge_schema=True)`` plans the union schema and back-fills NULLs for
-  old files, Iceberg's add-column semantics.
+  reads manifest JSON only.  Bounds are typed by the manifest schema, so
+  decimal, date and timestamp bounds round-trip exactly too.
+- **schema evolution**: each manifest records the table schema; later
+  appends may add columns (a conflicting type is refused before any
+  write).  Every scan reads with that schema, so older files read a new
+  column as NULL (Iceberg's add-column semantics) and no footer is read.
 - **Bloom-filter file skipping**: ``append(df, bloom_cols=[...])``
   builds one of the library's own Bloom sketches per file set per
   column (distributed build via ``engine.build_and_merge`` — partials
@@ -37,12 +39,12 @@ plain parquet, exactly the mechanism Iceberg's metadata layer provides:
   driver) and stores the blob in the manifest; ``read_point`` plans a
   ``col = value`` lookup by probing each file set's bloom driver-side.
   Every planner shares ``skipping.py``'s one skip test and one key
-  hash: a probe key is cast to the column's Spark type and digested by
-  the build's own JVM expression, so double, boolean and decimal keys
-  hash exactly as they were built.  This is what min/max bounds cannot
-  do when appends interleave the key space (every file's [min, max]
-  spans the whole domain): the bloom skips all-but-the-matching file
-  sets with FPP chosen at append time.
+  hash: a probe key is cast to the column's Spark type (read from the
+  manifest schema) and digested by the build's own JVM expression, so
+  double, boolean and decimal keys hash exactly as they were built.
+  This is what min/max bounds cannot do when appends interleave the key
+  space (every file's [min, max] spans the whole domain): the bloom
+  skips all-but-the-matching file sets with FPP chosen at append time.
   Iceberg and Parquet expose the same mechanism (per-file bloom
   filters); here it composes the repo's own filter kernel — the
   reference's ip-filter idea applied to table planning.
@@ -53,12 +55,14 @@ plain parquet, exactly the mechanism Iceberg's metadata layer provides:
   snapshot whose file list swaps the touched files for their rewritten
   survivors — O(files-touched) data I/O, never O(table), which is the
   whole point of CoW at 10^12 files.  Readers pinned to older
-  snapshots keep seeing the pre-upsert rows (snapshot isolation).
+  snapshots keep seeing the pre-upsert rows (snapshot isolation).  A
+  rewrite keeps the index spec the live file sets record.
 
-Manifests are tiny JSON (file list + parent pointer + row/byte counts) —
-the driver-side cost of planning a scan is O(files-in-snapshot) metadata,
-never data.  Real Iceberg shards this into manifest *lists* at the
-10^12-file scale; the contract exposed to the engine is identical.
+Manifests are tiny JSON (schema + file list + per-file-set bounds and
+blooms + parent pointer + row counts) — the driver-side cost of planning
+a scan is O(files-in-snapshot) metadata, never data.  Real Iceberg shards
+this into manifest *lists* at the 10^12-file scale; the contract exposed
+to the engine is identical.
 
 Reference analog: the reference rebuilds its filter from a full table
 scan on every run (``/root/reference/prototype/ipfilter.py:124-143``);
@@ -71,10 +75,76 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MANIFEST_PREFIX = "manifest-"
+
+# snapshot 0, the empty table every first append commits after
+_EMPTY = {
+    "sid": 0, "schema": T.StructType([]).jsonValue(), "rows": 0,
+    "files": [], "added_files": [], "delete_files": [], "file_stats": {}, "file_blooms": {},
+}
+
+# [min, max] bound codec: JSON holds these types' collected values as
+# they are; decimals travel as strings, dates and timestamps as Spark's
+# internal ints (days / microseconds since the epoch)
+_PLAIN_BOUNDS = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.StringType, T.BooleanType
+)
+_BOUND_TYPES = (*_PLAIN_BOUNDS, T.DecimalType, T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def _encode_bound(v, dtype):
+    if v is None or isinstance(dtype, _PLAIN_BOUNDS):
+        return v
+    return str(v) if isinstance(dtype, T.DecimalType) else dtype.toInternal(v)
+
+
+def _decode_bound(v, dtype):
+    if v is None or isinstance(dtype, _PLAIN_BOUNDS):
+        return v
+    return Decimal(v) if isinstance(dtype, T.DecimalType) else dtype.fromInternal(v)
+
+
+def _schema(m: dict) -> T.StructType:
+    return T.StructType.fromJson(m["schema"])
+
+
+def _merge_schema(schema: T.StructType, new: T.StructType) -> T.StructType:
+    """``schema`` with the columns of ``new`` it lacks appended. Raises
+    ``ValueError`` on a column whose type differs between the two."""
+    fields = {f.name: f for f in schema}
+    for f in new:
+        have = fields.setdefault(f.name, f).dataType.simpleString()
+        if have != f.dataType.simpleString():
+            raise ValueError(f"column {f.name!r} is {f.dataType.simpleString()} here but {have} in the table")
+    return T.StructType(list(fields.values()))
+
+
+def _check_index(schema: T.StructType, stats_cols, bloom_cols) -> None:
+    """Raise ``ValueError`` unless every index column is in ``schema``
+    and every stats column has a type the bound codec holds."""
+    for c in [*stats_cols, *bloom_cols]:
+        if c not in schema.names:
+            raise ValueError(f"index column {c!r} is not a column of the data")
+    for c in stats_cols:
+        dtype = schema[c].dataType
+        if not isinstance(dtype, _BOUND_TYPES):
+            raise ValueError(
+                f"stats column {c!r} is {dtype.simpleString()}: manifest bounds cannot hold that type"
+            )
+
+
+def _key_rows(keys: DataFrame, key_col: str, schema: T.StructType) -> DataFrame:
+    """``keys[key_col]`` as rows of ``schema``, every other column NULL:
+    the doomed-key batch a delete hands ``_rewrite``."""
+    return keys.select(
+        *[F.col(c) if c == key_col else F.lit(None).cast(schema[c].dataType).alias(c) for c in schema.names]
+    )
 
 
 class SnapshotTable:
@@ -83,10 +153,13 @@ class SnapshotTable:
     Layout::
 
         table_dir/
-          data/<sid>-<uuid>.parquet/   one parquet dir per append
-          manifest-<sid>.json          {"sid", "parent", "files", "rows"}
+          data/<sid>-<uuid>.parquet/     one parquet dir per file set
+          deletes/<sid>-<uuid>.parquet/  one per merge-on-read delete
+          manifest-<sid>.json            {"sid", "parent", "schema" (Spark type
+            JSON), "files", "added_files", "file_stats" ({rel: {col: [lo, hi]}}),
+            "file_blooms" ({rel: {col: hex blob}}), "delete_files", "rows"}
 
-    Snapshot ids are dense integers assigned by ``append`` (1-based);
+    Snapshot ids are dense integers assigned by each commit (1-based);
     ``parent`` is the previous snapshot (0 = empty table), so the chain
     gives incremental scans for any (from, to] window.
     """
@@ -108,13 +181,42 @@ class SnapshotTable:
                 out.append(int(name[len(_MANIFEST_PREFIX) : -len(".json")]))
         return sorted(out)
 
-    def _read_manifest(self, sid: int) -> dict:
+    def _read_manifest(self, sid: int | None = None) -> dict:
+        """Manifest of snapshot ``sid`` (default: current; 0: the empty table)."""
+        sid = self.current_snapshot() if sid is None else sid
+        if sid == 0:
+            return dict(_EMPTY)
         with open(self._manifest_path(sid)) as fh:
             return json.load(fh)
 
     def current_snapshot(self) -> int:
         sids = self.snapshots()
         return sids[-1] if sids else 0
+
+    @staticmethod
+    def _files(m: dict, col: str) -> list[tuple]:
+        """(rel, bounds, bloom blob) per file set of manifest ``m`` for
+        ``col``, bounds decoded to the column's type; None where the
+        manifest records none."""
+        dtype = next((f.dataType for f in _schema(m) if f.name == col), None)
+        bounds = {rel: [_decode_bound(v, dtype) for v in st[col]] for rel, st in m["file_stats"].items() if col in st}
+        return [(rel, bounds.get(rel), m["file_blooms"].get(rel, {}).get(col)) for rel in m["files"]]
+
+    @staticmethod
+    def _index_spec(m: dict) -> tuple[list[str], dict[str, float]]:
+        """(stats columns, {bloom column: fpp}) recorded by the live file
+        sets of manifest ``m``; a column whose blobs differ in fpp takes
+        the smallest."""
+        from ip_filter_spark.sources.skipping import bloom_of
+
+        live = m["files"]
+        stats = list(dict.fromkeys(c for rel in live for c in m["file_stats"].get(rel, {})))
+        blooms: dict[str, float] = {}
+        for rel in live:
+            for c, blob in m["file_blooms"].get(rel, {}).items():
+                fpp = bloom_of(blob).fpp
+                blooms[c] = min(fpp, blooms.get(c, fpp))
+        return stats, blooms
 
     # -------------------------------------------------------------- write
     def append(
@@ -130,6 +232,10 @@ class SnapshotTable:
         directory is atomic; Iceberg uses the same trick via its catalog
         pointer swap).
 
+        ``df``'s new columns join the manifest schema.  A column whose
+        type differs from the table's, an index column ``df`` lacks, or a
+        stats type the bounds cannot hold raises ``ValueError`` first.
+
         ``stats_cols`` columns get [min, max] bounds recorded in the
         manifest for this file set (computed in the same count pass over
         the written files), enabling ``read_pruned`` file skipping.
@@ -139,90 +245,82 @@ class SnapshotTable:
         at this file set's row count — an upper bound on its distinct
         count, so the realized FPP is at most ``bloom_fpp``), enabling
         ``read_point`` skipping.  The build is one extra distributed
-        pass over the just-written delta — O(delta), never O(table)."""
-        from pyspark.sql import functions as F
-
-        parent = self.current_snapshot()
-        sid = parent + 1
-        rel, rows, stats, blooms = self._write_fileset(df, sid, stats_cols, bloom_cols, bloom_fpp)
-        parent_manifest = self._read_manifest(parent) if parent else {}
-        prev_files = parent_manifest.get("files", [])
-        prev_stats = parent_manifest.get("file_stats", {})
-        prev_blooms = parent_manifest.get("file_blooms", {})
-        self._commit(
-            {
-                "sid": sid,
-                "parent": parent,
-                # an all-rows-filtered append leaves an unreadable fileset:
-                # keep it out of the manifest (same rule as _rewrite) so
-                # scans never plan a schema-less path
-                "files": prev_files + ([rel] if rows else []),
-                "added_files": [rel] if rows else [],
-                "file_stats": {**prev_stats, **({rel: stats} if stats else {})},
-                "file_blooms": {**prev_blooms, **({rel: blooms} if blooms else {})},
-                "delete_files": parent_manifest.get("delete_files", []),
-                "rows": rows,
-            }
-        )
-        return sid
+        pass over the just-written delta — O(delta), never O(table).
+        Copy-on-write ops keep indexing on these columns at this fpp."""
+        m = self._read_manifest()
+        stats_cols, blooms = stats_cols or [], dict.fromkeys(bloom_cols or [], bloom_fpp)
+        schema = _merge_schema(_schema(m), df.schema)
+        _check_index(df.schema, stats_cols, blooms)
+        written = self._write_fileset(df, m["sid"] + 1, stats_cols, blooms)
+        return self._commit_filesets(m, schema, [], [written])
 
     def _write_fileset(
-        self,
-        df: DataFrame,
-        sid: int,
-        stats_cols: list[str] | None,
-        bloom_cols: list[str] | None,
-        bloom_fpp: float,
+        self, df: DataFrame, sid: int, stats_cols: list[str], blooms: dict[str, float]
     ) -> tuple[str, int, dict, dict]:
-        """Write one data file set and compute its manifest entries
-        (row count, [min, max] bounds, bloom blobs)."""
-        from pyspark.sql import functions as F
+        """Write one data file set and compute its manifest entries: (rel,
+        row count, encoded [min, max] bounds, {column: bloom blob} built
+        at each column's fpp)."""
+        from ip_filter_spark.engine import SketchSpec, build_and_merge
 
         rel = f"data/{sid}-{uuid.uuid4().hex[:8]}.parquet"
         path = os.path.join(self.table_dir, rel)
         df.write.mode("errorifexists").parquet(path)
-        try:
-            written = df.sparkSession.read.parquet(path)
-        except Exception:
-            # an all-rows-filtered write can leave no readable part files
-            return rel, 0, {}, {}
+        written = df.sparkSession.read.schema(df.schema).parquet(path)
         aggs = [F.count("*").alias("__n")]
-        for c in stats_cols or []:
+        for c in stats_cols:
             aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
         row = written.agg(*aggs).first()
-        rows = row["__n"]
-        stats = {c: [row[f"__lo_{c}"], row[f"__hi_{c}"]] for c in stats_cols or []}
-        blooms = {}
-        for c in bloom_cols or []:
-            from ip_filter_spark.engine import SketchSpec, build_and_merge
+        rows = int(row["__n"])
+        if not rows:
+            return rel, 0, {}, {}
+        stats = {
+            c: [_encode_bound(row[f"__{e}_{c}"], df.schema[c].dataType) for e in ("lo", "hi")]
+            for c in stats_cols
+        }
+        out = {}
+        for c, fpp in blooms.items():
+            spec = SketchSpec("bloom", {"fpp": fpp, "n": rows})
+            out[c] = build_and_merge(written, [spec], key=c)[spec.key()].to_bytes().hex()
+        return rel, rows, stats, out
 
-            spec = SketchSpec("bloom", {"fpp": bloom_fpp, "n": max(int(rows), 1)})
-            sk = build_and_merge(written, [spec], key=c)[spec.key()]
-            blooms[c] = sk.to_bytes().hex()
-        return rel, int(rows), stats, blooms
-
-    def _commit(self, manifest: dict) -> None:
-        tmp = self._manifest_path(manifest["sid"]) + f".tmp-{uuid.uuid4().hex[:8]}"
+    def _commit(self, parent: dict, **changes) -> int:
+        """Commit the snapshot after manifest ``parent``: its manifest
+        with ``changes`` applied, renamed into place. Returns its sid."""
+        sid = parent["sid"] + 1
+        manifest = {**parent, "sid": sid, "parent": parent["sid"], **changes}
+        tmp = self._manifest_path(sid) + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
-        os.rename(tmp, self._manifest_path(manifest["sid"]))
+        os.rename(tmp, self._manifest_path(sid))
+        return sid
+
+    def _commit_filesets(
+        self, m: dict, schema: T.StructType, dropped: list[str], written: list[tuple], **changes
+    ) -> int:
+        """Commit the snapshot after ``m`` that swaps file sets ``dropped``
+        for the ``written`` ones (``_write_fileset`` tuples).  An empty
+        written file set stays out of the manifest, so no scan plans a
+        path without rows."""
+        dropped, live = set(dropped), [w for w in written if w[1]]
+        added = [rel for rel, _, _, _ in live]
+
+        def carried(entries: dict) -> dict:
+            return {rel: e for rel, e in entries.items() if rel not in dropped}
+
+        return self._commit(
+            m,
+            schema=schema.jsonValue(),
+            files=[rel for rel in m["files"] if rel not in dropped] + added,
+            added_files=added,
+            file_stats={**carried(m["file_stats"]), **{rel: st for rel, _, st, _ in live if st}},
+            file_blooms={**carried(m["file_blooms"]), **{rel: bl for rel, _, _, bl in live if bl}},
+            rows=sum(rows for _, rows, _, _ in written),
+            **changes,
+        )
 
     # ----------------------------------------------------- copy-on-write
-    @staticmethod
-    def _files(m: dict, col: str) -> list[tuple]:
-        """(rel, bounds, bloom blob) per file set of manifest ``m`` for
-        ``col``; None where the manifest records none."""
-        stats, blooms = m.get("file_stats", {}), m.get("file_blooms", {})
-        return [(rel, stats.get(rel, {}).get(col), blooms.get(rel, {}).get(col)) for rel in m["files"]]
-
     def merge_upsert(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        key_col: str,
-        stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
-        bloom_fpp: float = 1e-8,
+        self, spark: SparkSession, updates: DataFrame, key_col: str
     ) -> tuple[int, int, int]:
         """Copy-on-write MERGE (Delta/Iceberg CoW semantics): rows of
         ``updates`` replace current rows with the same ``key_col`` value;
@@ -232,48 +330,46 @@ class SnapshotTable:
         snapshot untouched, so the data rewritten is O(files-touched),
         never O(table).  Older snapshots still read the pre-merge rows.
 
-        ``updates`` must carry the table schema and at most one row per
-        key (standard MERGE precondition).  Returns
-        (new sid, files_rewritten, files_total_before).
+        ``updates`` must carry the table's index columns and at most one
+        row per key (standard MERGE precondition); its schema merges as
+        an append's does, and the written file sets are indexed as the
+        table's are (``_index_spec``).  Returns (new sid,
+        files_rewritten, files_total_before).
 
         Planning runs on the executors (``skipping.plan_keys``): the
         manifest's bounds and blooms are broadcast, each task hashes its
         slice of the batch's keys as the build did and tests them, and
         only the hit file names reach the driver, never a key."""
-        return self._rewrite(spark, updates, key_col, insert=True, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp)
+        return self._rewrite(spark, updates, key_col, insert=True)
 
-    def delete_keys(
-        self,
-        spark: SparkSession,
-        key_col: str,
-        keys: list | DataFrame,
-        stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
-        bloom_fpp: float = 1e-8,
-    ) -> tuple[int, int, int]:
-        """Copy-on-write row-level DELETE by key batch: rewrites only the
-        file sets that may contain a doomed key.  ``keys`` is a Python
-        list for point deletes (each cast to the column's type in a tiny
-        driver-local frame, so 13 deletes 13.0 from a double column), or
-        a DataFrame carrying a ``key_col`` column for table-scale
-        batches.  Both plan with the executor-side manifest probe of
-        ``merge_upsert`` and delete via anti-join; a DataFrame batch
-        never reaches the driver.  Returns
-        (new sid, files_rewritten, files_total_before)."""
-        from pyspark.sql import functions as F
-
+    def _doomed(self, spark: SparkSession, m: dict, key_col: str, keys: list | DataFrame) -> DataFrame:
+        """``keys`` as one ``key_col`` column of the table's type: a
+        DataFrame batch is cast and deduplicated on the executors, a
+        Python list is cast by Spark in a tiny driver-local frame."""
         from ip_filter_spark.sources.skipping import literal_keys
 
-        template = self.read(spark).limit(0)
-        dtype = template.schema[key_col].dataType
+        if m["sid"] == 0:
+            raise ValueError("a delete needs an existing snapshot; use append() first")
+        dtype = _schema(m)[key_col].dataType
         if isinstance(keys, DataFrame):
-            updates = keys.select(F.col(key_col).cast(dtype)).distinct()
-        else:
-            updates = literal_keys(spark, list(keys), dtype, key_col)
-        for c in template.columns:
-            if c != key_col:
-                updates = updates.withColumn(c, F.lit(None).cast(template.schema[c].dataType))
-        return self._rewrite(spark, updates.select(template.columns), key_col, insert=False, stats_cols=stats_cols, bloom_cols=bloom_cols, bloom_fpp=bloom_fpp)
+            return keys.select(F.col(key_col).cast(dtype)).distinct()
+        return literal_keys(spark, list(keys), dtype, key_col)
+
+    def delete_keys(
+        self, spark: SparkSession, key_col: str, keys: list | DataFrame
+    ) -> tuple[int, int, int]:
+        """Copy-on-write row-level DELETE by key batch: rewrites only the
+        file sets that may contain a doomed key, indexed as before.
+        ``keys`` is a Python list for point deletes (each cast to the
+        column's type in a tiny driver-local frame, so 13 deletes 13.0
+        from a double column), or a DataFrame carrying a ``key_col``
+        column for table-scale batches.  Both plan with the
+        executor-side manifest probe of ``merge_upsert`` and delete via
+        anti-join; a DataFrame batch never reaches the driver.  Returns
+        (new sid, files_rewritten, files_total_before)."""
+        m = self._read_manifest()
+        doomed = _key_rows(self._doomed(spark, m, key_col, keys), key_col, _schema(m))
+        return self._rewrite(spark, doomed, key_col, insert=False)
 
     def delete_keys_mor(
         self, spark: SparkSession, key_col: str, keys: list | DataFrame
@@ -289,107 +385,55 @@ class SnapshotTable:
         delete-file list).  ``compact_deletes`` folds pending delete
         files back into the data (MoR's maintenance half); CoW ops
         refuse to run over pending delete files rather than silently
-        mis-compose.  Returns (new sid, n_delete_keys)."""
-        parent = self.current_snapshot()
-        if parent == 0:
-            raise ValueError("merge-on-read delete needs an existing snapshot")
-        m = self._read_manifest(parent)
-        template = self._scan(spark, m["files"]).limit(0)
-        from pyspark.sql import functions as F
-
-        from ip_filter_spark.sources.skipping import literal_keys
-
-        dtype = template.schema[key_col].dataType
+        mis-compose.  A DataFrame batch is written straight from the
+        executors, so its keys never visit the driver.  Returns
+        (new sid, n_delete_keys)."""
+        m = self._read_manifest()
+        keys_df = self._doomed(spark, m, key_col, keys)
+        rel = f"deletes/{m['sid'] + 1}-{uuid.uuid4().hex[:8]}.parquet"
+        path = os.path.join(self.table_dir, rel)
+        keys_df.write.mode("errorifexists").parquet(path)
         if isinstance(keys, DataFrame):
-            # DataFrame batch: the delete file is written straight from the
-            # executors — the doomed keys never visit the driver
-            keys_df = keys.select(F.col(key_col).cast(dtype)).distinct()
+            n_keys = spark.read.schema(keys_df.schema).parquet(path).count()
         else:
-            keys_df = literal_keys(spark, list(keys), dtype, key_col).distinct()
-        rel = f"deletes/{parent + 1}-{uuid.uuid4().hex[:8]}.parquet"
-        keys_df.write.mode("errorifexists").parquet(os.path.join(self.table_dir, rel))
-        n_keys = (
-            spark.read.parquet(os.path.join(self.table_dir, rel)).count()
-            if isinstance(keys, DataFrame)
-            else len(keys)
-        )
-        sid = parent + 1
-        self._commit(
-            {
-                "sid": sid,
-                "parent": parent,
-                "files": m["files"],
-                "added_files": [],
-                "file_stats": m.get("file_stats", {}),
-                "file_blooms": m.get("file_blooms", {}),
-                "delete_files": m.get("delete_files", []) + [{"path": rel, "key_col": key_col}],
-                "rows": m["rows"],
-            }
-        )
+            n_keys = len(keys)
+        dels = m["delete_files"] + [{"path": rel, "key_col": key_col}]
+        sid = self._commit(m, added_files=[], delete_files=dels)
         return sid, n_keys
 
-    def compact_deletes(
-        self,
-        spark: SparkSession,
-        stats_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
-        bloom_fpp: float = 1e-8,
-    ) -> tuple[int, int, int]:
+    def compact_deletes(self, spark: SparkSession) -> tuple[int, int, int]:
         """Fold pending MoR delete files into the data (Iceberg's
         rewrite_data_files over deletes): a CoW rewrite of ONLY the file
-        sets that may hold a doomed key, committing a manifest with the
-        delete-file list cleared — reads stop paying the anti-join, and
-        the stranded data + delete files become ``vacuum`` candidates
-        after ``expire_snapshots``.  No-op (returns current sid, 0,
-        total) when nothing is pending.  Returns (sid,
-        files_rewritten, files_total_before)."""
-        m = self._read_manifest(self.current_snapshot())
-        dels = m.get("delete_files", [])
-        if not dels:
+        sets that may hold a doomed key, indexed as before, committing a
+        manifest with the delete-file list cleared — reads stop paying
+        the anti-join, and the stranded data + delete files become
+        ``vacuum`` candidates after ``expire_snapshots``.  No-op
+        (returns current sid, 0, total) when nothing is pending.
+        Returns (sid, files_rewritten, files_total_before)."""
+        m = self._read_manifest()
+        pending = self._pending_deletes(spark, m)
+        if not pending:
             return m["sid"], 0, len(m["files"])
-        by_col: dict[str, list[str]] = {}
-        for d in dels:
-            by_col.setdefault(d["key_col"], []).append(d["path"])
-        if len(by_col) != 1:
+        if len(pending) != 1:
             raise ValueError("compact_deletes supports one delete key column per run")
-        key_col, paths = next(iter(by_col.items()))
-        keys_df = spark.read.parquet(
-            *[os.path.join(self.table_dir, p) for p in paths]
-        ).select(key_col).distinct()
-        template = self._scan(spark, m["files"]).limit(0)
-        from pyspark.sql import functions as F
+        ((key_col, keys),) = pending.items()
+        doomed = _key_rows(keys, key_col, _schema(m))
+        return self._rewrite(spark, doomed, key_col, insert=False, _compacting_deletes=True)
 
-        updates = keys_df
-        for c in template.columns:
-            if c != key_col:
-                updates = updates.withColumn(c, F.lit(None).cast(template.schema[c].dataType))
-        return self._rewrite(
-            spark,
-            updates.select(template.columns),
-            key_col,
-            insert=False,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
-            bloom_fpp=bloom_fpp,
-            _compacting_deletes=True,
-        )
+    def _pending_deletes(self, spark: SparkSession, m: dict) -> dict[str, DataFrame]:
+        """{key column: its distinct doomed keys} over the pending delete
+        files of manifest ``m``, each read with the column's table type."""
+        paths: dict[str, list[str]] = {}
+        for d in m["delete_files"]:
+            paths.setdefault(d["key_col"], []).append(os.path.join(self.table_dir, d["path"]))
+        schema = _schema(m)
+        return {c: spark.read.schema(T.StructType([schema[c]])).parquet(*p).distinct() for c, p in paths.items()}
 
     def _apply_deletes(self, spark: SparkSession, df: DataFrame, m: dict) -> DataFrame:
         """Anti-join the manifest's pending delete files into a scan —
         the MoR read path.  Delete sets are O(delta) so they broadcast;
         a no-delete manifest returns the scan unchanged."""
-        dels = m.get("delete_files", [])
-        if not dels:
-            return df
-        from pyspark.sql import functions as F
-
-        by_col: dict[str, list[str]] = {}
-        for d in dels:
-            by_col.setdefault(d["key_col"], []).append(d["path"])
-        for key_col, paths in by_col.items():
-            keys = spark.read.parquet(
-                *[os.path.join(self.table_dir, p) for p in paths]
-            ).select(key_col).distinct()
+        for key_col, keys in self._pending_deletes(spark, m).items():
             df = df.join(F.broadcast(keys), key_col, "left_anti")
         return df
 
@@ -399,91 +443,56 @@ class SnapshotTable:
         updates: DataFrame,
         key_col: str,
         insert: bool,
-        stats_cols: list[str] | None,
-        bloom_cols: list[str] | None,
-        bloom_fpp: float,
         _compacting_deletes: bool = False,
     ) -> tuple[int, int, int]:
-        parent = self.current_snapshot()
-        if parent == 0:
+        from ip_filter_spark.sources.skipping import plan_keys
+
+        m = self._read_manifest()
+        if m["sid"] == 0:
             raise ValueError("copy-on-write needs an existing snapshot; use append() first")
-        sid = parent + 1
-        m = self._read_manifest(parent)
-        if m.get("delete_files") and not _compacting_deletes:
+        if m["delete_files"] and not _compacting_deletes:
             raise ValueError(
                 "pending merge-on-read delete files; run compact_deletes() before CoW ops"
             )
-        from ip_filter_spark.sources.skipping import plan_keys
-
+        schema, (stats_cols, blooms) = _schema(m), self._index_spec(m)
+        if insert:
+            schema = _merge_schema(schema, updates.schema)
+            _check_index(updates.schema, stats_cols, blooms)
         touched = plan_keys(updates, key_col, self._files(m, key_col))
-        new_files = [f for f in m["files"] if f not in set(touched)]
-        added = []
-        file_stats = {k: v for k, v in m.get("file_stats", {}).items() if k not in set(touched)}
-        file_blooms = {k: v for k, v in m.get("file_blooms", {}).items() if k not in set(touched)}
-        rewritten_rows = 0
+        written = []
         if touched:
             doomed = updates.select(key_col).distinct()
-            survivors = self._scan(spark, touched).join(doomed, key_col, "left_anti")
-            rel, rows, st, bl = self._write_fileset(survivors, sid, stats_cols, bloom_cols, bloom_fpp)
-            rewritten_rows = rows
-            if rows:
-                new_files.append(rel)
-                added.append(rel)
-                if st:
-                    file_stats[rel] = st
-                if bl:
-                    file_blooms[rel] = bl
+            survivors = self._scan(spark, touched, _schema(m)).join(doomed, key_col, "left_anti")
+            written.append(self._write_fileset(survivors, m["sid"] + 1, stats_cols, blooms))
         if insert:
-            rel, rows, st, bl = self._write_fileset(updates, sid, stats_cols, bloom_cols, bloom_fpp)
-            if rows:
-                new_files.append(rel)
-                added.append(rel)
-                if st:
-                    file_stats[rel] = st
-                if bl:
-                    file_blooms[rel] = bl
-            rewritten_rows += rows
-        self._commit(
-            {
-                "sid": sid,
-                "parent": parent,
-                "files": new_files,
-                "added_files": added,
-                "file_stats": file_stats,
-                "file_blooms": file_blooms,
-                # CoW output never carries delete files: a plain rewrite had
-                # none pending (it refuses otherwise); compaction folds them in
-                "delete_files": [],
-                "rows": rewritten_rows,
-            }
-        )
+            written.append(self._write_fileset(updates, m["sid"] + 1, stats_cols, blooms))
+        # CoW output never carries delete files: a plain rewrite had none
+        # pending (it refuses otherwise); compaction folds them in
+        sid = self._commit_filesets(m, schema, touched, written, delete_files=[])
         return sid, len(touched), len(m["files"])
 
     # --------------------------------------------------------------- read
     def _scan(
-        self, spark: SparkSession, rel_files: list[str], merge_schema: bool = False
+        self, spark: SparkSession, rel_files: list[str], schema: T.StructType | None = None
     ) -> DataFrame:
-        paths = [os.path.join(self.table_dir, rel) for rel in rel_files]
-        if not paths:
-            raise ValueError("empty file list — nothing to scan")
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        """Scan ``rel_files`` with ``schema`` (default: the current
+        snapshot's), so no footer is inferred and a column a file lacks
+        reads as NULL.  No files give a zero-row frame of the schema."""
+        schema = _schema(self._read_manifest()) if schema is None else schema
+        if not rel_files:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*[os.path.join(self.table_dir, rel) for rel in rel_files])
 
-    def read(
-        self, spark: SparkSession, sid: int | None = None, merge_schema: bool = False
-    ) -> DataFrame:
-        """Scan snapshot ``sid`` (default: current).  Time travel is just
-        planning over an older manifest's file list.  ``merge_schema``
-        plans the union schema across file sets (add-column evolution:
-        files written before a column existed read as NULL).  Pending
-        merge-on-read delete files apply as broadcast anti-joins — each
-        manifest carries its own delete list, so time travel to a
-        pre-delete snapshot still reads the rows."""
-        sid = self.current_snapshot() if sid is None else sid
+    def read(self, spark: SparkSession, sid: int | None = None) -> DataFrame:
+        """Scan snapshot ``sid`` (default: current) with its manifest
+        schema.  Time travel is just planning over an older manifest's
+        file list and schema; files written before a column was added
+        read it as NULL.  Pending merge-on-read delete files apply as
+        broadcast anti-joins — each manifest carries its own delete
+        list, so time travel to a pre-delete snapshot still reads the
+        rows.  No parquet footer is read."""
         m = self._read_manifest(sid)
-        return self._apply_deletes(spark, self._scan(spark, m["files"], merge_schema), m)
+        return self._apply_deletes(spark, self._scan(spark, m["files"], _schema(m)), m)
 
     def plan_pruned(self, col: str, lo, hi, sid: int | None = None) -> tuple[list[str], int]:
         """Manifest-only planning for ``col BETWEEN lo AND hi``: returns
@@ -494,7 +503,7 @@ class SnapshotTable:
         10^12-file planning path."""
         from ip_filter_spark.sources.skipping import may_hold
 
-        m = self._read_manifest(self.current_snapshot() if sid is None else sid)
+        m = self._read_manifest(sid)
         return [rel for rel, b, _ in self._files(m, col) if may_hold(b, None, lo, hi, None)], len(m["files"])
 
     def read_pruned(
@@ -503,37 +512,31 @@ class SnapshotTable:
         """Scan only the files ``plan_pruned`` keeps, with the row-level
         predicate applied on top (file skipping is a superset guarantee,
         never a filter).  Returns (df, files_planned, files_total)."""
-        from pyspark.sql import functions as F
-
-        sid = self.current_snapshot() if sid is None else sid
-        kept, total = self.plan_pruned(col, lo, hi, sid)
-        df = self._scan(spark, kept).where(F.col(col).between(lo, hi))
-        return self._apply_deletes(spark, df, self._read_manifest(sid)), len(kept), total
+        m = self._read_manifest(sid)
+        kept, total = self.plan_pruned(col, lo, hi, m["sid"])
+        df = self._scan(spark, kept, _schema(m)).where(F.col(col).between(lo, hi))
+        return self._apply_deletes(spark, df, m), len(kept), total
 
     def plan_point(self, col: str, value, sid: int | None = None) -> tuple[list[str], int]:
         """Manifest-only planning for ``col = value``: keep a file when
         its Bloom sketch says maybe-present (or it has no bloom for
         ``col`` — conservative, like missing min/max stats), further
         intersected with recorded [min, max] bounds when both exist.
-        The value is cast to the column's Spark type (read from one
-        file set's footer) and hashed by the build's own JVM expression
+        The value is cast to the column's Spark type (from the manifest
+        schema) and hashed by the build's own JVM expression
         (``skipping.probe_keys``), so build and probe agree bit for bit
         on every key type: 13 probes a ``decimal(10,2)`` bloom as
         ``'13.00'`` and 2.5e10 a double bloom as ``'2.5E10'``.  No data
-        file is read: the footer read and the hash are two small Spark
-        jobs, and the blobs are probed driver-side, O(files) at 10^12
-        files."""
-        from pyspark.sql import SparkSession
-
+        file or footer is read: the hash is one small Spark job on the
+        active session, and the blobs are probed driver-side, O(files)
+        at 10^12 files."""
         from ip_filter_spark.sources.skipping import bloom_of, literal_probe, may_hold
 
-        m = self._read_manifest(self.current_snapshot() if sid is None else sid)
+        m = self._read_manifest(sid)
         files = self._files(m, col)
-        typed = next((rel for rel, b, blob in files if b is not None or blob is not None), None)
-        if typed is None:  # nothing recorded for col: every file set stays
-            return [rel for rel, _, _ in files], len(files)
-        spark = SparkSession.active()
-        kmin, kmax, h64 = literal_probe(spark, [value], self._scan(spark, [typed]).schema[col].dataType)
+        if all(b is None and blob is None for _, b, blob in files):
+            return [rel for rel, _, _ in files], len(files)  # nothing recorded for col
+        kmin, kmax, h64 = literal_probe(SparkSession.active(), [value], _schema(m)[col].dataType)
         return [rel for rel, b, blob in files if may_hold(b, bloom_of(blob), kmin, kmax, h64)], len(files)
 
     def read_point(
@@ -543,31 +546,26 @@ class SnapshotTable:
         equality predicate applied on top (bloom skipping is a superset
         guarantee — false positives scan and filter to nothing, never a
         wrong row).  Returns (df, files_planned, files_total); when every
-        file is skipped the DataFrame is a zero-row plan over the
+        file is skipped the DataFrame is a zero-row frame of the
         snapshot's schema."""
-        from pyspark.sql import functions as F
-
-        sid = self.current_snapshot() if sid is None else sid
-        kept, total = self.plan_point(col, value, sid)
         m = self._read_manifest(sid)
-        if not kept:
-            return self._scan(spark, m["files"][:1]).where(F.lit(False)), 0, total
-        df = self._scan(spark, kept).where(F.col(col) == F.lit(value))
+        kept, total = self.plan_point(col, value, m["sid"])
+        df = self._scan(spark, kept, _schema(m)).where(F.col(col) == F.lit(value))
         return self._apply_deletes(spark, df, m), len(kept), total
 
     def incremental(self, spark: SparkSession, from_sid: int, to_sid: int) -> DataFrame:
         """Scan only files appended in snapshots (from_sid, to_sid] —
-        the O(delta) maintenance read.  ``from_sid=0`` means 'since the
-        empty table' (equivalent to ``read(to_sid)``)."""
+        the O(delta) maintenance read, with ``to_sid``'s schema.
+        ``from_sid=0`` means 'since the empty table' (equivalent to
+        ``read(to_sid)``)."""
         if not 0 <= from_sid < to_sid:
             raise ValueError(f"need 0 <= from_sid < to_sid, got ({from_sid}, {to_sid}]")
-        added: list[str] = []
-        sid = to_sid
-        while sid > from_sid:
-            m = self._read_manifest(sid)
+        m = self._read_manifest(to_sid)
+        schema, added = _schema(m), m["added_files"]
+        while m["parent"] > from_sid:
+            m = self._read_manifest(m["parent"])
             added = m["added_files"] + added
-            sid = m["parent"]
-        return self._scan(spark, added)
+        return self._scan(spark, added, schema)
 
     # ------------------------------------------------------------ lifecycle
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
@@ -601,7 +599,7 @@ class SnapshotTable:
         for sid in self.snapshots():
             m = self._read_manifest(sid)
             live.update(m["files"])
-            live.update(d["path"] for d in m.get("delete_files", []))
+            live.update(d["path"] for d in m["delete_files"])
         deleted, kept = [], []
         for sub in ("data", "deletes"):
             subdir = os.path.join(self.table_dir, sub)

@@ -1457,8 +1457,8 @@ def test_snapshot_pruning_and_schema_evolution(spark, tmp_path):
     file sets whose recorded bounds intersect it, file sets without
     stats are conservatively kept, boundary-touching sets are kept, and
     the pruned read returns exactly the filtered rows. Add-column
-    evolution: merge_schema reads back-fill NULL for pre-evolution
-    files."""
+    evolution: reads with the manifest's union schema back-fill NULL
+    for pre-evolution files."""
     from pyspark.sql import functions as F
 
     from ip_filter_spark.sources.snapshots import SnapshotTable
@@ -1484,14 +1484,14 @@ def test_snapshot_pruning_and_schema_evolution(spark, tmp_path):
     kept, _ = t.plan_pruned("k", 50, 60)
     assert len(kept) == 1
 
-    # schema evolution: a later append adds a column; merge_schema
-    # back-fills NULL for the older files
+    # schema evolution: a later append adds a column; the manifest
+    # schema back-fills NULL for the older files
     t2 = SnapshotTable(str(tmp_path / "tbl2"))
     t2.append(spark.range(0, 5).withColumnRenamed("id", "k"))
     t2.append(
         spark.range(5, 8).withColumnRenamed("id", "k").withColumn("q", F.col("k") * 2)
     )
-    cur = t2.read(spark, merge_schema=True)
+    cur = t2.read(spark)
     assert set(cur.columns) == {"k", "q"}
     rows = {r.k: r.q for r in cur.collect()}
     assert len(rows) == 8
@@ -1569,9 +1569,7 @@ def test_snapshot_copy_on_write_upsert_and_delete(spark, tmp_path):
 
     # upsert keys 5 and 13 (both ≡ 1 mod 4 — ONE file set touched) + a new key 100
     updates = spark.createDataFrame([(5, -5), (13, -13), (100, -100)], "k long, v long")
-    sid, rewritten, total = t.merge_upsert(
-        spark, updates, "k", stats_cols=["k"], bloom_cols=["k"]
-    )
+    sid, rewritten, total = t.merge_upsert(spark, updates, "k")
     assert (rewritten, total) == (1, 4)
     files_after = set(t._read_manifest(sid)["files"])
     assert len(files_before & files_after) == 3  # 3 file sets untouched
@@ -1584,9 +1582,7 @@ def test_snapshot_copy_on_write_upsert_and_delete(spark, tmp_path):
     assert old[5] == 50 and 100 not in old and len(old) == 40
 
     # delete two keys in different buckets -> two file sets rewritten
-    sid2, rewritten2, total2 = t.delete_keys(
-        spark, "k", [100, 2], stats_cols=["k"], bloom_cols=["k"]
-    )
+    sid2, rewritten2, total2 = t.delete_keys(spark, "k", [100, 2])
     assert rewritten2 == 2 and total2 == len(files_after)
     cur2 = {r.k: r.v for r in t.read(spark).collect()}
     assert len(cur2) == 39 and 100 not in cur2 and 2 not in cur2
@@ -1744,7 +1740,7 @@ def test_snapshot_mor_delete_read_paths_and_compaction(spark, tmp_path):
     t.delete_keys_mor(spark, "k", [7])
     assert t.read(spark).count() == 17
 
-    csid, rewritten, total = t.compact_deletes(spark, stats_cols=["k"], bloom_cols=["k"])
+    csid, rewritten, total = t.compact_deletes(spark)
     assert rewritten == 2 and total == 2
     assert t._read_manifest(csid).get("delete_files") == []
     assert sorted(r.k for r in t.read(spark).collect()) == [

@@ -128,6 +128,41 @@ def test_serialization_roundtrip(name):
     assert s2.n_items == s.n_items
 
 
+# one pair of sketches per class that differ in a merge param, and the
+# param named in the error
+MISMATCHED = {
+    "bloom": ({"fpp": 1e-4, "n": 1000}, {"fpp": 1e-4, "n": 2000}, "m"),
+    "cbf": ({"n": 1000}, {"n": 2000}, "m"),
+    "hll": ({"p": 10}, {"p": 12}, "p"),
+    "cms": ({"width": 64, "depth": 3}, {"width": 128, "depth": 3}, "w"),
+    "countsketch": ({"width": 64}, {"width": 128}, "w"),
+    "cuckoo": ({"n": 1000}, {"n": 100_000}, "nb"),
+    "kll": ({"k": 100}, {"k": 200}, "k"),
+    "ddsketch": ({"alpha": 0.01}, {"alpha": 0.02}, "alpha"),
+    "tdigest": ({"delta": 100.0}, {"delta": 200.0}, "delta"),
+    "minhash": ({"num_perm": 16}, {"num_perm": 32}, "num_perm"),
+    "mg": ({"capacity": 8}, {"capacity": 16}, "capacity"),
+    "kmv": ({"k": 64}, {"k": 128}, "k"),
+    "fd": ({"ell": 8, "dim": 4}, {"ell": 8, "dim": 5}, "dim"),
+}
+
+
+@pytest.mark.parametrize("name", list(MISMATCHED))
+def test_mismatched_merge_raises_value_error(name):
+    """A merge of incompatible sketches raises ValueError naming the
+    param (an explicit check, so ``python -O`` keeps it), and a sketch
+    of another class is refused; equal params still merge."""
+    from ip_filter_spark.sketches import make_sketch
+
+    mine, theirs, param = MISMATCHED[name]
+    with pytest.raises(ValueError, match=rf"different .*\b{param}\b"):
+        make_sketch(name, **mine).merge(make_sketch(name, **theirs))
+    other = HyperLogLog(p=10) if name != "hll" else BloomFilter()
+    with pytest.raises(ValueError, match="different classes"):
+        make_sketch(name, **mine).merge(other)
+    make_sketch(name, **mine).merge(make_sketch(name, **mine))
+
+
 # ---------------------------------------------------------------- cbf
 def test_cbf_delete_and_count():
     keys = hashes_of(1000, seed=9)

@@ -1,11 +1,14 @@
 """File skipping across key types: the snapshot planners and the sidecar
 Bloom index hash a probe key the way the build hashed the column, so a
 point read keeps exactly the file sets that hold the key on long,
-string, double, boolean and decimal columns."""
+string, double, boolean and decimal columns. The snapshot manifest is
+the table's metadata authority: typed bounds, the schema every reader
+scans with, and the index spec copy-on-write rewrites keep."""
 
 import hashlib
 import json
 import os
+import uuid
 from decimal import Decimal
 
 import numpy as np
@@ -134,3 +137,111 @@ def test_bloom_blobs_are_unchanged(spark, sf_dir, tmp_path):
         idx = write_bloom_index(spark, data, "k", fpp=1e-4, expected_keys_per_file=10_000)
         blobs = sorted((os.path.basename(r.file), bytes(r.blob)) for r in spark.read.parquet(idx).collect())
         assert hashlib.sha256(b"".join(b for _, b in blobs)).hexdigest() == _GOLDEN["index", name]
+
+
+def _jobs(spark, fn):
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# stats columns whose collected bounds JSON cannot hold as they are
+TYPED_BOUNDS = {
+    "decimal(10,2)": "id / 4",
+    "date": "date_add(DATE'2024-01-01', CAST(id AS INT))",
+    "timestamp": "timestamp_seconds(id * 3600)",
+}
+
+
+@pytest.mark.parametrize("key_type", list(TYPED_BOUNDS))
+def test_typed_bounds_round_trip_and_prune(spark, tmp_path, key_type):
+    """Bounds on decimal, date and timestamp columns commit, decode to
+    the exact [min, max] each file set holds, and let plan_pruned and
+    read_point keep exactly the one file set that holds a value."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    rows = spark.range(0, 20).select(F.expr(TYPED_BOUNDS[key_type]).cast(key_type).alias("k"), "id")
+    for i in range(2):
+        t.append(rows.where((F.col("id") >= 10 * i) & (F.col("id") < 10 * i + 10)), stats_cols=["k"], bloom_cols=["k"])
+    m = t._read_manifest()
+    for rel, bounds, _ in t._files(m, "k"):
+        lo_hi = t._scan(spark, [rel]).agg(F.min("k"), F.max("k")).first()
+        assert bounds == [lo_hi[0], lo_hi[1]], (key_type, rel)
+    value = t.read(spark).where("id = 13").first().k
+    holds = [rel for rel in m["files"] if t._scan(spark, [rel]).where(F.col("k") == F.lit(value)).count()]
+    assert t.plan_pruned("k", value, value) == (holds, 2) and len(holds) == 1
+    df, planned, total = t.read_point(spark, "k", value)
+    assert (planned, total) == (1, 2) and [r.id for r in df.collect()] == [13]
+
+
+def test_bad_schema_or_index_raises_before_any_write(spark, tmp_path):
+    """An unsupported stats type and a column whose type conflicts with
+    the table's each raise ValueError before a file set is written."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    data = os.path.join(t.table_dir, "data")
+    with pytest.raises(ValueError, match="'b'"):
+        t.append(spark.range(3).select(F.col("id").alias("k"), F.array("id").alias("b")), stats_cols=["b"])
+    assert os.listdir(data) == [] and t.snapshots() == []
+    t.append(spark.range(3).withColumnRenamed("id", "k"))
+    with pytest.raises(ValueError, match="'k'"):
+        t.append(spark.range(3).select(F.col("id").cast("string").alias("k")))
+    with pytest.raises(ValueError, match="'k'"):
+        t.merge_upsert(spark, spark.range(3).select(F.col("id").cast("int").alias("k")), "k")
+    assert len(os.listdir(data)) == 1 and t.snapshots() == [1]
+
+
+def test_copy_on_write_keeps_the_index_spec(spark, tmp_path):
+    """delete_keys and merge_upsert with no index arguments index the
+    file sets they write as the table's are: bounds and a bloom at the
+    recorded fpp, so plan_point still keeps 1 of 4 file sets."""
+    from ip_filter_spark.sources.skipping import bloom_of
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(0, 40).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+    for i in range(4):
+        t.append(base.where(F.col("k") % 4 == i), stats_cols=["k"], bloom_cols=["k"], bloom_fpp=1e-6)
+    t.delete_keys(spark, "k", [5])
+    kept, total = t.plan_point("k", 9)
+    assert (len(kept), total) == (1, 4) and t._scan(spark, kept).where("k = 9").count() == 1
+    # the upsert rewrites bucket 2 and writes its inserted row as a fifth file set
+    t.merge_upsert(spark, spark.createDataFrame([(6, -6), (100, -100)], "k long, v long"), "k")
+    m = t._read_manifest()
+    assert len(m["files"]) == 5
+    for rel in m["files"]:
+        assert set(m["file_stats"][rel]) == {"k"}
+        assert bloom_of(m["file_blooms"][rel]["k"]).fpp == 1e-6
+    assert [len(t.plan_point("k", v)[0]) for v in (9, 6, 100)] == [1, 1, 1]
+
+
+def test_plain_read_returns_the_evolved_schema(spark, tmp_path):
+    """An append that adds a column merges it into the manifest schema:
+    read, read_pruned and incremental all scan the union of the columns,
+    NULL where a file set predates the column."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.range(0, 4).withColumnRenamed("id", "k"), stats_cols=["k"])
+    t.append(spark.range(4, 6).select(F.col("id").alias("k"), F.lit("x").alias("tag")), stats_cols=["k"])
+    got = {r.k: r.tag for r in t.read(spark).collect()}
+    assert got == {0: None, 1: None, 2: None, 3: None, 4: "x", 5: "x"}
+    df, _, _ = t.read_pruned(spark, "k", 0, 1)
+    assert df.columns == ["k", "tag"] and df.count() == 2
+    assert t.incremental(spark, 0, 2).columns == ["k", "tag"]
+    assert t.read(spark, sid=1).columns == ["k"]
+
+
+def test_planning_reads_no_footer(spark, tmp_path):
+    """plan_point runs one Spark job (the probe-key hash) and the
+    readers run none: the schema comes from the manifest."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    base = spark.range(0, 40).select(F.col("id").alias("k"))
+    for i in range(4):
+        t.append(base.where(F.col("k") % 4 == i), stats_cols=["k"], bloom_cols=["k"])
+    assert _jobs(spark, lambda: t.plan_point("k", 13)) == 1
+    assert _jobs(spark, lambda: t.read_point(spark, "k", 13)) == 1
+    assert _jobs(spark, lambda: t.read(spark)) == 0
+    assert _jobs(spark, lambda: t.read_pruned(spark, "k", 3, 5)) == 0
+    assert _jobs(spark, lambda: t.incremental(spark, 1, 3)) == 0
