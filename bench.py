@@ -1135,9 +1135,9 @@ rates and paired ratios are in BENCH/scaling_runs.jsonl (`kind:
 "probe"` rows). Form B (one JVM, no multi-JVM window exposure) is the
 steal-robust diagnostic: 0.64–0.71 across every round-4 run including
 the contended ones. Engineering responses shipped round 3–4: 8k-row
-kernel sub-chunking (`operators/lpm.py::_KERNEL_CHUNK`, cache-resident
-temporaries — the 32-core headline probe rate rose to 1.30M rows/s,
-4.0× round 2) and 16-byte probe digest truncation (halved Arrow
+kernel sub-chunking (`operators/lpm.py::_KERNEL_CHUNK`, since raised to
+one 10k-row Arrow batch; cache-resident temporaries — the 32-core
+headline probe rate rose to 1.30M rows/s, 4.0× round 2) and 16-byte probe digest truncation (halved Arrow
 bytes/row) — the quiet-window Form B ratio rose 0.537 → 0.686 → 0.705
 across those runs, the direction the substrate controls predicted for
 a bandwidth-bound kernel. Round 5 cut bytes/row to the floor: the

@@ -18,9 +18,13 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# Arrow batch size: the guided-LPM probe materialises a (batch, L, 8)
-# uint64 working set per batch; 10k rows x 16 depths x 8B ~ 1.3 MB —
-# cache-friendly and far below executor memory at any scale.
+# Arrow batch size: rows per batch crossing into every pandas/Arrow UDF.
+# It is also the LPM probe's rows per kernel call (lpm._KERNEL_CHUNK),
+# so a batch of this size runs in one call: an IPv4 batch holds one
+# int64 key per row (80 KB at 10k rows), and a path/IPv6 batch a
+# (rows, D) hash matrix (1.3 MB at 16 depths), both cache-friendly and
+# far below executor memory at any scale; every call also carries a few
+# ms of fixed numpy overhead, so fewer, whole-batch calls are cheaper.
 ARROW_BATCH = 10_000
 
 
@@ -60,30 +64,40 @@ def get_spark(
     return spark
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """The zip of the package at ``pkg_dir``, built once per distinct
+    content. Its name carries a hash of every module's archive name and
+    bytes, so sessions from checkouts that differ in any module never
+    share a zip: ``addPyFile`` puts it ahead of the executors'
+    PYTHONPATH, and a zip from another checkout would shadow this one."""
+    import hashlib
+    import zipfile
+
+    files = []  # (archive name, bytes) of every module, in a fixed order
+    for root, _, names in sorted(os.walk(pkg_dir)):
+        for f in sorted(names):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    files.append((os.path.relpath(full, os.path.dirname(pkg_dir)), fh.read()))
+    digest = hashlib.sha256()
+    for rel, body in files:
+        digest.update(f"{rel}\0{len(body)}\0".encode() + body)
+    zip_path = os.path.join(tempfile.gettempdir(), f"ip_filter_spark_pkg_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        # per-process tmp name: concurrent sessions (multi-executor bench
+        # harnesses) may build the same zip at once, and a shared ".tmp"
+        # lets one process's os.replace steal another's staging file
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, body in files:  # the bytes hashed, not a later re-read
+                zf.writestr(rel, body)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make the library importable on executors regardless of cwd: zip the
     package and addPyFile it — the programmatic equivalent of
     ``spark-submit --py-files ip_filter_spark.zip`` (north-rule packaging)."""
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "ip_filter_spark_pkg.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    ):
-        # per-process tmp name: concurrent sessions (multi-executor bench
-        # harnesses) may rebuild simultaneously, and a shared ".tmp" lets
-        # one process's os.replace steal another's staging file
-        tmp = f"{zip_path}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _, files in os.walk(pkg_dir):
-                for f in sorted(files):
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip(os.path.dirname(os.path.abspath(__file__))))

@@ -17,9 +17,11 @@ so each key domain is a column-expression mapping plus a truncation:
 Parsing, masking and formatting run JVM-side (whole-stage codegen).
 Per-depth key hashing runs JVM-side too, except for numeric IPv4: there
 the LPM kernels receive the address as one int64 column and hash it in
-the Python worker with ``ip4_depth_hashes``, bit-identical to the JVM's
-``xxhash64(depth, ip4_trunc(key, depth))`` (see operators/lpm.py "Key
-encoding").
+the Python worker, bit-identical to the JVM's ``xxhash64(depth,
+ip4_trunc(key, depth))`` (see operators/lpm.py "Key encoding"). The
+build hashes every depth of a route at once (``ip4_depth_hashes``, an
+(n, D) matrix); the probe hashes only the (row, depth) cells it reads
+(``Ip4HashSource``: a table gather up to /16, the twin below that).
 
 Golden behavior pinned from the reference's test suite
 (/root/reference/prototype/tests.py_bak:309-349): 1.0.0.0 → /24 when
@@ -130,6 +132,13 @@ _POW10 = np.array([10**i for i in range(10)], dtype=np.uint64)
 # v < 10^4 → its 4 zero-padded ASCII digits, the most significant in the
 # lowest byte: the little-endian int XXH64 reads from those 4 bytes
 _ASCII4 = sum(((np.arange(10_000) // 10 ** (3 - i)) % 10 + 0x30) << (8 * i) for i in range(4)).astype(np.uint64)
+# the 8-digit word times P2, by its halves: word = first4 | next4 << 32,
+# so word * P2 = first4 * P2 + (next4 << 32) * P2 (mod 2^64); and each
+# ASCII digit's byte times P5
+with np.errstate(over="ignore"):
+    _FIRST4_P2 = _ASCII4 * _P2
+    _NEXT4_P2 = (_ASCII4 << _U(32)) * _P2
+    _DIGIT_P5 = (np.arange(10, dtype=np.uint64) + _U(0x30)) * _P5
 # rows x depths per block of ip4_depth_hashes: 128 KB temporaries stay in
 # L2 and under numpy's 256 KB temporary-elision threshold, whose check is
 # a costly stack walk on every larger binary op
@@ -160,21 +169,24 @@ def _xxh64_depth_seeds(depths) -> np.ndarray:
 def _xxh64_digits8_10(t, seed):
     """XXH64 of the decimal strings of 10^7 <= t < 10^10 (8-10 digits):
     one 8-byte word (the first 8 digits), then 0-2 single bytes. Both
-    byte steps are computed for every cell and kept by a 0/1 multiply,
-    which numpy runs faster than a data-dependent ``where``."""
-    ge9 = (t >= _POW10[8]).astype(np.uint64)
-    ge10 = (t >= _POW10[9]).astype(np.uint64)
+    byte steps are computed for every cell and kept where the string has
+    that byte; the word's first multiply and every byte's are table
+    gathers (``_FIRST4_P2``, ``_NEXT4_P2``, ``_DIGIT_P5``). Few numpy
+    ops per call matters as much as few per cell: the probe's hash
+    source calls this on a few thousand cells at a time."""
+    ge9 = t >= _POW10[8]
+    ge10 = t >= _POW10[9]
     t10 = t // _U(10)
     t100 = t10 // _U(10)
-    first8 = t + ge9 * (t10 - t) + ge10 * (t100 - t10)  # t // 10^(len - 8)
+    first8 = np.where(ge10, t100, np.where(ge9, t10, t))  # t // 10^(len - 8)
     hi = first8 // _U(10_000)
-    word = _ASCII4[hi] | (_ASCII4[first8 - hi * _U(10_000)] << _U(32))
+    word_p2 = _FIRST4_P2[hi.astype(np.intp)] + _NEXT4_P2[(first8 - hi * _U(10_000)).astype(np.intp)]
     h = seed + _P5 + _U(8) + ge9 + ge10
-    h ^= _rotl(word * _P2, 31) * _P1
+    h ^= _rotl(word_p2, 31) * _P1
     h = _rotl(h, 27) * _P1 + _P4
     for digit, present in ((t10 - t100 * _U(10), ge10), (t - t10 * _U(10), ge9)):
-        step = _rotl(h ^ ((digit + _U(0x30)) * _P5), 11) * _P1
-        h ^= (h ^ step) * present
+        step = _rotl(h ^ _DIGIT_P5[digit.astype(np.intp)], 11) * _P1
+        h = np.where(present, step, h)
     return _fmix(h)
 
 
@@ -195,13 +207,26 @@ def _xxh64_digits1_7(t, seed):
     return _fmix(h)
 
 
+def _twin(t, seeds):
+    """XXH64 of the decimal strings of truncations ``t`` (uint64, each
+    below 2^32) under ``seeds`` (broadcastable to ``t``): the 8-10 digit
+    hash for every cell, redone for the rare cells under 10^7."""
+    h = _xxh64_digits8_10(t, seeds)
+    short = t < _POW10[7]
+    if short.any():
+        h[short] = _xxh64_digits1_7(t[short], np.broadcast_to(seeds, t.shape)[short])
+    return h
+
+
 def ip4_depth_hashes(keys: np.ndarray, depths) -> np.ndarray:
     """(n, D) uint64 key hashes of int64 v4 ``keys`` at each depth, bit
     for bit the values ``lpm._depth_hashes(key, depths, ip4_trunc)``
     computes JVM-side: ``xxhash64(int d, string(key & mask_d))``. A key
     of -1 stands for null and hashes to the per-depth seed, as
     ``xxhash64(d, NULL)`` does. Keys must lie in [-1, 2^32) (see
-    ``ip4_key_array``), so every truncation has 1-10 digits."""
+    ``ip4_key_array``), so every truncation has 1-10 digits. The eager
+    matrix the build's BMP read takes, and the reference the probe's
+    per-cell ``Ip4HashSource`` is checked against."""
     depths = np.asarray(depths, dtype=np.uint64)
     seeds = _xxh64_depth_seeds(depths)
     masks = (_U(0xFFFFFFFF) << (_U(V4_BITS) - depths)) & _U(0xFFFFFFFF)
@@ -210,14 +235,78 @@ def ip4_depth_hashes(keys: np.ndarray, depths) -> np.ndarray:
     rows = max(1, _HASH_BLOCK // max(len(depths), 1))
     with np.errstate(over="ignore"):
         for s in range(0, len(k), rows):
-            t = k[s : s + rows, None] & masks
-            h = _xxh64_digits8_10(t, seeds)
-            short = t < _POW10[7]
-            if short.any():
-                h[short] = _xxh64_digits1_7(t[short], np.broadcast_to(seeds, t.shape)[short])
-            out[s : s + rows] = h
+            out[s : s + rows] = _twin(k[s : s + rows, None] & masks, seeds)
     out[np.asarray(keys) < 0] = seeds
     return out
+
+
+#: depths whose every truncation is hashed ahead into an
+#: ``Ip4HashSource`` table: 2^d + 1 entries each, 512 KiB at /16
+_TABLE_DEPTH = 16
+#: a null key as the source holds it: one past the last address, so at
+#: table depth d it indexes entry 2^d, the null slot
+_NULL_KEY = _U(1 << V4_BITS)
+
+
+class Ip4HashSource:
+    """The v4 key hashes of the LPM probe, one cell at a time: for a
+    batch of keys bound with ``bind``, ``src(rows, cols)`` equals
+    ``ip4_depth_hashes(keys, depths)[rows, cols]`` bit for bit, but
+    hashes only the cells a kernel reads (about 5.5 of 17 per row on a
+    BGP table) instead of every depth of every row.
+
+    Built once per probe task. A depth up to ``_TABLE_DEPTH`` has at
+    most 2^d truncations, so all of them are hashed here, into one table
+    per such depth (a /8-/16 BGP mix holds 9 of them in 1 MiB), and its
+    cells are a gather by the key's top d bits. A deeper cell is
+    twin-hashed on demand with its depth's seed and mask."""
+
+    def __init__(self, depths):
+        d = np.asarray(depths, dtype=np.int64)
+        self.seeds = _xxh64_depth_seeds(d)
+        self.masks = (_U(0xFFFFFFFF) << (_U(V4_BITS) - d.astype(np.uint64))) & _U(0xFFFFFFFF)
+        self.deep = d > _TABLE_DEPTH
+        # one table per shallow depth, then one spare entry: entry i of
+        # depth d's table hashes i << (32 - d), and entry 2^d a null key
+        tables = [
+            ip4_depth_hashes(np.append(np.arange(1 << int(x), dtype=np.int64) << (V4_BITS - int(x)), -1), [x])[:, 0]
+            for x in d[~self.deep]
+        ]
+        self.table = np.concatenate([*tables, np.zeros(1, dtype=np.uint64)])
+        self.off = np.full(len(d), len(self.table) - 1, dtype=np.uint64)
+        self.off[~self.deep] = np.cumsum([0] + [len(t) for t in tables[:-1]])
+        # a deep column's shift sends every key to the spare entry, and
+        # the twin overwrites those cells
+        self.shift = np.where(self.deep, V4_BITS + 1, V4_BITS - d).astype(np.uint64)
+
+    def bind(self, keys: np.ndarray):
+        """``src(rows, cols)`` over int64 ``keys`` (null as -1, as
+        ``ip4_key_array`` gives them): the uint64 hashes of the cells
+        (rows[i], cols[i]). ``cols`` may be one column for every row."""
+        k = np.where(keys < 0, _NULL_KEY, keys.astype(np.uint64))
+        has_null = bool((keys < 0).any())
+
+        def deep_cells(kr, col):
+            with np.errstate(over="ignore"):
+                h = _twin(kr & self.masks[col], self.seeds[col])
+            if has_null:
+                null = kr == _NULL_KEY
+                h[null] = np.broadcast_to(self.seeds[col], h.shape)[null]
+            return h
+
+        def src(rows, cols):
+            kr = k[rows]
+            if np.ndim(cols) == 0:
+                if self.deep[cols]:
+                    return deep_cells(kr, cols)
+                return self.table[self.off[cols] + (kr >> self.shift[cols])]
+            out = self.table[self.off[cols] + (kr >> self.shift[cols])]
+            deep = np.nonzero(self.deep[cols])[0]
+            if len(deep):
+                out[deep] = deep_cells(kr[deep], cols[deep])
+            return out
+
+        return src
 
 
 def ip4_key_array(arr, name: str) -> np.ndarray:

@@ -709,12 +709,6 @@ def oph_minhash_pairs(
         return _banded_pairs(sig, k, bands, threshold, max_bucket, stride=bands)
 
 
-def _bit_mask(j: int):
-    """Bit-j mask as a signed long literal (bit 63 = int64 min — plain
-    ``1 << 63`` overflows LongType under ANSI mode)."""
-    return F.lit(-(1 << 63) if j == 63 else (1 << j)).cast("long")
-
-
 SIMHASH_BITS = {"xx": 64, "sha": 60}
 
 

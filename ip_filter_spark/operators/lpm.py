@@ -58,19 +58,23 @@ on-chip/off-chip cost model.
 
 Key encoding: each (prefix, depth) route key hashes to ONE 64-bit value,
 Spark's ``xxhash64(int depth, string prefix)``, which serves as both the
-Bloom hash base and the FIB confirm key. The kernels take an (n, D)
-matrix of these hashes, one column per route depth, built where the
-domain makes it cheapest:
+Bloom hash base and the FIB confirm key. The probe kernels read these
+hashes cell by cell, (row, depth column), through a hash source
+``src(rows, cols)``, built where the domain makes it cheapest:
 
 - path and IPv6 keys are strings, so the JVM truncates and hashes them
-  (``_depth_hashes``) and ships 8 bytes per (row, depth) over Arrow,
-  which the kernel views as the matrix without a copy;
+  (``_depth_hashes``) and ships 8 bytes per (row, depth) over Arrow; the
+  worker stacks them into an (n, D) matrix that ``_matrix_source``
+  indexes;
 - an IPv4 key is one int64 whose truncation is a mask, so it crosses as
-  that one column (8 bytes per row) and the worker hashes it per kernel
-  sub-chunk with ``cidr.ip4_depth_hashes``, a numpy twin of the JVM hash
-  that is bit-identical to it (``tests/test_cidr.py`` checks every depth,
-  every decimal length, 100k random keys and null). The domain is the
-  ``trunc`` the caller passes: ``ip4_trunc`` selects the twin.
+  that one column (8 bytes per row) and ``cidr.Ip4HashSource`` hashes
+  only the cells the kernel reads, with a numpy twin of the JVM hash
+  that is bit-identical to it (``tests/test_cidr.py`` checks every
+  depth, every decimal length, 100k random keys and null). The guided
+  kernel reads about 5.5 of 17 depths per row on a BGP table. The
+  build's BMP read takes the eager matrix, ``cidr.ip4_depth_hashes``.
+  The domain is the ``trunc`` the caller passes: ``ip4_trunc`` selects
+  the twin.
 
 Both give the same hashes, so the filter bits, the FIB and the engine
 blob do not depend on where the hashing ran. The own-route hash of the
@@ -111,13 +115,21 @@ from pyspark.sql.types import (
 )
 
 from ip_filter_spark.arrow import uint64_view
+from ip_filter_spark.config import ARROW_BATCH
 from ip_filter_spark.lifetime import cut, pinned
-from ip_filter_spark.operators.cidr import ip4_depth_hashes, ip4_key_array, ip4_trunc
+from ip_filter_spark.operators.cidr import Ip4HashSource, ip4_depth_hashes, ip4_key_array, ip4_trunc
 from ip_filter_spark.plans.obst import GuideTree
 from ip_filter_spark.sketches.bloom import BloomFilter
 SEP = "/"
 _MAGIC = b"IFLPM2"  # v2: uint64 xxhash64 keys (v1 shipped 16-byte sha256 digests)
-_KERNEL_CHUNK = 8192
+#: rows per probe-kernel call: one default Arrow batch, so a batch of
+#: ``config.ARROW_BATCH`` rows runs in one call. A larger batch (a
+#: session that raises ``maxRecordsPerBatch``) runs in slices of this
+#: many rows: the kernel's per-row temporaries (descent state, (n, k)
+#: Bloom slots, (n, E) pointer bits) stay cache-resident, which the 8k
+#: slices measured as a probe-rate gain (bench.py probe-scaling notes).
+#: Answers are row-local, so the split cannot change them.
+_KERNEL_CHUNK = ARROW_BATCH
 #: the fpp every engine blob records; the filter is sized by
 #: ``bits_per_route`` instead, so this value sizes nothing
 _BUILD_FPP = 1e-4
@@ -175,6 +187,15 @@ def _batch_hashes(b: pd.DataFrame, depths: list[int]) -> np.ndarray:
         keys = pa.Array.from_pandas(b["__k"])  # float64 with NaN if the batch has a null
         return ip4_depth_hashes(ip4_key_array(keys.cast(pa.int64()), "prefix"), depths)
     return np.column_stack([b[f"__h{j}"].to_numpy() for j in range(len(depths))]).astype(np.int64, copy=False).view(np.uint64)
+
+
+def _matrix_source(H: np.ndarray):
+    """A kernel's hash source over an (n, D) uint64 hash matrix:
+    ``src(rows, cols)`` is ``H[rows, cols]``, ``cols`` one column per row
+    or one for all. The probe kernels read every key hash through such a
+    callable, so an IPv4 batch can hash only the cells they read
+    (``cidr.Ip4HashSource``)."""
+    return lambda rows, cols: H[rows, cols]
 
 
 class _FibIndex:
@@ -552,17 +573,23 @@ class PathLPM:
         Python stage is ``mapInArrow``, not ``mapInPandas``: passthrough
         columns are re-emitted as the SAME Arrow arrays (zero copy — a
         wide corpus row never materializes as pandas objects). The
-        kernel works on an (n, D) uint64 matrix of per-depth key hashes.
-        Which side computes it depends on the domain:
+        kernel reads per-depth key hashes one (row, depth) cell at a
+        time from a hash source (module docstring, "Key encoding").
+        Which side computes them depends on the domain:
 
         - IPv4 (``trunc=ip4_trunc``): the key crosses as one int64
-          column, and each 8k-row kernel sub-chunk hashes it with
-          ``cidr.ip4_depth_hashes``, the bit-identical twin of the JVM
-          hash. A long-typed key column crosses once, as itself. A key
-          outside [0, 2^32) raises ``ValueError`` naming ``path_col``.
+          column, and ``cidr.Ip4HashSource``, built once per task,
+          hashes just the cells the kernel reads with the bit-identical
+          twin of the JVM hash. A long-typed key column crosses
+          once, as itself. A key outside [0, 2^32) raises
+          ``ValueError`` naming ``path_col``.
         - Path and IPv6 domains: the JVM computes ``_depth_hashes``, and
-          the D int64 Arrow buffers are viewed as the matrix with no
-          copy and no Python-side hashing.
+          the D int64 Arrow buffers are stacked into the (n, D) matrix
+          the kernel indexes, with no Python-side hashing.
+
+        Each Arrow batch of up to ``_KERNEL_CHUNK`` rows (the default
+        batch size) runs in one kernel call; a larger batch runs in
+        slices of that many rows.
 
         The three diagnostic columns count what the kernel did for the
         row, as the reference's invocation-counting profiler does:
@@ -619,6 +646,7 @@ class PathLPM:
 
             eng = PathLPM.from_bytes(bc.value)
             kern = eng._lookup_batch_guided if mode_guided else eng._lookup_batch_linear
+            hashes = Ip4HashSource(depths) if v4 else None  # once per task, like the FIB directory
             out_names = names + ["lpm_depth", "bit_lookups", "fib_probes", "fell_back"]
             for b in batches:
                 nb = b.num_rows
@@ -631,24 +659,15 @@ class PathLPM:
                     if v4:
                         keys = ip4_key_array(b.column(key_ix), path_col)
 
-                        def hashes(s):
-                            return ip4_depth_hashes(keys[s : s + _KERNEL_CHUNK], depths)
+                        def source(s):
+                            return hashes.bind(keys[s : s + _KERNEL_CHUNK])
                     else:
                         H = np.column_stack([uint64_view(c) for c in b.columns[n_keep:]])
 
-                        def hashes(s):
-                            return H[s : s + _KERNEL_CHUNK]
+                        def source(s):
+                            return _matrix_source(H[s : s + _KERNEL_CHUNK])
 
-                    # kernel sub-chunks: one Arrow batch can be 64k+ rows
-                    # (transfer-efficient), but the kernel's temporaries
-                    # (hash/slot/hit matrices) scale with rows x depths —
-                    # at 64k rows they spill to DRAM, and concurrent
-                    # probe workers then fight for the one memory bus
-                    # (streaming bandwidth on a shared box saturates at
-                    # ~4 active cores). 8k-row sub-chunks keep the
-                    # working set L2-resident; answers are row-local so
-                    # chunking cannot change them.
-                    parts = [kern(hashes(s)) for s in range(0, nb, _KERNEL_CHUNK)]
+                    parts = [kern(source(s), min(_KERNEL_CHUNK, nb - s)) for s in range(0, nb, _KERNEL_CHUNK)]
                     ans, bits, fibp, fell = (np.concatenate(x) for x in zip(*parts))
                 yield pa.RecordBatch.from_arrays(
                     passthrough
@@ -708,10 +727,11 @@ class PathLPM:
         return out.where(F.col("lpm_depth") == 0).unionByName(ok).unionByName(fixed)
 
     # ------------------------------------------------------- batch kernels
-    def _scan(self, H: np.ndarray, rows: np.ndarray, lo_col: np.ndarray, cap_col: np.ndarray, bloom: bool = True):
+    def _scan(self, src, rows: np.ndarray, lo_col: np.ndarray, cap_col: np.ndarray, bloom: bool = True):
         """The one LPM scan — the reference's linear probe
         (prototype/ipfilter.py:145-159) batched: for each
-        row in ``rows``, walk the domain columns in (lo_col, cap_col]
+        row in ``rows`` (of the batch ``src`` reads, see ``_matrix_source``),
+        walk the domain columns in (lo_col, cap_col]
         deepest first; at each column Bloom-probe all k hashes of the
         rows still unresolved, FIB-confirm the hits, and drop the rows
         that confirm. ``bloom=False`` skips the Bloom probe and asks the
@@ -732,25 +752,29 @@ class PathLPM:
             if not act.any():
                 continue
             hr = np.nonzero(act)[0]
+            h = src(rows[hr], j)
             if bloom:
-                bj = self._probe_slots(H[rows[hr], j], np.broadcast_to(slots, (len(hr), k)))
+                bj = self._probe_slots(h, np.broadcast_to(slots, (len(hr), k)))
                 bits[hr] += k
-                hr = hr[bj.all(axis=1)]
+                passed = bj.all(axis=1)
+                hr, h = hr[passed], h[passed]
             if len(hr):
-                ok = _fib_member(self._fib, H[rows[hr], j])
+                ok = _fib_member(self._fib, h)
                 fibp[hr] += 1
                 got = hr[ok]
                 ans[got] = self.depths[j]
                 unresolved[got] = False
         return ans, bits, fibp
 
-    def _lookup_batch_linear(self, H: np.ndarray):
-        n, D = H.shape
-        ans, bits, fibp = self._scan(H, np.arange(n), np.full(n, -1), np.full(n, D - 1))
+    def _lookup_batch_linear(self, src, n: int):
+        """Linear LPM of the ``n`` rows ``src`` reads: (answer depth,
+        bit_lookups, fib_probes, fell_back) per row."""
+        ans, bits, fibp = self._scan(src, np.arange(n), np.full(n, -1), np.full(n, len(self.depths) - 1))
         return ans, bits, fibp, np.zeros(n, dtype=bool)
 
-    def _lookup_batch_guided(self, H: np.ndarray):
-        n, D = H.shape
+    def _lookup_batch_guided(self, src, n: int):
+        """Guided LPM of the ``n`` rows ``src`` reads, same outputs as
+        ``_lookup_batch_linear``."""
         tree = self.tree
         col_of_val = {int(v): j for j, v in enumerate(self.depths)}
         node_col = np.array([col_of_val[int(v)] for v in tree.val], dtype=np.int64)
@@ -758,6 +782,7 @@ class PathLPM:
         cur = np.full(n, tree.root, dtype=np.int64)
         count_hit = np.zeros(n, dtype=np.int64)
         hit_col = np.full(n, -1, dtype=np.int64)
+        hit_h = np.zeros(n, dtype=np.uint64)  # the deepest hit's hash
         bits_used = np.zeros(n, dtype=np.int64)
 
         # level-synchronous BST descent probing hash 0 only
@@ -768,11 +793,12 @@ class PathLPM:
                 break
             rows = np.nonzero(active)[0]
             cols = node_col[cur[rows]]
-            h = H[rows, cols]
+            h = src(rows, cols)
             bit0 = self._probe_slots(h, np.zeros((len(rows), 1), dtype=np.uint64))[:, 0].astype(bool)
             bits_used[rows] += 1
             count_hit[rows[bit0]] += 1
             hit_col[rows[bit0]] = cols[bit0]
+            hit_h[rows[bit0]] = h[bit0]
             nxt = np.where(bit0, tree.right[cur[rows]], tree.left[cur[rows]])
             cur[rows] = nxt
 
@@ -787,8 +813,9 @@ class PathLPM:
         depths_arr = np.array(self.depths, dtype=np.int64)
         ix2len_arr = np.array(self.ix2len, dtype=np.int64)
 
-        # decode the BMP pointer from slots [count_hit, count_hit+E)
-        hh = H[hit_rows, hit_col[hit_rows]]
+        # decode the BMP pointer from slots [count_hit, count_hit+E) of
+        # the hash the descent read at the deepest hit
+        hh = hit_h[hit_rows]
         slot0 = count_hit[hit_rows]
         slots = slot0[:, None] + np.arange(E, dtype=np.int64)[None, :]
         ptr_bits = self._probe_slots(hh, slots)
@@ -819,7 +846,7 @@ class PathLPM:
             # checks the remaining validation hashes (ipfilter.py:228-230),
             # but a FIB key has all k of its bits set, so they cannot
             # reject a hypothesis the FIB confirms
-            accept = _fib_member(self._fib, H[hit_rows[c], hyp_col])
+            accept = _fib_member(self._fib, src(hit_rows[c], hyp_col))
             fibp[hit_rows[c]] += 1
             accepted[c] = accept
             acc = c[accept]
@@ -827,7 +854,7 @@ class PathLPM:
             lo_col[acc] = hyp_col[accept]
             cap_col[acc] += 1
         fell[hit_rows[~accepted]] = True
-        deeper, sb, sf = self._scan(H, hit_rows, lo_col, cap_col, bloom=False)
+        deeper, sb, sf = self._scan(src, hit_rows, lo_col, cap_col, bloom=False)
         bits_used[hit_rows] += sb
         fibp[hit_rows] += sf
         upd = deeper > 0

@@ -113,20 +113,3 @@ class GuideTree:
                 out.append((v, "R"))
                 cur = int(self.right[cur])
         return out
-
-    def expected_probes(self, keys: list[int], weights: list[float]) -> float:
-        w = np.asarray(weights, dtype=np.float64)
-        w = w / w.sum()
-        return float(sum(len(self.walk(k)) * wi for k, wi in zip(keys, w)))
-
-    def to_arrays(self) -> dict[str, np.ndarray]:
-        return {
-            "val": self.val,
-            "left": self.left,
-            "right": self.right,
-            "root": np.array([self.root], dtype=np.int64),
-        }
-
-    @classmethod
-    def from_arrays(cls, arrays: dict[str, np.ndarray]) -> "GuideTree":
-        return cls(arrays["val"], arrays["left"], arrays["right"], int(arrays["root"][0]))

@@ -123,14 +123,6 @@ class TDigest(Sketch):
         out = np.where(targets >= cum[-1], np.interp(targets, [cum[-1], total], [self.means[-1], self.vmax]), out)
         return out
 
-    def cdf(self, x: float) -> float:
-        self._flush()
-        if len(self.means) == 0:
-            return float("nan")
-        cum = np.cumsum(self.weights) - self.weights / 2.0
-        total = self.weights.sum()
-        return float(np.interp(x, self.means, cum / total, left=0.0, right=1.0))
-
     def _params(self) -> dict[str, Any]:
         return {"delta": self.delta, "vmin": self.vmin if np.isfinite(self.vmin) else None,
                 "vmax": self.vmax if np.isfinite(self.vmax) else None}

@@ -3,18 +3,24 @@
 
 Stages one ``lpm_bgp`` engine (perfbench's BGP-shaped table of 250k
 routes and its 1M addresses, for ``--seed``), then runs the guided probe
-single-threaded over 8k-row sub-chunks, as ``PathLPM.lookup``'s workers
-do, and splits every sub-chunk into four layers:
+single-threaded over Arrow-batch-sized slices of the addresses
+(``config.ARROW_BATCH`` rows), split into kernel calls the way
+``PathLPM.lookup``'s workers split them, and splits every call into four
+layers:
 
-  twin      ``cidr.ip4_depth_hashes``: the sub-chunk's (rows, D) key hashes
+  twin      the key hashes: inside the calls of a kernel that reads them
+            from a hash source (``cidr.Ip4HashSource``), or the eager
+            ``cidr.ip4_depth_hashes`` matrix of a kernel that takes one
   descent   the guide-tree descent on hash 0 and the BMP-pointer decode
   confirm   the hypothesis confirm: the FIB, plus any Bloom bits the
             kernel reads for it
   scan      ``PathLPM._scan``: the fallback and the exactness interval
 
 The layer boundaries come from wrapping what the kernel calls
-(``PathLPM._probe_slots``, ``lpm._fib_member``, ``PathLPM._scan``), so
-the same script times any checkout whose kernel keeps those names. Run
+(``PathLPM._probe_slots``, ``lpm._fib_member``, ``PathLPM._scan`` and the
+hash source), so the same script times any checkout whose kernel keeps
+those names, with either kernel signature (``kern(H)`` on a matrix or
+``kern(src, n)`` on a source). Run
 it from each checkout's root with one ``--stage-dir``: the first run
 stages the engine and addresses there as ``.npy`` files, later runs
 (other checkouts included) probe the same bytes. It prints, per layer,
@@ -29,6 +35,7 @@ from __future__ import annotations
 import argparse
 import contextlib
 import hashlib
+import inspect
 import os
 import shutil
 import sys
@@ -43,8 +50,8 @@ import numpy as np  # noqa: E402
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from ip_filter_spark.operators import lpm  # noqa: E402
-from ip_filter_spark.operators.cidr import ip4_depth_hashes  # noqa: E402
+from ip_filter_spark.config import ARROW_BATCH  # noqa: E402
+from ip_filter_spark.operators import cidr, lpm  # noqa: E402
 
 LAYERS = ("twin", "descent", "confirm", "scan")
 _FIB_MEMBER = lpm._fib_member
@@ -108,6 +115,7 @@ class Layers:
         eng._probe_slots, eng._scan = probe_slots, scan_
         lpm._fib_member = fib_member
         self.kern, self.depths = eng._lookup_batch_guided, eng.depths
+        self.hashes = cidr.Ip4HashSource(eng.depths) if takes_source(eng) else None
 
     def switch(self, phase: str) -> None:
         now = time.perf_counter()
@@ -115,13 +123,49 @@ class Layers:
         self.phase, self.mark = phase, now
 
     def run(self, keys: np.ndarray) -> None:
-        """One kernel sub-chunk: hash ``keys``, then probe them."""
+        """One kernel call: hash ``keys`` (eagerly, or as the kernel
+        reads them), then probe them."""
         t0 = time.perf_counter()
-        H = ip4_depth_hashes(keys, self.depths)
+        if self.hashes is None:
+            arg = (cidr.ip4_depth_hashes(keys, self.depths),)
+        else:
+            arg = (self.timed(self.hashes.bind(keys)), len(keys))
         self.phase, self.mark, self.decoded = "descent", time.perf_counter(), False
         self.s["twin"] += self.mark - t0
-        self.kern(H)
+        self.kern(*arg)
         self.switch("descent")
+
+    def timed(self, src):
+        """``src`` with its time counted as twin, not as the layer that
+        called it."""
+
+        def call(rows, cols):
+            self.switch(self.phase)
+            out = src(rows, cols)
+            now = time.perf_counter()
+            self.s["twin"] += now - self.mark
+            self.mark = now
+            return out
+
+        return call
+
+
+def takes_source(eng: lpm.PathLPM) -> bool:
+    """Whether this checkout's kernel reads hashes from a source
+    (``kern(src, n)``) rather than taking the eager matrix."""
+    return "n" in inspect.signature(eng._lookup_batch_guided).parameters
+
+
+def calls(n: int) -> list[tuple[int, int]]:
+    """(start, stop) of every kernel call over ``n`` addresses: Arrow
+    batches of ``ARROW_BATCH`` rows, each split as this checkout's
+    ``lookup`` splits it."""
+    step = lpm._KERNEL_CHUNK
+    return [
+        (s, min(s + step, b + ARROW_BATCH, n))
+        for b in range(0, n, ARROW_BATCH)
+        for s in range(b, min(b + ARROW_BATCH, n), step)
+    ]
 
 
 def main() -> None:
@@ -136,24 +180,28 @@ def main() -> None:
     if not (out / f"blob_{args.seed}.npy").exists():
         stage(args.seed, out)
     blob = np.load(out / f"blob_{args.seed}.npy").tobytes()
-    ips = np.load(out / f"ips_{args.seed}.npy").astype(np.uint64)
+    ips = np.load(out / f"ips_{args.seed}.npy").astype(np.int64)
     eng = lpm.PathLPM.from_bytes(blob)
-    chunk = lpm._KERNEL_CHUNK
-    starts = range(0, len(ips), chunk)
-    eng._lookup_batch_guided(ip4_depth_hashes(ips[:chunk], eng.depths))  # warm-up
+    spans = calls(len(ips))
+    Layers(lpm.PathLPM.from_bytes(blob)).run(ips[: spans[0][1]])  # warm-up
+    t0 = time.perf_counter()
+    source = "eager (n, D) matrix"
+    if takes_source(eng):
+        cidr.Ip4HashSource(eng.depths)
+        source = f"per-cell source, built in {(time.perf_counter() - t0) * 1e3:.1f} ms per task"
 
     passes = []
     for _ in range(args.reps):
         layers = Layers(lpm.PathLPM.from_bytes(blob))
-        for s in starts:
-            layers.run(ips[s : s + chunk])
+        for s, e in spans:
+            layers.run(ips[s:e])
         passes.append(layers)
     for p in passes:
         for d in (p.s, p.bits, p.fib):
             d["total"] = sum(d.values())
     n, first = len(ips), passes[0]
     print(f"engine sha256 {hashlib.sha256(blob).hexdigest()}  routes {len(eng.fib)}  depths {len(eng.depths)}  "
-          f"addresses {n}  reps {args.reps}  sub-chunk {chunk}")
+          f"addresses {n}  reps {args.reps}  kernel calls {len(spans)}  hashes: {source}")
     print(f"{'layer':<10}{'median s':>10}{'ns/row':>9}{'bits/row':>10}{'fib/row':>9}")
     for name in (*LAYERS, "total"):
         med = float(np.median([p.s[name] for p in passes]))

@@ -251,6 +251,38 @@ def test_ip4_twin_matches_jvm_hash(spark):
     assert (twin[null] == np.array(list(seeds), dtype=np.int64).view(np.uint64)).all()
 
 
+def test_ip4_hash_source_matches_eager_matrix():
+    """The probe's per-cell hash source equals the eager
+    ``ip4_depth_hashes`` matrix bit for bit, on 150k random (row, depth)
+    cells over every depth 0-32 (table depths up to /16, twin-hashed
+    ones below), per-row and one-column-for-all reads alike. The keys
+    cover null (-1), 0, 2^32-1, every decimal-length boundary and
+    addresses under 10^7, whose deep truncations have 1-7 digits."""
+    import numpy as np
+
+    from ip_filter_spark.operators.cidr import Ip4HashSource, ip4_depth_hashes
+
+    rng = np.random.default_rng(11)
+    depths = list(range(33))
+    edges = [-1, 0, 2**32 - 1, *(10**e + o for e in range(1, 10) for o in (-1, 0))]
+    keys = np.concatenate(
+        [edges, rng.integers(0, 2**32, 20_000), rng.integers(0, 10**7, 2_000), np.full(50, -1)]
+    ).astype(np.int64)
+    want = ip4_depth_hashes(keys, depths)
+    src = Ip4HashSource(depths).bind(keys)
+    rows = rng.integers(0, len(keys), 150_000)
+    cols = rng.integers(0, len(depths), 150_000)
+    rows[: len(keys)] = np.arange(len(keys))  # every key read at least once
+    assert int((src(rows, cols) != want[rows, cols]).sum()) == 0
+    # a truncation is at most its key, so these read 1-7 digit strings at every depth
+    assert ((keys >= 0) & (keys < 10**7)).sum() > 2_000
+    every = np.arange(len(keys))
+    for j in depths:
+        assert (src(every, j) == want[:, j]).all(), j
+    empty = np.zeros(0, dtype=np.int64)
+    assert len(src(empty, empty)) == 0 and len(src(empty, 20)) == 0
+
+
 def test_ip4_lookup_ships_one_key_column(spark):
     """A v4 lookup carries no per-depth hash column into the Python node
     (a long key crosses as itself, another type as one ``__k`` column),

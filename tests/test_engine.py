@@ -176,6 +176,42 @@ def test_read_source_table_formats(spark, sf_dir):
         read_source_table(spark, "iceberg:prod.corpus.files")
 
 
+def test_package_zip_is_keyed_on_content(tmp_path, monkeypatch):
+    """Two checkouts whose modules differ never ship each other's zip,
+    whatever the files' mtimes say: the zip's name carries a hash of the
+    package's contents. A zip shared by name once made a session ship
+    another checkout's modules ahead of its own PYTHONPATH."""
+    import os
+    import tempfile
+    import zipfile
+
+    from ip_filter_spark.config import _package_zip
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pkgs = {}
+    for name, body in (("a", "X = 1\n"), ("b", "X = 2\n")):
+        pkg = tmp_path / name / "ip_filter_spark"
+        (pkg / "operators").mkdir(parents=True)
+        (pkg / "__init__.py").write_text("")
+        (pkg / "operators" / "lpm.py").write_text(body)
+        pkgs[name] = pkg
+    # b's modules are older than a's zip: an mtime check would reuse it
+    os.utime(pkgs["b"] / "operators" / "lpm.py", (1, 1))
+
+    def shipped(zip_path):
+        with zipfile.ZipFile(zip_path) as zf:
+            return {n: zf.read(n).decode() for n in zf.namelist()}
+
+    zips = [(name, _package_zip(str(pkgs[name]))) for name in ("a", "b", "a", "b")]
+    assert zips[0][1] == zips[2][1] and zips[1][1] == zips[3][1] and zips[0][1] != zips[1][1]
+    for name, zip_path in zips:
+        assert os.path.dirname(zip_path) == str(tmp_path)
+        assert shipped(zip_path) == {
+            "ip_filter_spark/__init__.py": "",
+            "ip_filter_spark/operators/lpm.py": (pkgs[name] / "operators" / "lpm.py").read_text(),
+        }
+
+
 def test_spark_submit_py_files_packaging(tmp_path):
     """North-rule packaging: the job must ship via `spark-submit
     --py-files ip_filter_spark.zip` and import the package from the zip

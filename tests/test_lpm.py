@@ -358,6 +358,34 @@ def test_kernel_counters(spark, fixture_lpm, table):
         assert hashlib.sha256(repr(pinned).encode()).hexdigest() == GOLDEN_COUNTERS_SHA[table, mode], mode
 
 
+def test_source_kernels_match_matrix_kernels(spark):
+    """Both probe kernels give the same four outputs per row (depth,
+    bit_lookups, fib_probes, fell_back) whether they read v4 key hashes
+    from the per-cell ``Ip4HashSource`` or index the eager
+    ``ip4_depth_hashes`` matrix, on a random batch over a table with
+    depths on both sides of the source's /16 table bound."""
+    from ip_filter_spark.operators.cidr import Ip4HashSource, build_ip4_lpm, ip4_depth_hashes
+    from ip_filter_spark.operators.lpm import _matrix_source
+
+    rng = np.random.default_rng(5)
+    plen = rng.integers(8, 33, 400)
+    base = rng.integers(1 << 24, 224 << 24, 400) & ~((1 << (32 - plen)) - 1)
+    cidrs = NESTED_CIDRS + [".".join(str(int(b) >> s & 255) for s in (24, 16, 8, 0)) + f"/{p}" for b, p in zip(base, plen)]
+    eng = build_ip4_lpm(spark.createDataFrame([(c,) for c in cidrs], "cidr string"), num_partitions=2)
+    assert min(eng.depths) <= 16 < max(eng.depths)
+    inside = base + rng.integers(0, 1 << 32, 400) % (1 << (32 - plen))
+    keys = np.concatenate([[-1, 0, 2**32 - 1], inside, rng.integers(0, 2**32, 4_000)]).astype(np.int64)
+    rng.shuffle(keys)
+    n = len(keys)
+    for kern in (eng._lookup_batch_guided, eng._lookup_batch_linear):
+        want = kern(_matrix_source(ip4_depth_hashes(keys, eng.depths)), n)
+        got = kern(Ip4HashSource(eng.depths).bind(keys), n)
+        for w, g in zip(want, got):
+            assert (w == g).all(), kern.__name__
+        assert (want[0] > 0).sum() >= 400, kern.__name__
+    assert want[0][keys == -1][0] == 0
+
+
 def _guided_oracle(eng: PathLPM, h: list[int]) -> tuple[int, int, int, bool]:
     """One key's guided lookup, walked scalar from the reference's
     (prototype/ipfilter.py:184-238), with this package's two changes: an
