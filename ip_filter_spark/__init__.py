@@ -21,7 +21,12 @@ lifecycle via DataFrame ops + ``mapInPandas`` / ``applyInPandas``. No
 per-row Python anywhere on the hot path.
 """
 
+from ip_filter_spark import zipcache
 from ip_filter_spark.version import __version__
+
+# Runs in every Python worker that unpickles a package function: Spark's
+# per-task importlib.invalidate_caches() stops re-reading unchanged zips.
+zipcache.install()
 
 # One combined __all__, assigned once (round-1 ADVICE: four successive
 # assignments left only the last list live). Heavy submodules re-export

@@ -422,6 +422,36 @@ def test_sparse_serialization_roundtrip_and_size():
     assert (m1.bits == bf.bits).all()
 
 
+@pytest.mark.parametrize("m", [8000, 8003])
+def test_bloom_format_switch_boundary(m):
+    """The sparse/dense choice is made from the popcount alone. Around the
+    switch point ``n_set * itemsize == len(bits)`` (and for an empty and a
+    full filter) the blob must equal the one the unpack-everything rule
+    writes, and round-trip."""
+    from ip_filter_spark.sketches.base import Sketch
+
+    class UnpackRule(BloomFilter):
+        def _arrays(self):
+            set_ix = np.flatnonzero(np.unpackbits(self.bits, bitorder="little"))
+            if len(set_ix) * 4 < len(self.bits):  # m < 2^32: uint32 indices
+                return {"sparse_ix": set_ix.astype(np.uint32)}
+            return {"bits": self.bits}
+
+    switch = (m + 7) // 8 // 4  # n_set * 4 == len(bits) exactly when m = 8000
+    rng = np.random.default_rng(m)
+    for n_set in (0, switch - 1, switch, switch + 1, m):
+        plane = np.zeros((m + 7) // 8 * 8, dtype=np.uint8)
+        plane[rng.choice(m, size=n_set, replace=False)] = 1
+        bits = np.packbits(plane, bitorder="little")
+        bf = BloomFilter(fpp=0.5, n=8, k=1, num_bits=m, _bits=bits)
+        blob = bf.to_bytes()
+        assert blob == UnpackRule(fpp=0.5, n=8, k=1, num_bits=m, _bits=bits).to_bytes(), n_set
+        assert ("sparse_ix" in Sketch.parse(blob)[3]) == (n_set * 4 < len(bits)), n_set
+        rt = from_bytes(blob)
+        assert rt.bits.tobytes() == bf.bits.tobytes() and (rt.k, rt.m) == (bf.k, bf.m)
+        assert rt.fill_ratio() == n_set / m
+
+
 def test_kmv_estimates_and_set_algebra():
     """KMV/theta: distinct estimate within 4/sqrt(k-2); intersection /
     union / difference / jaccard track the true overlap; exact below
